@@ -68,15 +68,23 @@ object EtlRunner {
         val id = DictionaryOps.primaryKey(dictionary)
         val log = AuditOps.authlog(prev, typed, id, auditCols,
           fuenteLog = s"$rawDir/$entity", runId = runId, runTs = runTs)
-        sink.writeTable(log, s"$modeledDir/${entity}_authlog")
-        Some(log.count())
+        val logPath = s"$modeledDir/${entity}_authlog"
+        sink.writeTable(log, logPath)
+        // count the committed table: counting `log` would re-run the
+        // CSV decode, cleaning, casts and join
+        Some(spark.read.parquet(logPath).count())
       } else None
     }
     val toWrite = previous match {
       case Some(prev) if auditCols.nonEmpty && dictionary.nonEmpty =>
         MergeOps.tableUpdated(prev, typed,
           DictionaryOps.primaryKey(dictionary), auditCols)
-      case _ => typed
+      // One data file per entity: the split extract leaves one partition
+      // per core, and on the e2ebench etl_cold inputs four files instead
+      // of one store ~7.5% more bytes (per-file parquet footers,
+      // dictionaries and stats). The merge path needs no exchange here:
+      // its orderBy already sets the layout.
+      case _ => typed.repartition(1)
     }
 
     // load (full refresh, S8) — write to a temp dir then swap, so the
@@ -86,16 +94,26 @@ object EtlRunner {
     sink.writeTable(toWrite, tmp)
     val out = spark.read.parquet(tmp)
     val n = out.count()
-    val target = new java.io.File(modeledPath)
-    if (target.exists()) {
-      val old = new java.io.File(modeledPath + "__old")
-      deleteRecursively(old)
-      target.renameTo(old)
-      deleteRecursively(old)
-    }
-    new java.io.File(tmp).renameTo(target)
+    swapIn(tmp, modeledPath)
     RunResult(file, n, modeledPath, authlogRows)
   }
+
+  /** Moves the freshly written `tmp` in as the snapshot at `modeledPath`.
+    * The previous snapshot is parked at `__old` and deleted only once the
+    * new one is in place; a failed rename throws, naming both paths.
+    */
+  private[graft] def swapIn(tmp: String, modeledPath: String): Unit = {
+    val target = new java.io.File(modeledPath)
+    val old = new java.io.File(modeledPath + "__old")
+    deleteRecursively(old)
+    if (target.exists()) rename(target, old)
+    rename(new java.io.File(tmp), target)
+    deleteRecursively(old)
+  }
+
+  private def rename(from: java.io.File, to: java.io.File): Unit =
+    if (!from.renameTo(to))
+      throw new java.io.IOException(s"snapshot swap failed: cannot rename $from to $to")
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

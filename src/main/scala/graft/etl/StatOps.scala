@@ -218,45 +218,35 @@ object StatOps {
   }
 
   /** Exact interpolated percentiles over a PROVABLY BOUNDED frame —
-    * [[percentiles]]' little sibling (r17): a single-partition sort
-    * window ranks the rows and the IDENTICAL interpolation expression
-    * reads the bracketing indexes, so the result is bit-for-bit the
-    * distributed-CDF path's at a fraction of its job count. ONLY for
-    * frames bounded by construction (a daily series, its day-pair
-    * slopes — anything the caller already broadcasts); corpus-scale
-    * columns stay on [[percentiles]], whose prefix-sum machinery is
-    * the 100 TB plan.
+    * [[percentiles]]' little sibling (r17): one aggregate collects the
+    * values into a sorted array and the IDENTICAL interpolation
+    * expression reads the bracketing elements, so the result is
+    * bit-for-bit the distributed-CDF path's at a fraction of its job
+    * count, with no Window node (a partition-free window would be a
+    * single-task sort of the un-aggregated frame). ONLY for frames
+    * bounded by construction (a daily series, its day-pair slopes —
+    * anything the caller already broadcasts); corpus-scale columns stay
+    * on [[percentiles]], whose prefix-sum machinery is the 100 TB plan.
     */
   def boundedPercentiles(df: DataFrame, valueCol: String,
       ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty && ps.forall { case (_, p) => p >= 0.0 && p <= 1.0 })
-    val w = Window.orderBy(col("__v"))
-    val wAll = Window.partitionBy(lit(1))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val ranked = df
+    val sorted = df
       .filter(col(valueCol).isNotNull)
-      .select(col(valueCol).cast("double").as("__v"))
-      .withColumn("__rn", row_number().over(w).cast("long") - 1)
-      .withColumn("__n", count(lit(1)).over(wAll))
-    val aggs = ps.flatMap { case (name, p) =>
-      val r = lit(p) * (col("__n") - 1).cast("double")
+      .agg(sort_array(collect_list(col(valueCol).cast("double"))).as("__s"))
+    val n = size(col("__s"))
+    val out = ps.map { case (name, p) =>
+      // null on an empty frame, where element_at has no valid index
+      val r = when(n > 0, lit(p) * (n - 1).cast("double"))
       val lo = floor(r)
       val hi = ceil(r)
-      Seq(
-        max(when(col("__rn") === lo, col("__v"))).as(s"__lo_$name"),
-        max(when(col("__rn") === hi, col("__v"))).as(s"__hi_$name"),
-        max(r).as(s"__r_$name"))
-    }
-    val folded = ranked.groupBy().agg(aggs.head, aggs.tail: _*)
-    val out = ps.map { case (name, _) =>
-      val r = col(s"__r_$name")
-      val lo = floor(r)
-      val hi = ceil(r)
-      when(lo === hi, col(s"__lo_$name"))
-        .otherwise((hi - r) * col(s"__lo_$name") + (r - lo) * col(s"__hi_$name"))
+      val loV = element_at(col("__s"), (lo + 1).cast("int"))
+      val hiV = element_at(col("__s"), (hi + 1).cast("int"))
+      when(lo === hi, loV)
+        .otherwise((hi - r) * loV + (r - lo) * hiV)
         .as(name)
     }
-    folded.select(out: _*)
+    sorted.select(out: _*)
   }
 
   /** Pairwise Welch two-sample t-test across the groups of `groupCol`,

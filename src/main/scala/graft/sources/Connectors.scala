@@ -78,17 +78,13 @@ object LocalFsConnector extends SourceConnector with SinkConnector {
       encoding: String = "UTF-8"): DataFrame = {
     // A sheet is ordered row-lists with the header as row 0
     // (gsheets_handler.py:104-111): header driver-side, rows decoded
-    // executor-side (charset-aware), ragged repair as a pure column
-    // expression via ShapeOps.
-    val header = CsvSource.dedupeHeaders(
-      CsvSource.readHeader(spark, objectId, sep, encoding, skipLines = 0))
+    // executor-side (charset-aware) through the same split reader as
+    // readCsv, ragged repair as a pure column expression via ShapeOps.
+    val (names, lines) = CsvSource.readLines(spark, objectId, sep, encoding, skipLines = 0)
+    val header = CsvSource.dedupeHeaders(names)
     val sepQ = java.util.regex.Pattern.quote(sep)
-    val rows = spark.createDataset(
-      spark.sparkContext.binaryFiles(objectId).values.flatMap { pds =>
-        val content = new String(pds.toArray(), java.nio.charset.Charset.forName(encoding))
-        content.split("\r?\n", -1).iterator.drop(1).filterNot(_.isEmpty)
-          .map(l => Tuple1(l.split(sepQ, -1).toSeq))
-      })(Encoders.product[Tuple1[Seq[String]]])
+    val rows = lines.map(l => Tuple1(l.split(sepQ, -1).toSeq))(
+      Encoders.product[Tuple1[Seq[String]]])
     graft.etl.ShapeOps.rowsToTable(rows.toDF("__row"), "__row", header)
   }
 

@@ -1,7 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import java.nio.charset.Charset
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.{LongWritable, Text}
+import org.apache.hadoop.mapred.{FileInputFormat, JobConf, TextInputFormat}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** S1/S3 — the reference's tolerant CSV ingestion
@@ -10,17 +13,22 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Spark mapping:
   *  - header is read driver-side (a few lines through Hadoop FS — works
-  *    for any scheme, no full-file read);
-  *  - data lines are decoded per-file in executors (charset-aware; Spark's
-  *    text reader assumes UTF-8) and parsed with an explicit all-string
-  *    schema in PERMISSIVE mode — short rows null-pad, long rows truncate,
-  *    exactly the reference's `truncate_ragged_lines` + null padding;
+  *    for any scheme, no full-file read), together with the byte offset
+  *    where the data lines start;
+  *  - data lines are read as line-aligned byte-range splits and decoded
+  *    in executors (charset-aware; Spark's text reader assumes UTF-8),
+  *    then parsed with an explicit all-string schema in PERMISSIVE
+  *    mode — short rows null-pad, long rows truncate, exactly the
+  *    reference's `truncate_ragged_lines` + null padding;
   *  - duplicate headers are renamed `{name}_duplicated_{n}` (polars'
   *    convention), so the downstream P1 drop behaves identically.
   *
-  * Scale note: per-file whole-buffer decode mirrors the reference's
-  * in-memory download (it warns at 10 MB); the bulk-data path of this
-  * engine is parquet, CSV is the ingestion edge.
+  * Scale note: one export is split into `defaultParallelism` byte ranges,
+  * so its decode, parse, cleaning and casts run on every core instead of
+  * in one whole-file task; no executor holds more than its split. Lines
+  * are cut on the byte 0x0A, which is only sound for charsets that write
+  * `'\n'` as that single byte (latin1, UTF-8) — other charsets are
+  * refused, never mis-split.
   */
 object CsvSource {
 
@@ -41,19 +49,83 @@ object CsvSource {
     else t
   }
 
-  /** Reads the header line (after `skipLines` junk lines) driver-side. */
-  def readHeader(spark: SparkSession, path: String, sep: String,
-      encoding: String, skipLines: Int): Seq[String] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val br = new java.io.BufferedReader(
-      new java.io.InputStreamReader(fs.open(p), encoding))
+  /** Fails loudly unless `cs` writes `'\r'` and `'\n'` as the single
+    * bytes 0x0D and 0x0A, the condition for cutting lines on bytes.
+    */
+  private def requireByteNewlines(cs: Charset): Unit =
+    require("\r\n".getBytes(cs).sameElements(Array[Byte](13, 10)),
+      s"charset ${cs.name} does not encode '\\n' as the single byte 0x0A; " +
+        "line-aligned splits need latin1 or UTF-8")
+
+  /** Driver-side scan of the first `skipLines + 1` lines: the header
+    * line (the last of them, one trailing `'\r'` stripped) and the byte
+    * offset just past its `'\n'`, where the data lines start.
+    */
+  private def headerAndDataStart(fs: FileSystem, p: Path, cs: Charset,
+      skipLines: Int): (String, Long) = {
+    val in = new java.io.BufferedInputStream(fs.open(p))
     try {
-      (0 until skipLines).foreach(_ => br.readLine())
-      val line = Option(br.readLine()).getOrElse(
-        throw new IllegalArgumentException(s"$path has no header line after skipping $skipLines"))
-      line.split(java.util.regex.Pattern.quote(sep), -1).toSeq.map(stripQuotes)
-    } finally br.close()
+      val line = new java.io.ByteArrayOutputStream()
+      var lineNo = 0
+      var offset = 0L
+      var eof = false
+      while (lineNo <= skipLines && !eof) {
+        val b = in.read()
+        if (b < 0) eof = true
+        else {
+          offset += 1
+          if (b == '\n') lineNo += 1
+          else if (lineNo == skipLines) line.write(b)
+        }
+      }
+      // an unterminated last line still counts, as in a line reader
+      if (lineNo < skipLines || (eof && line.size == 0))
+        throw new IllegalArgumentException(
+          s"$p has no header line after skipping $skipLines")
+      val bytes = line.toByteArray
+      val n = if (bytes.nonEmpty && bytes.last == '\r') bytes.length - 1 else bytes.length
+      (new String(bytes, 0, n, cs), offset)
+    } finally in.close()
+  }
+
+  /** The header of `path` (after `skipLines` junk lines) and its
+    * non-empty data lines, in file order: the rows of a whole-file
+    * `split("\r?\n").drop(skipLines + 1).filterNot(_.isEmpty)`, read as
+    * `defaultParallelism` line-aligned byte-range splits so every core
+    * decodes a share. A split reader yields each line that STARTS in
+    * its range, keyed by that start offset; lines before the data start
+    * are dropped by key.
+    */
+  def readLines(spark: SparkSession, path: String, sep: String,
+      encoding: String, skipLines: Int): (Seq[String], Dataset[String]) = {
+    val cs = Charset.forName(encoding)
+    requireByteNewlines(cs)
+    val p = new Path(path)
+    val conf = new JobConf(spark.sessionState.newHadoopConf())
+    val fs = p.getFileSystem(conf)
+    val (header, dataStart) = headerAndDataStart(fs, p, cs, skipLines)
+    val fileLen = fs.getFileStatus(p).getLen
+    conf.set("textinputformat.record.delimiter", "\n")
+    FileInputFormat.setInputPaths(conf, p)
+    val csName = cs.name
+    val lines = spark.sparkContext.hadoopRDD(conf, classOf[TextInputFormat],
+        classOf[LongWritable], classOf[Text], spark.sparkContext.defaultParallelism)
+      .mapPartitions { it =>
+        val charset = Charset.forName(csName)
+        it.flatMap { case (k, t) =>
+          val start = k.get
+          val len = t.getLength
+          // one '\r' before a '\n' is part of the terminator; a line
+          // that ends the file unterminated keeps it, as the regex does
+          val n =
+            if (len > 0 && t.getBytes()(len - 1) == '\r' && start + len < fileLen) len - 1
+            else len
+          if (start < dataStart || n == 0) None
+          else Some(new String(t.getBytes, 0, n, charset))
+        }
+      }
+    (header.split(java.util.regex.Pattern.quote(sep), -1).toSeq.map(stripQuotes),
+      spark.createDataset(lines)(Encoders.STRING))
   }
 
   private val log = org.apache.log4j.Logger.getLogger(getClass)
@@ -66,14 +138,8 @@ object CsvSource {
     val bytes = fs.getFileStatus(p).getLen
     if (bytes > 10L * 1024 * 1024)
       log.warn(f"$path is ${bytes / 1048576.0}%.1f MB (> 10 MB guard)")
-    val names = dedupeHeaders(readHeader(spark, path, sep, encoding, skipLines))
-    val schema = StructType(names.map(StructField(_, StringType, nullable = true)))
-    val drop = skipLines + 1
-    val dataLines = spark.createDataset(
-      spark.sparkContext.binaryFiles(path).values.flatMap { pds =>
-        val content = new String(pds.toArray(), java.nio.charset.Charset.forName(encoding))
-        content.split("\r?\n", -1).iterator.drop(drop).filterNot(_.isEmpty)
-      })(Encoders.STRING)
+    val (header, dataLines) = readLines(spark, path, sep, encoding, skipLines)
+    val schema = StructType(dedupeHeaders(header).map(StructField(_, StringType, nullable = true)))
     spark.read
       .schema(schema)
       .option("sep", sep)

@@ -90,4 +90,78 @@ class CsvPipelineSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](Pipelines.transform("nope", "raw", df))
     assert(e.getMessage.contains("raw_nope"))
   }
+
+  // ---- line-aligned split reader -----------------------------------------
+
+  /** A reference-shaped export: junk first line, header, then `n` rows
+    * with mixed CRLF/LF endings, blank lines, short and long ragged rows,
+    * long lines and non-ASCII text; the last line is unterminated.
+    */
+  private def splitFixture(cs: Charset, n: Int): Array[Byte] = {
+    val text = if (cs.name == "UTF-8") "año café ✓ 日本 €" else "año café Ü ° ½"
+    val sb = new StringBuilder("JUNK TITLE — ").append(text).append("\r\n")
+    sb.append("id;nombre;nota;extra\n")
+    (0 until n).foreach { i =>
+      val row = i % 5 match {
+        case 0 => s"$i;$text;${"x" * (i % 173)}"        // short, long line
+        case 1 => s"$i;$text;n$i;e$i;más$i;sobra"       // long ragged
+        case 2 => s"$i"                                  // one field
+        case _ => s"$i;$text $i;n$i;e$i"
+      }
+      sb.append(row).append(if (i % 3 == 0) "\r\n" else "\n")
+      if (i % 41 == 0) sb.append(if (i % 2 == 0) "\n" else "\r\n") // blank line
+    }
+    sb.append(s"$n;último")
+    sb.toString.getBytes(cs)
+  }
+
+  for (cs <- Seq(Charset.forName("ISO-8859-1"), Charset.forName("UTF-8")))
+    test(s"split reader (${cs.name}): rows and order equal a whole-file decode") {
+      val bytes = splitFixture(cs, 6000)
+      val f = Files.createTempFile("split_", ".csv")
+      Files.write(f, bytes)
+      val expected = new String(bytes, cs).split("\r?\n").toSeq.drop(2).filterNot(_.isEmpty)
+
+      // the fixture is meaningful: some split boundary falls mid-line
+      val goal = bytes.length / spark.sparkContext.defaultParallelism
+      assert((1 until spark.sparkContext.defaultParallelism).exists(k => bytes(k * goal - 1) != '\n'))
+
+      val (header, lines) = CsvSource.readLines(spark, f.toString, ";", cs.name, skipLines = 1)
+      assert(header === Seq("id", "nombre", "nota", "extra"))
+      assert(lines.rdd.getNumPartitions > 1)
+      assert(lines.collect().toSeq === expected)
+
+      // the parsed frame keeps the same rows, in order, ragged-repaired
+      val raw = CsvSource.readReferenceCsv(spark, f.toString, encoding = cs.name)
+      assert(raw.rdd.getNumPartitions > 1)
+      val got = raw.collect().map(_.toSeq.map(v => Option(v).map(_.toString).orNull)).toSeq
+      // (the CSV parser reads an empty field as null)
+      assert(got === expected.map(_.split(";", -1).toSeq
+        .map(v => if (v.isEmpty) null else v).padTo(4, null).take(4)))
+    }
+
+  test("split reader: one trailing '\\r' is part of the terminator only before '\\n'") {
+    val f = Files.createTempFile("split_cr_", ".csv")
+    Files.write(f, "h\r\na\r\r\n\r\nb\r".getBytes("UTF-8"))
+    val (header, lines) = CsvSource.readLines(spark, f.toString, ";", "UTF-8", skipLines = 0)
+    assert(header === Seq("h"))
+    assert(lines.collect().toSeq === Seq("a\r", "b\r"))
+  }
+
+  test("readSheet drops exactly its header row") {
+    val f = Files.createTempFile("sheet_split_", ".csv")
+    val rows = (1 to 3000).map(i => s"$i,válido $i,${"z" * (i % 97)}")
+    Files.write(f, ("a,b,c" +: rows).mkString("\r\n").getBytes("UTF-8"))
+    val got = graft.sources.LocalFsConnector.readSheet(spark, f.toString)
+    assert(got.columns.toSeq === Seq("a", "b", "c"))
+    assert(got.collect().map(_.getString(0)).toSeq === (1 to 3000).map(_.toString))
+  }
+
+  test("split reader refuses a charset that does not write '\\n' as the byte 0x0A") {
+    val f = Files.createTempFile("utf16_", ".csv")
+    Files.write(f, "junk\nid;v\n1;2\n".getBytes("UTF-16"))
+    val e = intercept[IllegalArgumentException](
+      CsvSource.readReferenceCsv(spark, f.toString, encoding = "UTF-16"))
+    assert(e.getMessage.contains("0x0A"))
+  }
 }

@@ -182,6 +182,20 @@ class EtlRunnerSpec extends SparkSpec {
     (Seq("JUNK", header) ++ rows).mkString("\n").getBytes(Charset.forName("ISO-8859-1"))
   }
 
+  test("snapshot swap fails loudly, naming both paths, and keeps the previous snapshot") {
+    val dir = Files.createTempDirectory("swap_")
+    val target = dir.resolve("radicados")
+    val tmp = dir.resolve("radicados__tmp") // never written: the rename source is missing
+    val e1 = intercept[java.io.IOException](EtlRunner.swapIn(tmp.toString, target.toString))
+    assert(e1.getMessage.contains(tmp.toString) && e1.getMessage.contains(target.toString))
+
+    Files.createDirectories(target)
+    Files.write(target.resolve("part-0.parquet"), Array[Byte](1))
+    val e2 = intercept[java.io.IOException](EtlRunner.swapIn(tmp.toString, target.toString))
+    assert(e2.getMessage.contains(tmp.toString) && e2.getMessage.contains(target.toString))
+    assert(Files.exists(dir.resolve("radicados__old").resolve("part-0.parquet")))
+  }
+
   test("REST connector e2e: paged listing, chunked+retried download, newest-file pick") {
     val stub = new RestStub
     try {
