@@ -13,75 +13,7 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Warm-up so one-time session costs aren't billed to whichever query
-    // happens to run first (none of the benchmark queries themselves run
-    // here): resolve every table once (directory listing + parquet
-    // footers — the metastore-metadata stand-in that etl.Tables caches),
-    // and push one synthetic query through each major codegen path
-    // (scan, shuffle agg, broadcast join, window, sort) to JIT the
-    // janino/compiler/shuffle machinery.
-    graft.etl.Tables.names.foreach { t =>
-      try graft.etl.Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    import org.apache.spark.sql.functions._
-    val r = spark.range(100000).select(col("id"), (col("id") % 97).as("k"))
-    r.groupBy("k").count().count()
-    r.join(broadcast(spark.range(97).select(col("id").as("k"))), "k").count()
-    r.select(sum("id").over(
-      org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("id"))).count()
-    r.orderBy(desc("id")).limit(10).count()
-    // JIT the fused text-hashing kernels (shingle/minhash/simhash/cosine)
-    // on synthetic rows — whichever dedup query runs first otherwise
-    // pays their cold-compile cost.
-    graft.functions.VectorExpressions.register(spark)
-    val txt = spark.range(256).select(
-      concat_ws(" ", (0 to 24).map(i => concat(lit(s"w$i"), col("id") % 7)): _*).as("text"))
-    txt.select(expr("graft_minhash_sig(graft_shingle_hashes64(split(text, ' '), 3))").as("sig"))
-      .select(explode(col("sig"))).count()
-    txt.select(expr("graft_simhash32(graft_shingle_hashes32(split(text, ' '), 1))")).count()
-    // Layout/ingest warm-up: bucketed, partitioned, and exported copies
-    // are ingest-time artifacts — queries pay to READ a layout, never to
-    // build it (a production table is bucketed once at load, not per
-    // query). Built here so one-time ingest isn't billed to whichever
-    // layout query runs first.
-    try {
-      graft.etl.LayoutOps.ensureBucketed(spark, sfDir, "orders", Seq("o_orderkey"), 8)
-      graft.etl.LayoutOps.ensureBucketed(spark, sfDir, "lineitem", Seq("l_orderkey"), 8)
-      graft.etl.LayoutOps.ensurePartitionedOrders(spark, sfDir)
-      // the ANN serving-tier indexes are the same ingest class: built
-      // once per corpus, probed by every query — the serve benchmarks
-      // measure probing, not the one-time build
-      graft.queries.Extensions.ensureIvfInt8Index(spark, sfDir)
-      graft.queries.Extensions.ensureIvfPqIndex(spark, sfDir)
-      graft.queries.Extensions.ensureAnnTruth(spark, sfDir)
-      graft.queries.Extensions.ensureDedupIndex(spark, sfDir)
-      graft.queries.Extensions.ensureDedupClusters(spark, sfDir)
-      graft.queries.Extensions.ensurePhashClusters(spark, sfDir)
-      graft.queries.Breadth7.ensureTextIndex(spark, sfDir)
-      graft.queries.Breadth11.ensurePrefixRanked(spark, sfDir)
-      graft.queries.Breadth8.ensureTfidfPostings(spark, sfDir)
-      graft.queries.Breadth12.ensureLinkPostings(spark, sfDir)
-      graft.queries.Breadth20.ensureAugBandIndex(spark, sfDir)
-      graft.queries.Breadth20.ensureWinnowPostings(spark, sfDir)
-      graft.queries.Breadth20.ensureAugShingleSets(spark, sfDir)
-      graft.queries.Breadth20.ensureAugSimhash(spark, sfDir)
-      graft.queries.Breadth14.ensureSpanPostings(spark, sfDir)
-      graft.queries.Breadth20.ensureAugClusters(spark, sfDir)
-      graft.queries.Breadth20.ensureDocStats(spark, sfDir)
-      graft.queries.Breadth11.ensurePiiStats(spark, sfDir)
-      graft.queries.Breadth11.ensureErClusters(spark, sfDir)
-      graft.queries.Breadth10.ensureDocLengths(spark, sfDir)
-      graft.queries.Breadth11.ensureErBlocksD3(spark, sfDir)
-      graft.queries.Breadth8.ensureSplitFingerprints(spark, sfDir)
-      graft.queries.Breadth23.ensureOrdersManifest(spark, sfDir)
-      graft.queries.Breadth24.ensureStagedOrdersAppend(spark, sfDir)
-      graft.queries.Breadth24.ensureOrdersCommits(spark, sfDir)
-      graft.queries.Breadth24.ensureLineitemManifest(spark, sfDir)
-      graft.queries.Breadth24.ensureOrdersMergeCommit(spark, sfDir)
-      // the versioned-sink history layout_vacuum classifies is the same
-      // ingest class: staged once, audited (dry-run) by the query
-      graft.queries.Breadth10.ensureVacuumHistory(spark, sfDir)
-    } catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
     // Fixed name order: Map iteration order shifts as the registry
     // grows, and whichever query runs first absorbs any residual
     // cold cost — sorted order keeps per-query times comparable
@@ -92,57 +24,7 @@ object Bench {
     // costing a round of adjudication.
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadBefore = osBean.getSystemLoadAverage
-    // Calibration probe (VERDICT r13 item 4): the BenchDetail probe,
-    // emitted in the single-shot JSON too — r13's artifact of record
-    // (1,731 s on a ~1.75×-slow box, truth ~296 s) could only be
-    // falsified by a judge rerun because the single-shot carried no
-    // box-speed constant. spark.range data only (measures box + JVM,
-    // never the build), min-of-3 after a discarded warm-up run (the
-    // warm-up absorbs the probe's own cold janino compile — without it
-    // the min can still be the JIT-cold first run), before any query.
-    // Cleanup is scoped to RDDs the probe itself persisted (none today)
-    // so a future cross-query persisted frame survives (ADVICE r14).
-    val preProbe = spark.sparkContext.getPersistentRDDs.keySet
-    val calib = {
-      def probe(): Double = {
-        val t0 = System.nanoTime()
-        val a = spark.range(0, 20000000, 1, 32)
-          .selectExpr("id % 97 AS k", "id AS v")
-        val b = spark.range(0, 1000000, 1, 32)
-          .selectExpr("id % 97 AS k", "id AS w")
-        a.join(b.groupBy("k").count(), "k")
-          .selectExpr("k", "v", "count",
-            "sum(v) OVER (PARTITION BY k % 7 ORDER BY v ROWS BETWEEN 100 PRECEDING AND CURRENT ROW) AS r")
-          .selectExpr("sum(r + count) AS s").collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      probe()
-      (1 to 3).map(_ => probe()).min
-    }
-    // Fixed-overhead probe (VERDICT r14 item 3): both quiet r14 runs
-    // read median/calib ~16 vs r12's 10.88 with the inflation
-    // concentrated in sub-0.3 s queries — per-query FIXED cost
-    // (job-launch scheduling + unique-codegen compile) drifted while
-    // the 3-large-job throughput probe didn't move proportionally.
-    // Each rep inlines a fresh literal into the generated code, so
-    // every run pays one janino compile + one job launch — the constant
-    // every registry query pays exactly once. Read sub-second-query
-    // regressions against calib_fixed_s; large-query ones against
-    // calib_s.
-    val calibFixed = {
-      def probe(i: Int): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0, 100000, 1, 32)
-          .selectExpr(s"sum(id % ${101 + i}) AS s$i").collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      probe(0)
-      val ts = (1 to 7).map(probe).sorted
-      ts(ts.size / 2)
-    }
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!preProbe.contains(id)) rdd.unpersist(false)
-    }
+    val (calib, calibFixed) = calibrate(spark)
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       // snapshot BEFORE the query so the cleanup is scoped to its own
       // checkpoint residue — a future cross-query persisted frame must
@@ -205,5 +87,147 @@ object Bench {
     }
     println(prefix + entries.mkString(",") + suffix)
     spark.stop()
+  }
+
+  /** One-time session costs, paid before any timed query so none is
+    * billed to whichever query happens to run first (no benchmark query
+    * runs here). Shared by [[main]] and `BenchDetail`: the one list
+    * of staged artifacts.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    // Resolve every table once (directory listing + parquet footers —
+    // the metastore-metadata stand-in that etl.Tables caches), and push
+    // one synthetic query through each major codegen path (scan, shuffle
+    // agg, broadcast join, window, sort) to JIT the janino/compiler/
+    // shuffle machinery.
+    graft.etl.Tables.names.foreach { t =>
+      try graft.etl.Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
+    }
+    import org.apache.spark.sql.functions._
+    val r = spark.range(100000).select(col("id"), (col("id") % 97).as("k"))
+    r.groupBy("k").count().count()
+    r.join(broadcast(spark.range(97).select(col("id").as("k"))), "k").count()
+    r.select(sum("id").over(
+      org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("id"))).count()
+    r.orderBy(desc("id")).limit(10).count()
+    // JIT the fused text-hashing kernels (shingle/minhash/simhash/cosine)
+    // on synthetic rows — whichever dedup query runs first otherwise
+    // pays their cold-compile cost.
+    graft.functions.VectorExpressions.register(spark)
+    val txt = spark.range(256).select(
+      concat_ws(" ", (0 to 24).map(i => concat(lit(s"w$i"), col("id") % 7)): _*).as("text"))
+    txt.select(expr("graft_minhash_sig(graft_shingle_hashes64(split(text, ' '), 3))").as("sig"))
+      .select(explode(col("sig"))).count()
+    txt.select(expr("graft_simhash32(graft_shingle_hashes32(split(text, ' '), 1))")).count()
+    // Layout/ingest warm-up: bucketed, partitioned, and exported copies
+    // are ingest-time artifacts — queries pay to READ a layout, never to
+    // build it (a production table is bucketed once at load, not per
+    // query). Each is built on its own: a failed build is reported and
+    // the rest still build, so no later build lands inside a timed query.
+    import graft.etl.LayoutOps
+    import graft.queries._
+    def stage(name: String)(build: => Any): Unit =
+      try { build; () } catch {
+        case t: Throwable => System.err.println(s"warm-up: $name failed: $t")
+      }
+    stage("orders_bucketed")(
+      LayoutOps.ensureBucketed(spark, sfDir, "orders", Seq("o_orderkey"), 8))
+    stage("lineitem_bucketed")(
+      LayoutOps.ensureBucketed(spark, sfDir, "lineitem", Seq("l_orderkey"), 8))
+    stage("ensurePartitionedOrders")(LayoutOps.ensurePartitionedOrders(spark, sfDir))
+    // the ANN serving-tier indexes are the same ingest class: built
+    // once per corpus, probed by every query — the serve benchmarks
+    // measure probing, not the one-time build
+    stage("ensureIvfInt8Index")(Extensions.ensureIvfInt8Index(spark, sfDir))
+    stage("ensureIvfPqIndex")(Extensions.ensureIvfPqIndex(spark, sfDir))
+    stage("ensureAnnTruth")(Extensions.ensureAnnTruth(spark, sfDir))
+    stage("ensureDedupIndex")(Extensions.ensureDedupIndex(spark, sfDir))
+    stage("ensureDedupClusters")(Extensions.ensureDedupClusters(spark, sfDir))
+    stage("ensurePhashClusters")(Extensions.ensurePhashClusters(spark, sfDir))
+    stage("ensureTextIndex")(Breadth7.ensureTextIndex(spark, sfDir))
+    stage("ensurePrefixRanked")(Breadth11.ensurePrefixRanked(spark, sfDir))
+    stage("ensureTfidfPostings")(Breadth8.ensureTfidfPostings(spark, sfDir))
+    stage("ensureLinkPostings")(Breadth12.ensureLinkPostings(spark, sfDir))
+    stage("ensureAugBandIndex")(Breadth20.ensureAugBandIndex(spark, sfDir))
+    stage("ensureWinnowPostings")(Breadth20.ensureWinnowPostings(spark, sfDir))
+    stage("ensureAugShingleSets")(Breadth20.ensureAugShingleSets(spark, sfDir))
+    stage("ensureAugSimhash")(Breadth20.ensureAugSimhash(spark, sfDir))
+    stage("ensureSpanPostings")(Breadth14.ensureSpanPostings(spark, sfDir))
+    stage("ensureAugClusters")(Breadth20.ensureAugClusters(spark, sfDir))
+    stage("ensureDocStats")(Breadth20.ensureDocStats(spark, sfDir))
+    stage("ensurePiiStats")(Breadth11.ensurePiiStats(spark, sfDir))
+    stage("ensureErClusters")(Breadth11.ensureErClusters(spark, sfDir))
+    stage("ensureDocLengths")(Breadth10.ensureDocLengths(spark, sfDir))
+    stage("ensureErBlocksD3")(Breadth11.ensureErBlocksD3(spark, sfDir))
+    stage("ensureSplitFingerprints")(Breadth8.ensureSplitFingerprints(spark, sfDir))
+    stage("ensureOrdersManifest")(Breadth23.ensureOrdersManifest(spark, sfDir))
+    stage("ensureStagedOrdersAppend")(Breadth24.ensureStagedOrdersAppend(spark, sfDir))
+    stage("ensureOrdersCommits")(Breadth24.ensureOrdersCommits(spark, sfDir))
+    stage("ensureLineitemManifest")(Breadth24.ensureLineitemManifest(spark, sfDir))
+    stage("ensureOrdersMergeCommit")(Breadth24.ensureOrdersMergeCommit(spark, sfDir))
+    // the versioned-sink history layout_vacuum classifies is the same
+    // ingest class: staged once, audited (dry-run) by the query
+    stage("ensureVacuumHistory")(Breadth10.ensureVacuumHistory(spark, sfDir))
+  }
+
+  /** Box-speed constants `(calib_s, calib_fixed_s)`, measured after
+    * warm-up and before any registry query. The box drifts a uniform
+    * 1.1-1.4x between sessions with no code change, so per-query
+    * regressions are read as median / calib_s ratios and the drift
+    * divides out.
+    *
+    * Calibration probe (VERDICT r13 item 4): emitted in the single-shot
+    * JSON too — r13's artifact of record (1,731 s on a ~1.75×-slow box,
+    * truth ~296 s) could only be falsified by a judge rerun because the
+    * single-shot carried no box-speed constant. spark.range data only
+    * (measures box + JVM, never the build), min-of-3 after a discarded
+    * warm-up run (the warm-up absorbs the probe's own cold janino
+    * compile — without it the min can still be the JIT-cold first run).
+    * Cleanup is scoped to RDDs the probe itself persisted (none today)
+    * so a future cross-query persisted frame survives (ADVICE r14).
+    */
+  def calibrate(spark: SparkSession): (Double, Double) = {
+    val preProbe = spark.sparkContext.getPersistentRDDs.keySet
+    val calib = {
+      def probe(): Double = {
+        val t0 = System.nanoTime()
+        val a = spark.range(0, 20000000, 1, 32)
+          .selectExpr("id % 97 AS k", "id AS v")
+        val b = spark.range(0, 1000000, 1, 32)
+          .selectExpr("id % 97 AS k", "id AS w")
+        a.join(b.groupBy("k").count(), "k")
+          .selectExpr("k", "v", "count",
+            "sum(v) OVER (PARTITION BY k % 7 ORDER BY v ROWS BETWEEN 100 PRECEDING AND CURRENT ROW) AS r")
+          .selectExpr("sum(r + count) AS s").collect()
+        (System.nanoTime() - t0) / 1e9
+      }
+      probe()
+      (1 to 3).map(_ => probe()).min
+    }
+    // Fixed-overhead probe (VERDICT r14 item 3): both quiet r14 runs
+    // read median/calib ~16 vs r12's 10.88 with the inflation
+    // concentrated in sub-0.3 s queries — per-query FIXED cost
+    // (job-launch scheduling + unique-codegen compile) drifted while
+    // the 3-large-job throughput probe didn't move proportionally.
+    // Each rep inlines a fresh literal into the generated code, so
+    // every run pays one janino compile + one job launch — the constant
+    // every registry query pays exactly once. Read sub-second-query
+    // regressions against calib_fixed_s; large-query ones against
+    // calib_s.
+    val calibFixed = {
+      def probe(i: Int): Double = {
+        val t0 = System.nanoTime()
+        spark.range(0, 100000, 1, 32)
+          .selectExpr(s"sum(id % ${101 + i}) AS s$i").collect()
+        (System.nanoTime() - t0) / 1e9
+      }
+      probe(0)
+      val ts = (1 to 7).map(probe).sorted
+      ts(ts.size / 2)
+    }
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!preProbe.contains(id)) rdd.unpersist(false)
+    }
+    (calib, calibFixed)
   }
 }

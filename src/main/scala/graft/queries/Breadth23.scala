@@ -96,7 +96,7 @@ object Breadth23 {
     */
   def ensureRangeOrders(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.etl.LayoutOps.ensureDir(s, dir, "orders_range16") { d =>
+    graft.etl.LayoutOps.ensureRunDir(s, dir, "orders_range16") { d =>
       Tables(s, dir, "orders")
         .repartitionByRange(16, col("o_orderdate"), col("o_orderkey"))
         .write.parquet(d)
@@ -109,7 +109,7 @@ object Breadth23 {
   def ensureOrdersManifest(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val table = ensureRangeOrders(s, dir)
-    graft.etl.LayoutOps.ensureDir(s, dir, "orders_range16_manifest") { d =>
+    graft.etl.LayoutOps.ensureRunDir(s, dir, "orders_range16_manifest") { d =>
       graft.etl.LayoutOps.buildFileManifest(s, table, Seq("o_orderdate"))
         .write.parquet(d)
     }

@@ -114,11 +114,11 @@ object Breadth24 {
 
   /** Range-clustered lineitem layout (16 files by l_orderkey) + its
     * file manifest — the fact side a join-key runtime filter prunes
-    * against. Pure functions of the source table (ensureDir reuse).
+    * against. Staged once per JVM (ensureRunDir).
     */
   def ensureRangeLineitem(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    graft.etl.LayoutOps.ensureDir(s, dir, "lineitem_range16") { d =>
+    graft.etl.LayoutOps.ensureRunDir(s, dir, "lineitem_range16") { d =>
       Tables(s, dir, "lineitem")
         .repartitionByRange(16, col("l_orderkey"), col("l_linenumber"))
         .write.parquet(d)
@@ -127,7 +127,7 @@ object Breadth24 {
   def ensureLineitemManifest(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val table = ensureRangeLineitem(s, dir)
-    graft.etl.LayoutOps.ensureDir(s, dir, "lineitem_range16_manifest") { d =>
+    graft.etl.LayoutOps.ensureRunDir(s, dir, "lineitem_range16_manifest") { d =>
       graft.etl.LayoutOps.buildFileManifest(s, table, Seq("l_orderkey"))
         .write.parquet(d)
     }

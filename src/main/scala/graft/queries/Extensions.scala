@@ -752,12 +752,12 @@ object Extensions {
   }
 
   /** Build-if-absent the persisted IVF-PQ index; returns (path, model).
-    * The residual codebook is deterministic from scale-fixed inputs, so
-    * recomputing it driver-side is the model-load step, not a rebuild —
-    * and it is memoized per corpus dir (r17): a deployment persists the
-    * model NEXT TO the index and loads it once per process; re-running
-    * the training collect per query billed 2-3 fixed-cost jobs to every
-    * IVF-PQ query (the Tables relation-cache precedent).
+    * The residual codebook is trained inside the index build and
+    * memoized per corpus dir, so a rebuild after a source change
+    * retrains it with the index and every hit reuses it: a deployment
+    * persists the model NEXT TO the index and loads it once per process;
+    * re-running the training collect per query billed 2-3 fixed-cost
+    * jobs to every IVF-PQ query (the Tables relation-cache precedent).
     */
   private val ivfPqModels =
     new java.util.concurrent.ConcurrentHashMap[String, Similarity.PqModel]()
@@ -765,15 +765,17 @@ object Extensions {
   def ensureIvfPqIndex(s: SparkSession, dir: String): (String, Similarity.PqModel) = {
     val emb = Tables(s, dir, "embeddings")
     val cents = servingCentroids(s, dir)
-    val model = ivfPqModels.computeIfAbsent(dir, _ =>
-      Similarity.ivfPqResidualModel(
-        emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 5000), cents,
-        "vec_id", "embedding", "cid", "cv", m = 16))
     val idxDir = graft.etl.LayoutOps.ensureRunDir(s, dir, "ivfpq_index") { d =>
+      val model = Similarity.ivfPqResidualModel(
+        emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 5000), cents,
+        "vec_id", "embedding", "cid", "cv", m = 16)
+      ivfPqModels.put(dir, model)
       Similarity.buildIvfPqIndex(s, emb, cents, model,
         "vec_id", "embedding", "cid", "cv",
         spill = ServingSpill).write.parquet(d)
     }
+    val model = Option(ivfPqModels.get(dir)).getOrElse(throw new IllegalStateException(
+      s"IVF-PQ index at $idxDir has no model trained in this process"))
     (idxDir, model)
   }
 

@@ -29,96 +29,9 @@ object BenchDetail {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // same one-time warm-ups as the driver Bench: table relations and
-    // ingest-time layouts are built before any timed query
-    graft.etl.Tables.names.foreach { t =>
-      try graft.etl.Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    try {
-      graft.etl.LayoutOps.ensureBucketed(spark, sfDir, "orders", Seq("o_orderkey"), 8)
-      graft.etl.LayoutOps.ensureBucketed(spark, sfDir, "lineitem", Seq("l_orderkey"), 8)
-      graft.etl.LayoutOps.ensurePartitionedOrders(spark, sfDir)
-      graft.queries.Extensions.ensureIvfInt8Index(spark, sfDir)
-      graft.queries.Extensions.ensureIvfPqIndex(spark, sfDir)
-      graft.queries.Extensions.ensureAnnTruth(spark, sfDir)
-      graft.queries.Extensions.ensureDedupIndex(spark, sfDir)
-      graft.queries.Extensions.ensureDedupClusters(spark, sfDir)
-      graft.queries.Extensions.ensurePhashClusters(spark, sfDir)
-      graft.queries.Breadth10.ensureVacuumHistory(spark, sfDir)
-      graft.queries.Breadth7.ensureTextIndex(spark, sfDir)
-      graft.queries.Breadth11.ensurePrefixRanked(spark, sfDir)
-      graft.queries.Breadth8.ensureTfidfPostings(spark, sfDir)
-      graft.queries.Breadth12.ensureLinkPostings(spark, sfDir)
-      graft.queries.Breadth20.ensureAugBandIndex(spark, sfDir)
-      graft.queries.Breadth20.ensureWinnowPostings(spark, sfDir)
-      graft.queries.Breadth20.ensureAugShingleSets(spark, sfDir)
-      graft.queries.Breadth20.ensureAugSimhash(spark, sfDir)
-      graft.queries.Breadth14.ensureSpanPostings(spark, sfDir)
-      graft.queries.Breadth20.ensureAugClusters(spark, sfDir)
-      graft.queries.Breadth20.ensureDocStats(spark, sfDir)
-      graft.queries.Breadth11.ensurePiiStats(spark, sfDir)
-      graft.queries.Breadth11.ensureErClusters(spark, sfDir)
-      graft.queries.Breadth10.ensureDocLengths(spark, sfDir)
-      graft.queries.Breadth11.ensureErBlocksD3(spark, sfDir)
-      graft.queries.Breadth8.ensureSplitFingerprints(spark, sfDir)
-      graft.queries.Breadth23.ensureOrdersManifest(spark, sfDir)
-      graft.queries.Breadth24.ensureStagedOrdersAppend(spark, sfDir)
-      graft.queries.Breadth24.ensureOrdersCommits(spark, sfDir)
-      graft.queries.Breadth24.ensureLineitemManifest(spark, sfDir)
-      graft.queries.Breadth24.ensureOrdersMergeCommit(spark, sfDir)
-    } catch { case _: Throwable => () }
-    // Calibration probe (VERDICT r11 item 4): a fixed synthetic set —
-    // one scan-agg, one shuffle join, one window — timed AFTER warm-up
-    // and before any registry query, emitted as calib_s in the JSON
-    // header. Rounds run on a box whose state drifts a uniform 1.1-1.4x
-    // between sessions with no code change; per-query regressions are
-    // read as (median / calib_s) ratios round-over-round so the drift
-    // divides out. The probe deliberately uses NO registry table or
-    // query: spark.range data only, so it measures the box + JVM, never
-    // the build. min-of-3 — the probe must not absorb its own cold
-    // codegen into the calibration constant.
-    // min-of-3 after a discarded warm-up (the warm-up absorbs the
-    // probe's own cold janino compile); cleanup scoped to RDDs the
-    // probe itself persisted — none today — so a future cross-query
-    // persisted frame survives (ADVICE r14)
-    val preProbe = spark.sparkContext.getPersistentRDDs.keySet
-    val calib = {
-      def probe(): Double = {
-        val t0 = System.nanoTime()
-        val a = spark.range(0, 20000000, 1, 32)
-          .selectExpr("id % 97 AS k", "id AS v")
-        val b = spark.range(0, 1000000, 1, 32)
-          .selectExpr("id % 97 AS k", "id AS w")
-        a.join(b.groupBy("k").count(), "k")
-          .selectExpr("k", "v", "count",
-            "sum(v) OVER (PARTITION BY k % 7 ORDER BY v ROWS BETWEEN 100 PRECEDING AND CURRENT ROW) AS r")
-          .selectExpr("sum(r + count) AS s").collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      probe()
-      (1 to 3).map(_ => probe()).min
-    }
-    // Fixed-overhead probe (VERDICT r14 item 3): median latency of 7
-    // single-stage jobs, each with a FRESH inlined literal so every rep
-    // pays one janino compile + one job launch — the per-query fixed
-    // constant that drifted ~1.4× in r14 while the throughput probe
-    // above stayed flat. Sub-0.3 s query regressions are read against
-    // calib_fixed_s; heavyweight ones against calib_s.
-    val calibFixed = {
-      def probe(i: Int): Double = {
-        val t0 = System.nanoTime()
-        spark.range(0, 100000, 1, 32)
-          .selectExpr(s"sum(id % ${101 + i}) AS s$i").collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      probe(0)
-      val ts = (1 to 7).map(probe).sorted
-      ts(ts.size / 2)
-    }
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!preProbe.contains(id)) rdd.unpersist(false)
-    }
+    // same one-time warm-ups and box-speed probes as `Bench.main`
+    Bench.warmUp(spark, sfDir)
+    val (calib, calibFixed) = Bench.calibrate(spark)
     // Per-query job counter (VERDICT r15 item 3): sub-second medians are
     // dominated by per-job fixed cost, so a drifting median decomposes as
     // calib_fixed_s × n_jobs — without the count, adjudication has to

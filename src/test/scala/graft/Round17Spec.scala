@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-17 pins (optimization round 2): the staged-artifact twins
   * added this round must equal their live ops pair-for-pair, and the
-  * ensureRunDir/ensureDir staleness guard must rebuild when the source
-  * tree changes instead of serving a stale artifact.
+  * ensureRunDir staleness guard must rebuild when the source tree
+  * changes instead of serving a stale artifact.
   */
 class Round17Spec extends SparkSpec {
   import spark.implicits._
@@ -161,5 +161,24 @@ class Round17Spec extends SparkSpec {
       "two".getBytes("UTF-8"))
     val d3 = graft.etl.LayoutOps.ensureRunDir(spark, src, "guard_probe")(build)
     assert(spark.read.parquet(d3).as[Long].head() === 2L)
+  }
+
+  test("ensureIvfPqIndex retrains its model when the source tree changes") {
+    val src = freshDir("ivfpq_src_")
+    new java.io.File("/root/testdata/sf0.001").listFiles().foreach { f =>
+      java.nio.file.Files.copy(f.toPath, java.nio.file.Paths.get(src, f.getName))
+    }
+    def parts(d: String) = new java.io.File(d).list().filter(_.startsWith("part-")).toSet
+    val (d1, m1) = graft.queries.Extensions.ensureIvfPqIndex(spark, src)
+    val files1 = parts(d1)
+    val (d2, m2) = graft.queries.Extensions.ensureIvfPqIndex(spark, src)
+    assert(d2 === d1 && (m2 eq m1) && parts(d2) === files1)
+    // an unrelated file changes the fingerprint: index AND model rebuild
+    Thread.sleep(5) // mtime tick for filesystems with coarse stamps
+    java.nio.file.Files.write(java.nio.file.Paths.get(src, "unrelated.txt"),
+      "x".getBytes("UTF-8"))
+    val (d3, m3) = graft.queries.Extensions.ensureIvfPqIndex(spark, src)
+    assert(d3 === d1 && parts(d3).nonEmpty && parts(d3) != files1)
+    assert(!(m3 eq m1), "a stale IVF-PQ model was served after a source change")
   }
 }

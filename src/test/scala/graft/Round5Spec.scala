@@ -305,7 +305,17 @@ class Round5Spec extends SparkSpec {
     }
     assert(d1 === d2 && writes === 1)
     assert(new java.io.File(d1, "_SUCCESS").exists())
-    // and it is NOT the cross-build shared cache
-    assert(!d1.contains("graft_layout_v1"))
+    // a dir without `_SUCCESS` (a failed write) is cleared and rebuilt
+    new java.io.File(d1, "_SUCCESS").delete()
+    val d3 = graft.etl.LayoutOps.ensureRunDir(spark, sf, "probe_r5") { out =>
+      writes += 1
+      assert(!new java.io.File(out).exists(), "partial dir must be cleared first")
+      new java.io.File(out).mkdirs()
+      java.nio.file.Files.writeString(java.nio.file.Path.of(out, "y"), "2")
+    }
+    assert(d3 === d1 && writes === 2)
+    assert(new java.io.File(d3, "_SUCCESS").exists())
+    assert(new java.io.File(d3).list().toSet.filterNot(_.startsWith(".")) ===
+      Set("y", "_SUCCESS", "_SRC_FINGERPRINT"))
   }
 }
