@@ -102,4 +102,29 @@ class LayoutOpsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val b = spark.read.parquet(s"$root/out").orderBy("id").collect()
     assert(a.toSeq === b.toSeq)
   }
+
+  // `ensureRunDir` is the staging primitive formerly named `ensureDir`;
+  // the test keeps that name.
+  test("ensureDir is idempotent and clears a partial write") {
+    val dir = LayoutOps.ensureRunDir(spark, sfDir, "idem_probe") { out =>
+      Seq(1L, 2L).toDF("v").write.parquet(out)
+    }
+    // second call must NOT rewrite (writer would throw if invoked: the
+    // path already exists and the writer uses default error-out mode)
+    val again = LayoutOps.ensureRunDir(spark, sfDir, "idem_probe") { _ =>
+      fail("write closure must not run when _SUCCESS exists")
+    }
+    assert(again === dir)
+    assert(spark.read.parquet(dir).count() === 2)
+    // partial dir (no _SUCCESS) is cleared and rewritten
+    val partial = new java.io.File(dir + "_partial")
+    assert(partial.mkdirs())
+    java.nio.file.Files.write(partial.toPath.resolve("junk"), "x".getBytes)
+    val fixed = LayoutOps.ensureRunDir(spark, sfDir, "idem_probe_partial") { out =>
+      Seq(3L).toDF("v").write.parquet(out)
+    }
+    assert(fixed === partial.getPath)
+    assert(spark.read.parquet(fixed).count() === 1)
+    assert(!new java.io.File(fixed, "junk").exists())
+  }
 }
