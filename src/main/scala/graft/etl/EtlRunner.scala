@@ -1,7 +1,8 @@
 package graft.etl
 
 import graft.sources.{LocalFsConnector, SinkConnector, SourceConnector}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
 /** The reference's orchestrator (`/root/reference/etl.py:22-119`,
   * `ETLDataPipeline`) as a typed, explicit pipeline:
@@ -9,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   catalog (S12/P23/O1: newest raw file for the entity)
   *     → extract (S1 reference-CSV read)
   *     → transform (F1 registry: raw_{entity})
+  *     → cast (the entity's data dictionary)
   *     → load (S8 parquet sink, full refresh)
   *     → optional integrate (Q5 authlog + U2 merge vs the previous
   *       modeled snapshot — the reference's dormant-but-complete path,
@@ -21,8 +23,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Remote I/O goes through the [[graft.sources.SourceConnector]] /
   * [[graft.sources.SinkConnector]] seam: the default
   * [[graft.sources.LocalFsConnector]] reads/writes the local FS, and a
-  * cloud deployment passes its own connector pair — the lifecycle code
-  * below never touches a filesystem API directly for extract/load.
+  * cloud deployment passes its own connector pair for extract and load.
+  * The snapshot is published through the Hadoop `FileSystem` of
+  * `modeledDir`, not the connector: [[swapIn]] renames the written
+  * `<entity>__tmp` to `<entity>`, and a run that finds only
+  * `<entity>__old` (a swap cut between its renames) first moves it back.
   */
 object EtlRunner {
 
@@ -32,12 +37,19 @@ object EtlRunner {
 
   def run(spark: SparkSession, rawDir: String, modeledDir: String,
       entity: String, today: java.sql.Date,
-      dictionary: Seq[DictColumn] = Nil,
+      dictionary: Seq[DictColumn],
       auditCols: Seq[String] = Nil,
       runId: String = "run-1",
       runTs: java.time.LocalDateTime = java.time.LocalDateTime.of(2026, 8, 12, 0, 0),
       source: SourceConnector = LocalFsConnector,
       sink: SinkConnector = LocalFsConnector): RunResult = {
+
+    // roll back a swap interrupted between its two renames
+    val modeledPath = s"$modeledDir/$entity"
+    val snapshot = new Path(modeledPath)
+    val parked = new Path(modeledPath + "__old")
+    val fs = snapshot.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(snapshot) && fs.exists(parked)) rename(fs, parked, snapshot)
 
     // catalog: newest raw file for the entity (etl.py:32-49 + O1)
     val meta = source.listObjects(spark, rawDir)
@@ -46,25 +58,15 @@ object EtlRunner {
     require(latest.nonEmpty, s"no raw file for entity '$entity' in $rawDir")
     val file = latest(0).getAs[String]("id")
 
-    // extract + transform
+    // extract + transform + cast
     val raw = source.readCsv(spark, file)
-    val cleaned = entity match {
-      case "creditos" => Pipelines.cleanCreditos(raw, today)
-      case "radicados" => Pipelines.cleanRadicados(raw)
-      case other => Pipelines.transform(other, "raw", raw)
-    }
-    val typed =
-      if (dictionary.nonEmpty) DictionaryOps.castByDictionary(cleaned, dictionary)
-      else cleaned
+    val typed = DictionaryOps.castByDictionary(
+      Pipelines.transform(entity, "raw", raw, today), dictionary)
 
     // integrate against the previous modeled snapshot, if one exists
-    val modeledPath = s"$modeledDir/$entity"
-    val previous: Option[DataFrame] =
-      if (new java.io.File(modeledPath).exists())
-        Some(spark.read.parquet(modeledPath))
-      else None
-    val authlogRows = previous.flatMap { prev =>
-      if (auditCols.nonEmpty && dictionary.nonEmpty) {
+    val (toWrite, authlogRows) =
+      if (auditCols.nonEmpty && fs.exists(snapshot)) {
+        val prev = spark.read.parquet(modeledPath)
         val id = DictionaryOps.primaryKey(dictionary)
         val log = AuditOps.authlog(prev, typed, id, auditCols,
           fuenteLog = s"$rawDir/$entity", runId = runId, runTs = runTs)
@@ -72,20 +74,15 @@ object EtlRunner {
         sink.writeTable(log, logPath)
         // count the committed table: counting `log` would re-run the
         // CSV decode, cleaning, casts and join
-        Some(spark.read.parquet(logPath).count())
-      } else None
-    }
-    val toWrite = previous match {
-      case Some(prev) if auditCols.nonEmpty && dictionary.nonEmpty =>
-        MergeOps.tableUpdated(prev, typed,
-          DictionaryOps.primaryKey(dictionary), auditCols)
+        (MergeOps.tableUpdated(prev, typed, id, auditCols),
+          Some(spark.read.parquet(logPath).count()))
+      }
       // One data file per entity: the split extract leaves one partition
       // per core, and on the e2ebench etl_cold inputs four files instead
       // of one store ~7.5% more bytes (per-file parquet footers,
       // dictionaries and stats). The merge path needs no exchange here:
       // its orderBy already sets the layout.
-      case _ => typed.repartition(1)
-    }
+      else (typed.repartition(1), None)
 
     // load (full refresh, S8) — write to a temp dir then swap, so the
     // previous snapshot (still referenced by the lazy merge plan) isn't
@@ -98,25 +95,31 @@ object EtlRunner {
     RunResult(file, n, modeledPath, authlogRows)
   }
 
-  /** Moves the freshly written `tmp` in as the snapshot at `modeledPath`.
-    * The previous snapshot is parked at `__old` and deleted only once the
-    * new one is in place; a failed rename throws, naming both paths.
+  /** Moves the freshly written `tmp` in as the snapshot at `modeledPath`,
+    * through the Hadoop `FileSystem` of that path. The previous snapshot
+    * is parked at `__old` and deleted only once the new one is in place;
+    * a failed rename throws, naming both paths.
     */
   private[graft] def swapIn(tmp: String, modeledPath: String): Unit = {
-    val target = new java.io.File(modeledPath)
-    val old = new java.io.File(modeledPath + "__old")
-    deleteRecursively(old)
-    if (target.exists()) rename(target, old)
-    rename(new java.io.File(tmp), target)
-    deleteRecursively(old)
+    val target = new Path(modeledPath)
+    val old = new Path(modeledPath + "__old")
+    val fs = target.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+    fs.delete(old, true)
+    if (fs.exists(target)) rename(fs, target, old)
+    rename(fs, new Path(tmp), target)
+    fs.delete(old, true): Unit
   }
 
-  private def rename(from: java.io.File, to: java.io.File): Unit =
-    if (!from.renameTo(to))
-      throw new java.io.IOException(s"snapshot swap failed: cannot rename $from to $to")
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
+  /** Renames `from` to `to` or throws naming both: a missing `from`, an
+    * existing `to` (Hadoop would move `from` into it), a `false` from
+    * `fs.rename` or an `IOException` (local FS copy fallback) all fail.
+    */
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit = {
+    def failed(cause: Throwable) =
+      new java.io.IOException(s"snapshot swap failed: cannot rename $from to $to", cause)
+    val moved =
+      try fs.exists(from) && !fs.exists(to) && fs.rename(from, to)
+      catch { case e: java.io.IOException => throw failed(e) }
+    if (!moved) throw failed(null)
   }
 }

@@ -18,6 +18,8 @@ object MergeOps {
 
   private val Sfx = "_b"
 
+  private val log = org.apache.log4j.Logger.getLogger(getClass)
+
   /** J2 — ids whose audit columns are unchanged between snapshots.
     * Null-sensitive on purpose: `!(a =!= b)` is null when either side is
     * null, and `filter` drops null predicates — so a null in an audit
@@ -47,8 +49,6 @@ object MergeOps {
     * predicate (a null audit value means "changed", P22) and the same
     * lexicographic sort on the stringified id.
     */
-  private val log = org.apache.log4j.Logger.getLogger(getClass)
-
   def tableUpdated(a: DataFrame, b: DataFrame, idCol: String,
       auditCols: Seq[String]): DataFrame = {
     // Q3 — dimension-mismatch warning (log_handler.py:45-46)

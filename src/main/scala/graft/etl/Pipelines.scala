@@ -92,16 +92,17 @@ object Pipelines {
   def modeledCreditos(df: DataFrame): DataFrame =
     CleanOps.emptyToNull(df)
 
-  /** Typed transform registry (replaces `getattr` dispatch, F1). */
-  val registry: Map[String, DataFrame => DataFrame] = Map(
-    "raw_creditos" -> (df => cleanCreditos(df, java.sql.Date.valueOf("2026-08-12"))),
-    "raw_radicados" -> cleanRadicados _,
-    "modeled_radicados" -> (modeledRadicados _),
-    "modeled_creditos" -> (modeledCreditos _))
+  /** Typed transform registry (replaces `getattr` dispatch, F1); entries get the run's `today`. */
+  val registry: Map[String, (DataFrame, java.sql.Date) => DataFrame] = Map(
+    "raw_creditos" -> (cleanCreditos _),
+    "raw_radicados" -> ((df: DataFrame, _: java.sql.Date) => cleanRadicados(df)),
+    "modeled_radicados" -> ((df: DataFrame, _: java.sql.Date) => modeledRadicados(df)),
+    "modeled_creditos" -> ((df: DataFrame, _: java.sql.Date) => modeledCreditos(df)))
 
-  def transform(entity: String, layer: String, df: DataFrame): DataFrame =
+  def transform(entity: String, layer: String, df: DataFrame,
+      today: java.sql.Date): DataFrame =
     registry.getOrElse(s"${layer}_$entity",
       throw new IllegalArgumentException(
         s"no transform registered for ${layer}_$entity; known: ${registry.keys.mkString(", ")}")
-    ).apply(df)
+    ).apply(df, today)
 }

@@ -63,7 +63,9 @@ trait SinkConnector {
   * the only one possible in this environment, and the reference semantics
   * are fully exercised through it. A cloud deployment implements the two
   * traits against its object store / sheet API and passes the instance to
-  * `EtlRunner.run`; nothing else changes.
+  * `EtlRunner.run` for extract and load; the modeled snapshot is still
+  * swapped in through the Hadoop `FileSystem` of the modeled dir
+  * (`EtlRunner.swapIn`), so that dir must be a Hadoop-resolvable path.
   */
 object LocalFsConnector extends SourceConnector with SinkConnector {
 

@@ -85,9 +85,10 @@ class CsvPipelineSpec extends SparkSpec {
   test("transform registry: typed dispatch with explicit unknown-entity error") {
     import spark.implicits._
     val df = Seq(("1", "x")).toDF("Radicado", "Rpta")
-    val out = Pipelines.transform("radicados", "modeled", df)
+    val today = java.sql.Date.valueOf("2026-08-12")
+    val out = Pipelines.transform("radicados", "modeled", df, today)
     assert(out.schema("Radicado").dataType.typeName == "long")
-    val e = intercept[IllegalArgumentException](Pipelines.transform("nope", "raw", df))
+    val e = intercept[IllegalArgumentException](Pipelines.transform("nope", "raw", df, today))
     assert(e.getMessage.contains("raw_nope"))
   }
 

@@ -24,7 +24,8 @@ object DemoDrive {
     java.nio.file.Files.write(f,
       lines.mkString("\n").getBytes(java.nio.charset.Charset.forName("ISO-8859-1")))
     val raw = graft.sources.CsvSource.readReferenceCsv(spark, f.toString)
-    val cleaned = graft.etl.Pipelines.transform("creditos", "raw", raw)
+    val cleaned = graft.etl.Pipelines.transform("creditos", "raw", raw,
+      java.sql.Date.valueOf("2026-08-12"))
     cleaned.select("Crédito", "TasaInterés", "FechaGiro", "tiempo_solicitud_giro",
       "tiempo_de_espera", "Monto").show(false)
     val meta = graft.etl.CatalogOps.listFiles(spark, f.getParent.toString)

@@ -52,6 +52,49 @@ class EtlRunnerSpec extends SparkSpec {
     assert(log.select("tipo_cambio").collect()(0).getString(0) == "Modificado")
   }
 
+  /** The two-snapshot radicados refresh of the test above, with the raw
+    * and modeled dirs spelled as the caller gives them and `between`
+    * run after run 1; returns run 2's result.
+    */
+  private def twoRuns(raw: java.nio.file.Path, rawDir: String, modeledDir: String)(
+      between: => Unit): EtlRunner.RunResult = {
+    val today = java.sql.Date.valueOf("2026-08-12")
+    val auditCols = Seq("Rpta", "funcionario_destino")
+    writeCsv(raw, "raw_radicados.csv", Seq(
+      "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;0;",
+      "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;"))
+    val r1 = EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
+      Dictionaries.radicados, auditCols)
+    assert(r1.rows == 2 && r1.authlogRows.isEmpty)
+    between
+    writeCsv(raw, "raw2_radicados.csv", Seq(
+      "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;1;",
+      "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;",
+      "102;17/03/2024 10:00;LUIS;nuevo;N;WEB;E3;ASESOR-GTICS-ANA RUIZ;0;"))
+    EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
+      Dictionaries.radicados, auditCols)
+  }
+
+  test("a swap interrupted between its two renames is rolled back by the next run") {
+    val raw = Files.createTempDirectory("raw_")
+    val modeled = Files.createTempDirectory("mod_")
+    val r2 = twoRuns(raw, raw.toString, modeled.toString) {
+      // the crash: snapshot 1 parked at __old, nothing moved in yet
+      Files.move(modeled.resolve("radicados"), modeled.resolve("radicados__old"))
+    }
+    assert(r2.authlogRows.contains(1L)) // diffed against the restored snapshot 1
+    assert(spark.read.parquet(r2.modeledPath).count() == 3)
+    assert(!Files.exists(modeled.resolve("radicados__old")))
+  }
+
+  test("file: URI raw and modeled dirs: catalog, snapshot check and swap all resolve") {
+    val raw = Files.createTempDirectory("raw_")
+    val modeled = Files.createTempDirectory("mod_")
+    val r2 = twoRuns(raw, raw.toUri.toString, modeled.toUri.toString)(())
+    assert(r2.authlogRows.contains(1L))
+    assert(spark.read.parquet(r2.modeledPath).count() == 3)
+  }
+
   // ---- REST connector against a local HTTP stub --------------------------
 
   /** In-process HTTP stub with the REST contract RestConnector speaks:
