@@ -91,19 +91,25 @@ object EtlRunner {
     sink.writeTable(toWrite, tmp)
     val out = spark.read.parquet(tmp)
     val n = out.count()
-    swapIn(tmp, modeledPath)
+    swapIn(fs, tmp, modeledPath)
     RunResult(file, n, modeledPath, authlogRows)
   }
 
-  /** Moves the freshly written `tmp` in as the snapshot at `modeledPath`,
-    * through the Hadoop `FileSystem` of that path. The previous snapshot
-    * is parked at `__old` and deleted only once the new one is in place;
-    * a failed rename throws, naming both paths.
+  /** [[swapIn]] through the `FileSystem` of `modeledPath` under the
+    * active session's Hadoop configuration.
     */
-  private[graft] def swapIn(tmp: String, modeledPath: String): Unit = {
+  private[graft] def swapIn(tmp: String, modeledPath: String): Unit =
+    swapIn(new Path(modeledPath).getFileSystem(
+      SparkSession.active.sessionState.newHadoopConf()), tmp, modeledPath)
+
+  /** Moves the freshly written `tmp` in as the snapshot at `modeledPath`
+    * on `fs`. The previous snapshot is parked at `__old` and deleted only
+    * once the new one is in place; a failed rename throws, naming both
+    * paths.
+    */
+  private def swapIn(fs: FileSystem, tmp: String, modeledPath: String): Unit = {
     val target = new Path(modeledPath)
     val old = new Path(modeledPath + "__old")
-    val fs = target.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
     fs.delete(old, true)
     if (fs.exists(target)) rename(fs, target, old)
     rename(fs, new Path(tmp), target)

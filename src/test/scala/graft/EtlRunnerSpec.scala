@@ -18,29 +18,39 @@ class EtlRunnerSpec extends SparkSpec {
       (Seq("JUNK", header) ++ rows).mkString("\n").getBytes(Charset.forName("ISO-8859-1")))
   }
 
-  test("catalog → extract → transform → load → integrate, end to end") {
-    val raw = Files.createTempDirectory("raw_")
-    val modeled = Files.createTempDirectory("mod_")
+  /** Two successive radicados loads with `between` run on run 1's
+    * result: 100 and 101, then 100 answered (Rpta flips) and 102 new.
+    * The raw and modeled dirs are spelled as the caller gives them;
+    * returns run 2's result.
+    */
+  private def twoRuns(raw: java.nio.file.Path, rawDir: String, modeledDir: String)(
+      between: EtlRunner.RunResult => Unit): EtlRunner.RunResult = {
     val today = java.sql.Date.valueOf("2026-08-12")
-
+    val auditCols = Seq("Rpta", "funcionario_destino")
     writeCsv(raw, "raw_radicados.csv", Seq(
       "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;0;",
       "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;"))
-    val r1 = EtlRunner.run(spark, raw.toString, modeled.toString, "radicados",
-      today, Dictionaries.radicados, auditCols = Seq("Rpta", "funcionario_destino"))
+    val r1 = EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
+      Dictionaries.radicados, auditCols)
     assert(r1.rows == 2 && r1.authlogRows.isEmpty) // first run: nothing to diff
-    val first = spark.read.parquet(r1.modeledPath)
-    assert(first.count() == 2)
-    assert(first.filter(first("Radicado") === "100")
-      .select("grupo_destino").collect()(0).getString(0) == "Grupo de gestion de cesantias")
-
-    // second snapshot: 100 answered (Rpta flips), 102 appears
+    between(r1)
     writeCsv(raw, "raw2_radicados.csv", Seq(
       "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;1;",
       "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;",
       "102;17/03/2024 10:00;LUIS;nuevo;N;WEB;E3;ASESOR-GTICS-ANA RUIZ;0;"))
-    val r2 = EtlRunner.run(spark, raw.toString, modeled.toString, "radicados",
-      today, Dictionaries.radicados, auditCols = Seq("Rpta", "funcionario_destino"))
+    EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
+      Dictionaries.radicados, auditCols)
+  }
+
+  test("catalog → extract → transform → load → integrate, end to end") {
+    val raw = Files.createTempDirectory("raw_")
+    val modeled = Files.createTempDirectory("mod_")
+    val r2 = twoRuns(raw, raw.toString, modeled.toString) { r1 =>
+      val first = spark.read.parquet(r1.modeledPath)
+      assert(first.count() == 2)
+      assert(first.filter(first("Radicado") === "100")
+        .select("grupo_destino").collect()(0).getString(0) == "Grupo de gestion de cesantias")
+    }
     assert(r2.sourceFile.endsWith("raw2_radicados.csv")) // newest file picked
     assert(r2.authlogRows.contains(1L)) // exactly the Rpta change on 100
     val merged = spark.read.parquet(r2.modeledPath)
@@ -52,33 +62,10 @@ class EtlRunnerSpec extends SparkSpec {
     assert(log.select("tipo_cambio").collect()(0).getString(0) == "Modificado")
   }
 
-  /** The two-snapshot radicados refresh of the test above, with the raw
-    * and modeled dirs spelled as the caller gives them and `between`
-    * run after run 1; returns run 2's result.
-    */
-  private def twoRuns(raw: java.nio.file.Path, rawDir: String, modeledDir: String)(
-      between: => Unit): EtlRunner.RunResult = {
-    val today = java.sql.Date.valueOf("2026-08-12")
-    val auditCols = Seq("Rpta", "funcionario_destino")
-    writeCsv(raw, "raw_radicados.csv", Seq(
-      "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;0;",
-      "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;"))
-    val r1 = EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
-      Dictionaries.radicados, auditCols)
-    assert(r1.rows == 2 && r1.authlogRows.isEmpty)
-    between
-    writeCsv(raw, "raw2_radicados.csv", Seq(
-      "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;1;",
-      "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;",
-      "102;17/03/2024 10:00;LUIS;nuevo;N;WEB;E3;ASESOR-GTICS-ANA RUIZ;0;"))
-    EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
-      Dictionaries.radicados, auditCols)
-  }
-
   test("a swap interrupted between its two renames is rolled back by the next run") {
     val raw = Files.createTempDirectory("raw_")
     val modeled = Files.createTempDirectory("mod_")
-    val r2 = twoRuns(raw, raw.toString, modeled.toString) {
+    val r2 = twoRuns(raw, raw.toString, modeled.toString) { _ =>
       // the crash: snapshot 1 parked at __old, nothing moved in yet
       Files.move(modeled.resolve("radicados"), modeled.resolve("radicados__old"))
     }
@@ -90,7 +77,7 @@ class EtlRunnerSpec extends SparkSpec {
   test("file: URI raw and modeled dirs: catalog, snapshot check and swap all resolve") {
     val raw = Files.createTempDirectory("raw_")
     val modeled = Files.createTempDirectory("mod_")
-    val r2 = twoRuns(raw, raw.toUri.toString, modeled.toUri.toString)(())
+    val r2 = twoRuns(raw, raw.toUri.toString, modeled.toUri.toString)(_ => ())
     assert(r2.authlogRows.contains(1L))
     assert(spark.read.parquet(r2.modeledPath).count() == 3)
   }

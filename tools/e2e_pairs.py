@@ -1,11 +1,11 @@
 """Alternating parent/change pairs of the end-to-end benchmark.
 
     python3 tools/e2e_pairs.py PARENT_DIR --workload etl_cold --seeds 31 32 33 \
-        [--seconds 10] [--change .]
+        [--seconds 10]
 
 PARENT_DIR is a checkout of the parent commit (make it with `git clone`
-into a scratch dir); the change is the checkout given by --change (the
-current directory by default). For each seed it runs
+into a scratch dir); the change is the checkout that holds this script.
+For each seed it runs
 `python3 e2ebench/run.py --workload W --seed S --seconds N --trace 0` once
 in each checkout, from that checkout's root, one run at a time; the
 order flips on every pair (parent first on the 1st, 3rd, ... seed), so
@@ -50,13 +50,13 @@ def quartiles(xs):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("parent", help="checkout of the parent commit")
-    ap.add_argument("--change", default=".", help="checkout of the change (default: .)")
     ap.add_argument("--workload", required=True, choices=["etl_cold", "etl_incremental", "curate"])
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
     ap.add_argument("--seconds", type=float, default=10)
     a = ap.parse_args()
 
-    roots = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    roots = {"parent": os.path.abspath(a.parent),
+             "change": os.path.dirname(os.path.dirname(os.path.abspath(__file__)))}
     with open(os.path.join(roots["change"], "BENCHMARK.json")) as f:
         e2e = json.load(f)["end_to_end"]
 
