@@ -35,12 +35,17 @@ object EtlRunner {
       sourceFile: String, rows: Long, modeledPath: String,
       authlogRows: Option[Long])
 
+  /** `runId`/`runTs` stamp the run's authlog rows (`id_log`,
+    * `fecha_modificacion`). They have no default: the reference stamps
+    * each run with a fresh `uuid4()`/`now()` (`log_handler.py:64-70`),
+    * and a shared default would give every run the same stamp.
+    */
   def run(spark: SparkSession, rawDir: String, modeledDir: String,
       entity: String, today: java.sql.Date,
       dictionary: Seq[DictColumn],
       auditCols: Seq[String] = Nil,
-      runId: String = "run-1",
-      runTs: java.time.LocalDateTime = java.time.LocalDateTime.of(2026, 8, 12, 0, 0),
+      runId: String,
+      runTs: java.time.LocalDateTime,
       source: SourceConnector = LocalFsConnector,
       sink: SinkConnector = LocalFsConnector): RunResult = {
 

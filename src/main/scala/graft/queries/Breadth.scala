@@ -19,12 +19,7 @@ object Breadth {
           get_json_object(col("props"), "$.k").as("k_str"),
           get_json_object(col("props"), "$.k").cast("long").as("k_num"))
         .orderBy(col("event_id")),
-    Some("""
-      SELECT event_id,
-             json_extract_string(props, '$.k') AS k_str,
-             TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
-      FROM events ORDER BY event_id
-    """.trim))
+    Some(Fragments.JsonKOracle))
 
   /** Scalar string-function parity sweep. */
   val t1Strings = Q(
@@ -78,33 +73,25 @@ object Breadth {
       FROM orders ORDER BY o_orderkey
     """.trim))
 
-  private val KeysB =
-    "SELECT o_orderkey FROM orders WHERE o_orderkey % 89 <> 0 UNION ALL " +
-      "SELECT o_orderkey + 100000000 FROM orders WHERE o_orderkey % 211 = 0"
-
   /** INTERSECT (distinct) of the published and incoming key sets. */
   val u3Intersect = Q(
     "u3_intersect",
     (s, dir) => {
       val o = Tables(s, dir, "orders").select(col("o_orderkey"))
-      val b = o.filter(col("o_orderkey") % 89 =!= 0)
-        .unionByName(o.filter(col("o_orderkey") % 211 === 0)
-          .select((col("o_orderkey") + 100000000L).as("o_orderkey")))
+      val b = Fragments.refreshedKeys(o)
       o.intersect(b).orderBy(col("o_orderkey"))
     },
-    Some(s"SELECT o_orderkey FROM orders INTERSECT ($KeysB) ORDER BY o_orderkey"))
+    Some(s"SELECT o_orderkey FROM orders INTERSECT (${Fragments.RefreshedKeysSql}) ORDER BY o_orderkey"))
 
   /** EXCEPT (distinct): published keys that vanished from the refresh. */
   val u4Except = Q(
     "u4_except",
     (s, dir) => {
       val o = Tables(s, dir, "orders").select(col("o_orderkey"))
-      val b = o.filter(col("o_orderkey") % 89 =!= 0)
-        .unionByName(o.filter(col("o_orderkey") % 211 === 0)
-          .select((col("o_orderkey") + 100000000L).as("o_orderkey")))
+      val b = Fragments.refreshedKeys(o)
       o.except(b).orderBy(col("o_orderkey"))
     },
-    Some(s"SELECT o_orderkey FROM orders EXCEPT ($KeysB) ORDER BY o_orderkey"))
+    Some(s"SELECT o_orderkey FROM orders EXCEPT (${Fragments.RefreshedKeysSql}) ORDER BY o_orderkey"))
 
   /** GROUPING SETS via the SQL front-end over a temp view. */
   val q12GroupingSets = Q(

@@ -190,12 +190,12 @@ object Breadth10 {
     },
     Some {
       s"""
-      WITH n AS (SELECT doc_id, lang, text, ${Extensions.NormW} AS w,
+      WITH n AS (SELECT doc_id, lang, text, ${Fragments.NormW} AS w,
                    len(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS nc
                  FROM documents),
       b AS (SELECT doc_id, lang, text, len(w)::BIGINT AS n_words,
               (nc - (len(w) - 1))::BIGINT AS n_word_chars,
-              ${Extensions.sqlStopDistinctByLang()} AS n_stop
+              ${Fragments.sqlStopDistinctByLang()} AS n_stop
             FROM n),
       surv AS (SELECT doc_id, lang, text, n_words FROM b
                WHERE n_words >= 30 AND n_words <= 100000
@@ -247,16 +247,12 @@ object Breadth10 {
         .orderBy(col("source"), col("doc_id"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, source, lang, text, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, source, lang, text, ${Fragments.NormW} AS w FROM documents),
       m AS (SELECT doc_id, source,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHitsByLang()}::DOUBLE / len(w) AS stop_ratio
+              ${Fragments.sqlQualityFeatures(Fragments.sqlHitsByLang())}
             FROM n),
       q AS (SELECT doc_id, source,
-              round(least(avg_word_len / 8.0, 1.0) * 0.4
-                    + least(stop_ratio * 5.0, 1.0) * 0.4
-                    + (1.0 - punct_ratio) * 0.2, 9) AS quality FROM m),
+              ${Fragments.QualityScore} AS quality FROM m),
       r AS (SELECT doc_id, source, quality,
               row_number() OVER (PARTITION BY source
                 ORDER BY quality DESC, md5(doc_id::VARCHAR)) AS rn
@@ -283,7 +279,7 @@ object Breadth10 {
             .cast("double") / count(lit(1)), 6).as("mean_nll"))
         .orderBy(col("lang"), col("bucket")),
     Some(s"""
-      WITH norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
+      WITH norm AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       t AS (SELECT doc_id, unnest(w) AS term FROM norm),
       f AS (SELECT term, count(*) AS cnt FROM t GROUP BY term),
       g AS (SELECT sum(cnt) + count(*) AS denom FROM f),
@@ -327,7 +323,7 @@ object Breadth10 {
           round(lit(1.0) - col("n_tokens").cast("double") / col("n_padded"), 9))
         .orderBy(col("bucket_size")),
     Some(s"""
-      WITH n AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       b AS (SELECT len(w)::BIGINT AS n_words,
               list_min(list_filter(
                 [16,32,64,128,256,512,1024,2048,4096,8192,16384,32768,
@@ -364,7 +360,7 @@ object Breadth10 {
                  FROM embeddings WHERE vec_id % 20 = 0 AND vec_id < 4000),
       c AS (SELECT vec_id AS neighbor_id, embedding AS cv, label AS nlabel
             FROM embeddings),
-      p AS (SELECT query_id, neighbor_id, nlabel, ${Extensions.sqlCos("qv", "cv")} AS sim
+      p AS (SELECT query_id, neighbor_id, nlabel, ${Fragments.sqlCos("qv", "cv")} AS sim
             FROM q, c WHERE query_id <> neighbor_id),
       r AS (SELECT query_id, nlabel,
               row_number() OVER (PARTITION BY query_id
@@ -407,7 +403,7 @@ object Breadth10 {
                     WHERE vec_id % 250 = 0 AND vec_id < 5000),
       a AS (SELECT vec_id, cid,
               row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
-            FROM (SELECT e.vec_id, c.cid, ${Extensions.sqlCos("e.embedding", "c.cv")} AS sim
+            FROM (SELECT e.vec_id, c.cid, ${Fragments.sqlCos("e.embedding", "c.cv")} AS sim
                   FROM embeddings e, cent c)),
       asg AS (SELECT vec_id, cid FROM a WHERE rn = 1),
       l AS (SELECT asg.cid, e.label FROM asg JOIN embeddings e USING (vec_id)),
@@ -460,24 +456,13 @@ object Breadth10 {
         .orderBy(col("cluster_id"))
     },
     Some(s"""
-      WITH RECURSIVE ${Extensions.minhashPairsCtes},
-      edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s),
-      cl AS (SELECT a.doc_id, coalesce(least(c.mn, a.doc_id), a.doc_id) AS cluster_id
-             FROM aug a LEFT JOIN comp c USING (doc_id)),
-      qn AS (SELECT doc_id, lang, text, ${Extensions.NormW} AS w FROM aug),
+      WITH RECURSIVE ${Fragments.minhashClusterCtes},
+      qn AS (SELECT doc_id, lang, text, ${Fragments.NormW} AS w FROM aug),
       qm AS (SELECT doc_id,
-               length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-               length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-               ${Extensions.sqlHitsByLang()}::DOUBLE / len(w) AS stop_ratio
+               ${Fragments.sqlQualityFeatures(Fragments.sqlHitsByLang())}
              FROM qn),
       qq AS (SELECT doc_id,
-               round(least(avg_word_len / 8.0, 1.0) * 0.4
-                     + least(stop_ratio * 5.0, 1.0) * 0.4
-                     + (1.0 - punct_ratio) * 0.2, 9) AS quality FROM qm),
+               ${Fragments.QualityScore} AS quality FROM qm),
       r AS (SELECT cl.cluster_id, qq.doc_id, quality,
               row_number() OVER (PARTITION BY cluster_id
                 ORDER BY quality DESC, md5(doc_id::VARCHAR)) AS rn
@@ -585,7 +570,7 @@ object Breadth10 {
         .sourceKlDivergence(Tables(s, dir, "documents"), "text", "source")
         .orderBy(col("source")),
     Some(s"""
-      WITH n AS (SELECT source, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT source, ${Fragments.NormW} AS w FROM documents),
       t AS (SELECT source, unnest(w) AS term FROM n),
       st AS (SELECT source, term, count(*)::BIGINT AS cst FROM t GROUP BY 1, 2),
       c AS (SELECT term, sum(cst)::BIGINT AS ct FROM st GROUP BY term),
@@ -687,7 +672,7 @@ object Breadth10 {
       c AS (SELECT vec_id AS pair_id, embedding AS cv, label AS cl
             FROM embeddings),
       sc AS (SELECT anchor_id, ql, pair_id, cl,
-               ${Extensions.sqlCos("qv", "cv")} AS sim
+               ${Fragments.sqlCos("qv", "cv")} AS sim
              FROM a, c WHERE anchor_id <> pair_id),
       pos AS (SELECT anchor_id, 'positive' AS kind, rank, pair_id, sim FROM (
                 SELECT anchor_id, pair_id, sim,

@@ -44,9 +44,7 @@ object Breadth11 {
             WHERE levenshtein(a.c_name, b.c_name) <= 2),
       edges AS (SELECT id_a AS s, id_b AS d FROM p
                 UNION SELECT id_b, id_a FROM p),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS c_custkey, min(d) AS mn FROM reach GROUP BY s),
+      ${Fragments.sqlReachCompCtes(id = "c_custkey")},
       cl AS (SELECT r.c_custkey,
                     coalesce(least(c.mn, r.c_custkey), r.c_custkey) AS entity_id
              FROM rec r LEFT JOIN comp c USING (c_custkey)),
@@ -85,24 +83,16 @@ object Breadth11 {
     (s, dir) => {
       import graft.ext.Similarity
       val emb = Tables(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") % 100 === 0)
-      val exact = Similarity.bruteForceTopK(s, emb, queries,
+      val exact = Similarity.bruteForceTopK(s, emb, Fragments.annQueries(emb),
           "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"))
       val remb = emb.select(col("vec_id"),
         Similarity.opqRotate(col("embedding"), 64).as("embedding"))
       val approx = Similarity.pqTopK(s, remb,
-          remb.filter(col("vec_id") % 100 === 0),
-          remb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 5000),
+          Fragments.annQueries(remb), Fragments.pqCodebookRows(remb),
           "vec_id", "embedding", m = 8, k = 5)
         .select(col("query_id"), col("neighbor_id"))
-      exact
-        .join(approx.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall", round(col("n_hit").cast("double") / 5, 9))
-        .orderBy(col("query_id"))
+      Fragments.recallAt5(exact, approx)
     },
     Some(s"""
       WITH rsgn AS (SELECT list(CASE WHEN substr(md5('opq:' || j::VARCHAR), 1, 1) <= '7'
@@ -115,30 +105,16 @@ object Breadth11 {
                            THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END)
                      * ds[j+1] * embedding[j+1]::DOUBLE)) * 0.125::DOUBLE, 9)) AS embedding
                FROM embeddings, rsgn),
-      q0 AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-             WHERE vec_id % 100 = 0),
-      c0 AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      ep AS (SELECT query_id, neighbor_id, ${Extensions.sqlCos("qv", "cv")} AS sim
-             FROM q0, c0 WHERE query_id <> neighbor_id),
-      exact AS (SELECT query_id, neighbor_id FROM (
-                  SELECT query_id, neighbor_id,
-                         row_number() OVER (PARTITION BY query_id
-                           ORDER BY sim DESC, neighbor_id) AS rank
-                  FROM ep) WHERE rank <= 5),
-      ${Extensions.pqRecCtes("remb")},
+      ${Fragments.sqlExactPairsCtes("ep", "q0", "c0")},
+      ${Fragments.sqlRankCte("exact", "ep", 5)},
+      ${Fragments.pqRecCtes("remb")},
       rq AS (SELECT vec_id AS query_id, embedding AS qv FROM remb
              WHERE vec_id % 100 = 0),
       ap AS (SELECT query_id, rec.vec_id AS neighbor_id,
-                    ${Extensions.sqlCos("qv", "rec.embedding")} AS sim
+                    ${Fragments.sqlCos("qv", "rec.embedding")} AS sim
              FROM rq, rec WHERE query_id <> rec.vec_id),
-      approx AS (SELECT query_id, neighbor_id FROM (
-                   SELECT query_id, neighbor_id,
-                          row_number() OVER (PARTITION BY query_id
-                            ORDER BY sim DESC, neighbor_id) AS rank
-                   FROM ap) WHERE rank <= 5)
-      SELECT e.query_id,
-             sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-             round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / 5, 9) AS recall
+      ${Fragments.sqlRankCte("approx", "ap", 5)}
+      ${Fragments.RecallSelect}
       FROM exact e LEFT JOIN approx a USING (query_id, neighbor_id)
       GROUP BY e.query_id ORDER BY e.query_id
     """.trim))
@@ -208,17 +184,8 @@ object Breadth11 {
   val textPiiScrub = Q(
     "text_pii_scrub",
     (s, dir) => s.read.parquet(ensurePiiStats(s, dir)).orderBy(col("doc_id")),
-    Some("""
-      WITH dirty AS (SELECT doc_id, text ||
-          (CASE WHEN doc_id % 7 = 0
-                THEN ' contact user' || doc_id || '@example.com' ELSE '' END) ||
-          (CASE WHEN doc_id % 11 = 0
-                THEN ' call 555-01' || lpad((doc_id % 100)::VARCHAR, 2, '0')
-                     || '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END) ||
-          (CASE WHEN doc_id % 13 = 0
-                THEN ' host 10.0.' || (doc_id % 256) || '.' || ((doc_id * 7) % 256)
-                ELSE '' END) AS text
-        FROM documents),
+    Some(raw"""
+      WITH dirty AS (${Fragments.PiiDirtyDocs}),
       m AS (SELECT doc_id, text,
               len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}'))::BIGINT AS n_emails,
               len(regexp_extract_all(text, '[0-9]{3}-[0-9]{4}-[0-9]{4}'))::BIGINT AS n_phones,
@@ -591,7 +558,7 @@ object Breadth11 {
       // mass cancels in the compare)
       graft.ext.Dedup.rankedTokens(
         graft.ext.Dedup.withShingles(
-          Extensions.augmentedDocs(s, dir, perturb = true)
+          Fragments.augmentedDocs(s, dir, perturb = true)
             .filter(graft.ext.Dedup.hash32(col("doc_id").cast("string")) % 2 === 0),
           "text", k = 3)
           .withColumn("__shingles", expr(
@@ -607,8 +574,8 @@ object Breadth11 {
           threshold = 0.5)
         .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""
-      WITH ${Extensions.augCte(perturb = true)},
-      norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM aug
+      WITH ${Fragments.augCte(perturb = true)},
+      norm AS (SELECT doc_id, ${Fragments.NormW} AS w FROM aug
                WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 2 = 0),
       sh AS (SELECT doc_id,
                list_distinct(list_transform(range(len(w) - 2),
@@ -730,13 +697,8 @@ object Breadth11 {
     * the kept-block joins, the UNION dedups candidates BEFORE any
     * levenshtein — shared by both multi-pass oracles.
     */
-  private[queries] val erMultiPassCandCtes: String =
-    """r1 AS (SELECT *, right(c_name, 5) AS blk FROM allr),
-      b1 AS (SELECT blk FROM r1 GROUP BY blk HAVING count(*) <= 64),
-      k1 AS (SELECT r1.* FROM r1 JOIN b1 USING (blk)),
-      r2 AS (SELECT *, substring(c_name, 1, len(c_name) - 1) AS blk FROM allr),
-      b2 AS (SELECT blk FROM r2 GROUP BY blk HAVING count(*) <= 64),
-      k2 AS (SELECT r2.* FROM r2 JOIN b2 USING (blk)),
+  private[queries] def erMultiPassCandCtes: String =
+    s"""${Fragments.ErBlockCtes},
       cand AS (SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
                       a.c_name AS na, b.c_name AS nb
                FROM k1 a JOIN k1 b ON a.blk = b.blk AND a.c_custkey < b.c_custkey
@@ -748,35 +710,12 @@ object Breadth11 {
     "eval_er_quality",
     (s, dir) => {
       import graft.ext.EntityOps
-      val cust = Tables(s, dir, "customer").select(col("c_custkey"), col("c_name"))
       // propose from the ingest-staged block index (r17) — the verify
       // and the eval metrics stay live; the oracle replays the full
       // propose from raw records
       val pred = EntityOps.multiPassPairsFromIndex(
           s.read.parquet(ensureErBlocksD3(s, dir)), maxDist = 2)
-        .select(col("id_a"), col("id_b"), lit(1L).as("__p"))
-      val truth = cust.filter(col("c_custkey") % 10 === 0)
-          .select(col("c_custkey").as("id_a"), (col("c_custkey") + 200000L).as("id_b"))
-        .unionByName(cust.filter(col("c_custkey") % 10 === 5)
-          .select(col("c_custkey").as("id_a"), (col("c_custkey") + 400000L).as("id_b")))
-        .unionByName(cust.filter(col("c_custkey") % 10 === 2)
-          .select(col("c_custkey").as("id_a"), (col("c_custkey") + 600000L).as("id_b")))
-        .withColumn("__t", lit(1L))
-      pred.join(truth, Seq("id_a", "id_b"), "full_outer")
-        .withColumn("cls",
-          when(col("id_b") >= 600000L, "suffix_typo")
-            .when(col("id_b") >= 400000L, "transposition")
-            .when(col("id_b") >= 200000L, "deletion")
-            .otherwise("base_pair"))
-        .groupBy(col("cls"))
-        .agg(sum(coalesce(col("__t"), lit(0L))).as("n_truth"),
-          sum(coalesce(col("__p"), lit(0L))).as("n_pred"),
-          sum(when(col("__p").isNotNull && col("__t").isNotNull, 1L)
-            .otherwise(0L)).as("n_hit"))
-        .withColumn("precision", when(col("n_pred") > 0,
-          round(col("n_hit").cast("double") / col("n_pred"), 9)))
-        .withColumn("recall", when(col("n_truth") > 0,
-          round(col("n_hit").cast("double") / col("n_truth"), 9)))
+      Fragments.erClassMetrics(pred, Fragments.erTruth(s, dir))
         .orderBy(col("cls"))
     },
     Some(s"""
@@ -784,24 +723,12 @@ object Breadth11 {
       $erMultiPassCandCtes,
       pred AS (SELECT id_a, id_b, 1 AS p FROM cand
                WHERE levenshtein(na, nb) <= 2),
-      truth AS (SELECT c_custkey AS id_a, c_custkey + 200000 AS id_b, 1 AS t
-                FROM base WHERE c_custkey % 10 = 0
-                UNION ALL
-                SELECT c_custkey, c_custkey + 400000, 1
-                FROM base WHERE c_custkey % 10 = 5
-                UNION ALL
-                SELECT c_custkey, c_custkey + 600000, 1
-                FROM base WHERE c_custkey % 10 = 2),
+      ${Fragments.ErTruthCte},
       j AS (SELECT coalesce(pred.id_a, truth.id_a) AS id_a,
                    coalesce(pred.id_b, truth.id_b) AS id_b, p, t
             FROM pred FULL OUTER JOIN truth
               ON pred.id_a = truth.id_a AND pred.id_b = truth.id_b),
-      c AS (SELECT CASE WHEN id_b >= 600000 THEN 'suffix_typo'
-                        WHEN id_b >= 400000 THEN 'transposition'
-                        WHEN id_b >= 200000 THEN 'deletion'
-                        ELSE 'base_pair' END AS cls,
-                   coalesce(t, 0) AS t, coalesce(p, 0) AS p,
-                   CASE WHEN t = 1 AND p = 1 THEN 1 ELSE 0 END AS hit
+      c AS (SELECT ${Fragments.ErClassCols}
             FROM j),
       a AS (SELECT cls, sum(t)::BIGINT AS n_truth, sum(p)::BIGINT AS n_pred,
                    sum(hit)::BIGINT AS n_hit

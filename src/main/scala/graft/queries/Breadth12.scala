@@ -229,12 +229,8 @@ object Breadth12 {
       keep1 AS (SELECT min(doc_id) AS doc_id FROM aug
                 GROUP BY md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g'))),
       surv AS (SELECT aug.* FROM aug JOIN keep1 USING (doc_id)),
-      ${Extensions.minhashChainFrom("surv")},
-      edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s),
+      ${Fragments.minhashChainFrom("surv")},
+      ${Fragments.sqlComponentCtes("pairs")},
       cl AS (SELECT sv.doc_id,
                     coalesce(least(c.mn, sv.doc_id), sv.doc_id) AS cluster_id
              FROM surv sv LEFT JOIN comp c USING (doc_id)),

@@ -41,16 +41,12 @@ object Breadth13 {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, lang, text, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, lang, text, ${Fragments.NormW} AS w FROM documents),
       m AS (SELECT doc_id, lang, len(w)::BIGINT AS n_words,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHitsByLang()}::DOUBLE / len(w) AS stop_ratio
+              ${Fragments.sqlQualityFeatures(Fragments.sqlHitsByLang())}
             FROM n),
       q AS (SELECT doc_id, lang, n_words,
-              round(least(avg_word_len / 8.0, 1.0) * 0.4
-                    + least(stop_ratio * 5.0, 1.0) * 0.4
-                    + (1.0 - punct_ratio) * 0.2, 9) AS quality FROM m)
+              ${Fragments.QualityScore} AS quality FROM m)
       SELECT doc_id, lang, n_words, quality FROM q a
       WHERE NOT EXISTS (
         SELECT 1 FROM q b
@@ -73,7 +69,7 @@ object Breadth13 {
           col("ttr"), col("top_share"), col("herfindahl"))
         .orderBy(col("source")),
     Some(s"""
-      WITH n AS (SELECT source, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT source, ${Fragments.NormW} AS w FROM documents),
       tri AS (SELECT source,
                 unnest(list_transform(range(len(w) - 2),
                   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3])) AS tri
@@ -116,14 +112,7 @@ object Breadth13 {
         .orderBy(col("bucket"))
     },
     Some(s"""
-      WITH RECURSIVE ${Extensions.minhashPairsCtes},
-      edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s),
-      cl AS (SELECT a.doc_id, coalesce(least(c.mn, a.doc_id), a.doc_id) AS cluster_id
-             FROM aug a LEFT JOIN comp c USING (doc_id)),
+      WITH RECURSIVE ${Fragments.minhashClusterCtes},
       sz AS (SELECT cluster_id, count(*)::BIGINT AS sz FROM cl GROUP BY 1),
       b AS (SELECT sz, list_min(list_filter(
               [${(0 to 20).map(1L << _).mkString(", ")}],
@@ -209,7 +198,7 @@ object Breadth13 {
     "eval_rank_overlap",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") % 100 === 0)
+      val queries = Fragments.annQueries(emb)
       val exact = Similarity
         .bruteForceTopK(s, emb, queries, "vec_id", "embedding", k = RboK)
         .select(col("query_id"), col("neighbor_id"), col("rank").as("__re"))
@@ -236,39 +225,10 @@ object Breadth13 {
         .orderBy(col("query_id"))
     },
     Some(s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-                 WHERE vec_id % 100 = 0),
-      c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      ep AS (SELECT query_id, neighbor_id, ${Extensions.sqlCos("qv", "cv")} AS sim
-             FROM q, c WHERE query_id <> neighbor_id),
-      exact AS (SELECT query_id, neighbor_id, rank FROM (
-                  SELECT query_id, neighbor_id,
-                         row_number() OVER (PARTITION BY query_id
-                           ORDER BY sim DESC, neighbor_id) AS rank
-                  FROM ep) WHERE rank <= $RboK),
-      ${Extensions.sqlTrainedCentCtes},
-      corp_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t)
-        WHERE rn <= ${Extensions.ServingSpill}),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= ${Extensions.ServingNprobe}),
-      ap AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id,
-                    ${Extensions.sqlCos("qa.embedding", "ca.embedding")} AS sim
-             FROM q_a qa JOIN corp_a ca ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id),
-      approx AS (SELECT query_id, neighbor_id, rank FROM (
-                   SELECT query_id, neighbor_id,
-                          row_number() OVER (PARTITION BY query_id
-                            ORDER BY sim DESC, neighbor_id) AS rank
-                   FROM ap) WHERE rank <= $RboK),
+      WITH ${Fragments.sqlExactPairsCtes("ep")},
+      ${Fragments.sqlRankCte("exact", "ep", RboK, "query_id, neighbor_id, rank")},
+      ${Fragments.sqlServeApproxCtes(Extensions.ServingSpill, Extensions.ServingNprobe, RboK,
+          "query_id, neighbor_id, rank")},
       j AS (SELECT e.query_id,
               CASE WHEN a.neighbor_id IS NULL THEN NULL
                    ELSE CASE greatest(e.rank, a.rank)

@@ -140,7 +140,7 @@ object Breadth14 {
     Some {
       val grams = (1 to SpanW).map(j => s"w[i+$j]").mkString(" || ' ' || ")
       s"""
-      WITH n AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       sp AS (SELECT doc_id, unnest(list_transform(range(len(w) - ${SpanW - 1}),
                i -> ('0x' || substr(md5($grams), 1, 15))::BIGINT)) AS h
              FROM n WHERE len(w) >= $SpanW),

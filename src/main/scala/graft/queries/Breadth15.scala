@@ -34,22 +34,8 @@ object Breadth15 {
         .select(graft.ext.TextOps.words(col("text")).as("__w"))
         .localCheckpoint() // feeds the token counts AND the pair stream
       val toks = docs.select(explode(col("__w")).as("w")).filter(col("w") =!= "")
-      // ONE token pass (r17): vocab is referenced by BOTH marginal
-      // joins and the total, and the un-checkpointed plan re-exploded
-      // the corpus per reference (5 Generate nodes for 2 logical
-      // passes). Lazy checkpoint + count: the count materializes it
-      // before any other reference and doubles as the broadcast-budget
-      // probe (word-keyed shuffle joins are the 100 TB plan when the
-      // vocabulary outgrows the budget; the count decides, never a
-      // stats guess over a stats-free checkpointed frame).
       val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("__nw"))
-        .localCheckpoint(eager = false)
-      val smallVocab = vocab.count() <= 2000000L // ~30 B/row → ≤ 60 MB
-      def vocabSide(d: org.apache.spark.sql.DataFrame) =
-        if (smallVocab) broadcast(d) else d.hint("shuffle_hash")
-      // total tokens = sum of the per-word counts — same value as a
-      // count over the token stream, no second explode pass
-      val totals = vocab.agg(sum(col("__nw")).cast("long").as("__n"))
+      val totals = toks.agg(count(lit(1)).as("__n"))
       // size >= 2 guard: Spark's sequence(0, -1) DESCENDS on a
       // one-word doc instead of returning empty (DuckDB's range does)
       val pairs = docs.filter(size(col("__w")) >= 2).select(explode(expr(
@@ -63,16 +49,10 @@ object Breadth15 {
         .groupBy(col("word_a"), col("word_b"))
         .agg(count(lit(1)).as("n_ab"))
         .filter(col("n_ab") >= 2)
-        // eager: referenced by the total AND the join chain before any
-        // action (the lazy-checkpoint safety rule) — the pair explode +
-        // count shuffle must run once, not twice
-        .localCheckpoint()
       val totalPairs = pairs.agg(sum(col("n_ab")).as("__p"))
       pairs
-        .join(vocabSide(vocab.select(col("w").as("word_a"),
-          col("__nw").as("__na"))), "word_a")
-        .join(vocabSide(vocab.select(col("w").as("word_b"),
-          col("__nw").as("__nb"))), "word_b")
+        .join(vocab.select(col("w").as("word_a"), col("__nw").as("__na")), "word_a")
+        .join(vocab.select(col("w").as("word_b"), col("__nw").as("__nb")), "word_b")
         .crossJoin(broadcast(totals))
         .crossJoin(broadcast(totalPairs))
         .withColumn("lift",
@@ -84,7 +64,7 @@ object Breadth15 {
         .orderBy(col("word_a"), col("word_b"))
     },
     Some(s"""
-      WITH n AS (SELECT ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT ${Fragments.NormW} AS w FROM documents),
       toks AS (SELECT unnest(w) AS t FROM n),
       tk AS (SELECT t FROM toks WHERE t <> ''),
       vocab AS (SELECT t AS w, count(*)::BIGINT AS nw FROM tk GROUP BY 1),

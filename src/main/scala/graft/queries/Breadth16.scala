@@ -24,12 +24,8 @@ object Breadth16 {
              FROM nodes CROSS JOIN sh$i LEFT JOIN hr$i ON node = src)"""
     }.mkString(",\n      ")
     s"""
-      WITH edges AS (SELECT DISTINCT c_nationkey::BIGINT AS src, s_nationkey::BIGINT AS dst
-                     FROM customer JOIN orders ON c_custkey = o_custkey
-                     JOIN lineitem ON l_orderkey = o_orderkey
-                     JOIN supplier ON l_suppkey = s_suppkey),
-      nodes AS (SELECT DISTINCT node FROM
-                  (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
+      WITH ${Fragments.TradeEdgesCte},
+      ${Fragments.NodesCte},
       h0 AS (SELECT node, 1.0::DOUBLE AS hub FROM nodes),
       $rounds
       SELECT node, hub, auth FROM h$iters JOIN a$iters USING (node)
@@ -48,15 +44,7 @@ object Breadth16 {
   val graphHits = Q(
     "graph_hits",
     (s, dir) => {
-      val edges = Tables(s, dir, "customer")
-        .join(Tables(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(Tables(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").cast("long").as("src"),
-          col("s_nationkey").cast("long").as("dst"))
-        .distinct()
-        .localCheckpoint()
-      graft.ext.GraphOps.hits(edges, iters = 3).orderBy(col("node"))
+      graft.ext.GraphOps.hits(Fragments.tradeEdges(s, dir), iters = 3).orderBy(col("node"))
     },
     Some(hitsSql(3)))
 

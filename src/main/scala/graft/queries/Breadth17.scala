@@ -50,19 +50,13 @@ object Breadth17 {
         .orderBy(col("lang"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, lang, text, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, lang, text, ${Fragments.NormW} AS w FROM documents),
       m AS (SELECT doc_id, lang,
               len(w)::BIGINT AS n_words,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
+              ${Fragments.sqlQualityFeatures(Fragments.sqlHits(TextOps.StopEn))}
             FROM n),
       l AS (SELECT lang,
-              2.0 * least(stop_ratio * 5.0, 1.0)
-                  + 1.5 * least(avg_word_len / 8.0, 1.0)
-                  - 3.0 * punct_ratio
-                  + 0.5 * least(n_words / 200.0, 1.0)
-                  - 1.2 AS logit
+              ${Fragments.ModelLogit} AS logit
             FROM m),
       pred AS (SELECT lang,
                  CASE WHEN round(1.0 / (1.0 + exp(-logit)), 9) >= 0.5
@@ -111,7 +105,7 @@ object Breadth17 {
         .orderBy(col("doc_id"), col("feature_idx"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       tk AS (SELECT doc_id, unnest(w) AS t FROM n),
       h AS (SELECT doc_id, ('0x' || substr(md5(t), 1, 8))::BIGINT AS hv
             FROM tk WHERE t <> ''),

@@ -3,7 +3,6 @@ package graft.queries
 import graft.etl.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Round-11 tenth wave: linear-interpolation gap fill (the resample
   * mode q20's forward-fill doesn't cover) and the nearest-either-side
@@ -25,14 +24,7 @@ object Breadth19 {
   val q67ResampleInterp = Q(
     "q67_resample_interp",
     (s, dir) => {
-      val ev = Tables(s, dir, "events").filter(col("user_id") < 5)
-      val bounds = ev.groupBy(col("user_id"))
-        .agg(date_trunc("minute", min(col("ts"))).as("t0"),
-          date_trunc("minute", max(col("ts"))).as("t1"))
-      val grid = bounds.select(col("user_id"),
-        explode(sequence(col("t0"), col("t1"), expr("interval 1 minute"))).as("m"))
-      val agg = ev.groupBy(col("user_id"), date_trunc("minute", col("ts")).as("m"))
-        .agg(sum(col("value").cast(DecimalType(18, 3))).cast("double").as("v"))
+      val (grid, agg) = Fragments.minuteGrid(s, dir)
       val wPrev = Window.partitionBy(col("user_id")).orderBy(col("m"))
         .rowsBetween(Window.unboundedPreceding, -1)
       // "next non-null" via the REVERSED running frame, never
@@ -67,14 +59,8 @@ object Breadth19 {
         .select(col("user_id"), col("m"), col("v_interp"))
         .orderBy(col("user_id"), col("m"))
     },
-    Some("""
-      WITH b AS (SELECT user_id, date_trunc('minute', min(ts)) AS t0,
-                        date_trunc('minute', max(ts)) AS t1
-                 FROM events WHERE user_id < 5 GROUP BY user_id),
-      grid AS (SELECT user_id, unnest(generate_series(t0, t1, INTERVAL 1 MINUTE)) AS m FROM b),
-      agg AS (SELECT user_id, date_trunc('minute', ts) AS m,
-                     CAST(sum(CAST(value AS DECIMAL(18,3))) AS DOUBLE) AS v
-              FROM events WHERE user_id < 5 GROUP BY 1, 2),
+    Some(s"""
+      WITH ${Fragments.MinuteGridCtes},
       w AS (SELECT g.user_id, g.m, a.v,
               last_value(a.v IGNORE NULLS) OVER (
                 PARTITION BY g.user_id ORDER BY g.m

@@ -183,8 +183,7 @@ object Breadth2 {
   val t8Math = Q(
     "t8_math_funcs",
     (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .filter(col("l_orderkey") < 5000)
+      Fragments.lineitemHead(s, dir)
         .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
           floor(col("l_extendedprice")).cast("long").as("fl"),
           ceil(col("l_extendedprice")).cast("long").as("ce"),
@@ -198,7 +197,7 @@ object Breadth2 {
           greatest(col("l_tax"), col("l_discount")).as("gr"),
           least(col("l_tax"), col("l_discount")).as("ls"))
         .orderBy(col("l_orderkey"), col("l_linenumber")),
-    Some("""
+    Some(s"""
       SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
              floor(l_extendedprice)::BIGINT AS fl,
              ceil(l_extendedprice)::BIGINT AS ce,
@@ -211,8 +210,7 @@ object Breadth2 {
              (l_orderkey % 7)::BIGINT AS md,
              greatest(l_tax, l_discount) AS gr,
              least(l_tax, l_discount) AS ls
-      FROM lineitem WHERE l_orderkey < 5000
-      ORDER BY l_orderkey, l_linenumber
+      ${Fragments.LineitemHeadFrom}
     """.trim))
 
   /** EXISTS / NOT EXISTS subqueries — Catalyst decorrelates into
@@ -321,14 +319,7 @@ object Breadth2 {
   val q20Resample = Q(
     "q20_resample_ffill",
     (s, dir) => {
-      val ev = Tables(s, dir, "events").filter(col("user_id") < 5)
-      val bounds = ev.groupBy(col("user_id"))
-        .agg(date_trunc("minute", min(col("ts"))).as("t0"),
-          date_trunc("minute", max(col("ts"))).as("t1"))
-      val grid = bounds.select(col("user_id"),
-        explode(sequence(col("t0"), col("t1"), expr("interval 1 minute"))).as("m"))
-      val agg = ev.groupBy(col("user_id"), date_trunc("minute", col("ts")).as("m"))
-        .agg(sum(col("value").cast(DecimalType(18, 3))).cast("double").as("v"))
+      val (grid, agg) = Fragments.minuteGrid(s, dir)
       val w = Window.partitionBy(col("user_id")).orderBy(col("m"))
         .rowsBetween(Window.unboundedPreceding, -1)
       grid.join(agg, Seq("user_id", "m"), "left")
@@ -336,14 +327,8 @@ object Breadth2 {
           coalesce(col("v"), last(col("v"), ignoreNulls = true).over(w)).as("v_filled"))
         .orderBy(col("user_id"), col("m"))
     },
-    Some("""
-      WITH b AS (SELECT user_id, date_trunc('minute', min(ts)) AS t0,
-                        date_trunc('minute', max(ts)) AS t1
-                 FROM events WHERE user_id < 5 GROUP BY user_id),
-      grid AS (SELECT user_id, unnest(generate_series(t0, t1, INTERVAL 1 MINUTE)) AS m FROM b),
-      agg AS (SELECT user_id, date_trunc('minute', ts) AS m,
-                     CAST(sum(CAST(value AS DECIMAL(18,3))) AS DOUBLE) AS v
-              FROM events WHERE user_id < 5 GROUP BY 1, 2)
+    Some(s"""
+      WITH ${Fragments.MinuteGridCtes}
       SELECT g.user_id, g.m,
              coalesce(a.v, last_value(a.v IGNORE NULLS) OVER (
                PARTITION BY g.user_id ORDER BY g.m
@@ -484,8 +469,7 @@ object Breadth2 {
   val t9Conditional = Q(
     "t9_conditional_funcs",
     (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .filter(col("l_orderkey") < 5000)
+      Fragments.lineitemHead(s, dir)
         .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
           coalesce(nullif(col("l_returnflag"), lit("N")), col("l_linestatus")).as("flag_or_status"),
           when(col("l_quantity") > 25, "big").otherwise("small").as("size_class"),
@@ -493,15 +477,14 @@ object Breadth2 {
             .when(col("l_discount") < 0.05, "low")
             .otherwise("high").as("discount_band"))
         .orderBy(col("l_orderkey"), col("l_linenumber")),
-    Some("""
+    Some(s"""
       SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
              coalesce(nullif(l_returnflag, 'N'), l_linestatus) AS flag_or_status,
              CASE WHEN l_quantity > 25 THEN 'big' ELSE 'small' END AS size_class,
              CASE WHEN l_discount = 0 THEN NULL
                   WHEN l_discount < 0.05 THEN 'low'
                   ELSE 'high' END AS discount_band
-      FROM lineitem WHERE l_orderkey < 5000
-      ORDER BY l_orderkey, l_linenumber
+      ${Fragments.LineitemHeadFrom}
     """.trim))
 
   /** Cross join of the two small dims (the only join shape not yet in
@@ -525,20 +508,18 @@ object Breadth2 {
   val t10NullSafeEq = Q(
     "t10_null_safe_eq",
     (s, dir) =>
-      Tables(s, dir, "lineitem")
-        .filter(col("l_orderkey") < 5000)
+      Fragments.lineitemHead(s, dir)
         .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
           nullif(col("l_returnflag"), lit("N")).as("flag_n"))
         .withColumn("same_as_null", (col("flag_n") <=> lit(null)).cast("long"))
         .withColumn("same_as_a", (col("flag_n") <=> lit("A")).cast("long"))
         .orderBy(col("l_orderkey"), col("l_linenumber")),
-    Some("""
+    Some(s"""
       SELECT l_orderkey, l_linenumber::BIGINT AS l_linenumber,
              nullif(l_returnflag, 'N') AS flag_n,
              (nullif(l_returnflag, 'N') IS NOT DISTINCT FROM NULL)::BIGINT AS same_as_null,
              (nullif(l_returnflag, 'N') IS NOT DISTINCT FROM 'A')::BIGINT AS same_as_a
-      FROM lineitem WHERE l_orderkey < 5000
-      ORDER BY l_orderkey, l_linenumber
+      ${Fragments.LineitemHeadFrom}
     """.trim))
 
   /** Deterministic pagination: ORDER BY with LIMIT + OFFSET (page 3 of
@@ -636,12 +617,7 @@ object Breadth2 {
         FROM events_var ORDER BY event_id
       """)
     },
-    Some("""
-      SELECT event_id,
-             json_extract_string(props, '$.k') AS k_str,
-             TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_num
-      FROM events ORDER BY event_id
-    """.trim))
+    Some(Fragments.JsonKOracle))
 
   /** GROUP BY ... HAVING over an aggregate predicate (post-aggregation
     * filter — Catalyst plans it as Filter over Aggregate, identical to

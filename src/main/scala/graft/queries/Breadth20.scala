@@ -60,7 +60,7 @@ object Breadth20 {
     "dedup_incremental_pairs",
     (s, dir) => {
       import graft.ext.Dedup
-      val docs = Extensions.augmentedDocs(s, dir, perturb = true)
+      val docs = Fragments.augmentedDocs(s, dir, perturb = true)
       val split = Dedup.hash32(col("doc_id").cast("string")) % 2
       val s1 = Dedup.buildBandIndex(docs.filter(split === 0), "doc_id", "text")
         .localCheckpoint()
@@ -72,7 +72,7 @@ object Breadth20 {
         .orderBy(col("doc_a"), col("doc_b"))
     },
     Some(s"""
-      WITH ${Extensions.minhashPairsCtes}
+      WITH ${Fragments.minhashPairsCtes}
       SELECT doc_a, doc_b FROM pairs ORDER BY doc_a, doc_b
     """.trim))
 
@@ -104,7 +104,7 @@ object Breadth20 {
       val emb = Tables(s, dir, "embeddings")
       val idxDir = Extensions.ensureIvfInt8Index(s, dir)
       graft.ext.Similarity.serveQuantizedIvfTwoLevel(s, s.read.parquet(idxDir),
-          emb.filter(col("vec_id") % 100 === 0),
+          Fragments.annQueries(emb),
           Extensions.servingCentroids(s, dir),
           "vec_id", "embedding", "cid", "cv", k = 5,
           superMod = 29, superResidue = 7, nsuper = 3,
@@ -112,48 +112,14 @@ object Breadth20 {
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
-      WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
-                  FROM embeddings),
-      cq AS (SELECT vec_id, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
-             FROM qn),
-      rec AS (SELECT vec_id, list_transform(range(len(codes)), i -> codes[i+1] * s) AS embedding
-              FROM cq),
-      ${Extensions.sqlTrainedCentCtes},
-      sup AS (SELECT cid, cv FROM cent WHERE cid % 29 = 7),
-      c2s AS (SELECT cid, cv, super FROM (
-          SELECT c.cid, c.cv, s.cid AS super,
-                 row_number() OVER (PARTITION BY c.cid
-                   ORDER BY ${Extensions.sqlCos("c.cv", "s.cv")} DESC, s.cid) AS rn
-          FROM cent c, sup s) WHERE rn = 1),
-      q2s AS (SELECT vec_id, embedding, super FROM (
-          SELECT e.vec_id, e.embedding, s.cid AS super,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "s.cv")} DESC, s.cid) AS rn
-          FROM embeddings e, sup s WHERE e.vec_id % 100 = 0) WHERE rn <= 3),
-      q_a AS (SELECT vec_id, embedding, cid FROM (
-          SELECT q.vec_id, q.embedding, c.cid,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY ${Extensions.sqlCos("q.embedding", "c.cv")} DESC, c.cid) AS rn
-          FROM q2s q JOIN c2s c ON q.super = c.super)
-        WHERE rn <= ${Extensions.ServingNprobe}),
-      corp_a AS (SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM rec e, cent t) WHERE rn <= ${Extensions.ServingSpill}),
-      p AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ${Extensions.sqlCos("q.embedding", "c.embedding")} AS sim
-            FROM q_a q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      WITH ${Fragments.sqlInt8RecCtes},
+      ${Fragments.sqlTrainedCentCtes},
+      ${Fragments.sqlSuperCtes},
+      ${Fragments.sqlQuerySupersCte},
+      ${Fragments.sqlRoutedProbeCte("q_a", Extensions.ServingNprobe)},
+      ${Fragments.sqlRecCorpCte(Extensions.ServingSpill)},
+      ${Fragments.sqlProbePairsCte(distinct = true)}
+      ${Fragments.sqlTopK("p", 5)}
     """.trim))
 
   /** Winnowing fingerprints per document —
@@ -175,14 +141,7 @@ object Breadth20 {
           s.read.parquet(ensureWinnowPostings(s, dir)), "doc_id")
         .orderBy(col("doc_id")),
     Some(s"""
-      WITH ${Extensions.augCte(perturb = true)},
-      n AS (SELECT doc_id, ${Extensions.NormW} AS w FROM aug),
-      g AS (SELECT doc_id, list_transform(range(len(w) - 3),
-              i -> ('0x' || substr(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]), 1, 15))::BIGINT) AS hs
-            FROM n WHERE len(w) >= 7),
-      f AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(hs) - 3),
-              i -> list_min(hs[i+1:i+4])))) AS fp
-            FROM g),
+      WITH ${Fragments.sqlWinnowFpCtes},
       d AS (SELECT fp, count(DISTINCT doc_id)::BIGINT AS nd FROM f GROUP BY fp)
       SELECT doc_id, count(*)::BIGINT AS n_fps,
              sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_shared,
@@ -208,47 +167,25 @@ object Breadth20 {
       val emb = Tables(s, dir, "embeddings")
       val idxDir = Extensions.ensureIvfInt8Index(s, dir)
       graft.ext.Similarity.probeRecallCurve(s, s.read.parquet(idxDir), emb,
-          emb.filter(col("vec_id") % 100 === 0),
+          Fragments.annQueries(emb),
           Extensions.servingCentroids(s, dir),
           "vec_id", "embedding", "cid", "cv", k = 5, tiers = ProbeTiers)
         .orderBy(col("nprobe"))
     },
     Some(s"""
-      WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
-                  FROM embeddings),
-      cq AS (SELECT vec_id, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
-             FROM qn),
-      rec AS (SELECT vec_id, list_transform(range(len(codes)), i -> codes[i+1] * s) AS embedding
-              FROM cq),
-      ${Extensions.sqlTrainedCentCtes},
-      corp_a AS (SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM rec e, cent t) WHERE rn <= ${Extensions.ServingSpill}),
+      WITH ${Fragments.sqlInt8IndexCtes(Extensions.ServingSpill)},
       qp AS (SELECT vec_id, embedding, cid, rn AS prank FROM (
           SELECT e.vec_id, e.embedding, t.cid,
                  row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
+                   ORDER BY ${Fragments.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
           FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
         WHERE rn <= ${ProbeTiers.max}),
       cand AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                       min(q.prank)::BIGINT AS minrank,
-                      min(${Extensions.sqlCos("q.embedding", "c.embedding")}) AS sim
+                      min(${Fragments.sqlCos("q.embedding", "c.embedding")}) AS sim
                FROM qp q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id
                GROUP BY q.vec_id, c.vec_id),
-      tq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 100 = 0),
-      tc AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      truth AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY ${Extensions.sqlCos("qv", "cv")} DESC, neighbor_id) AS rank
-          FROM tq, tc WHERE query_id <> neighbor_id) WHERE rank <= 5),
+      ${Fragments.sqlTruthTop5Ctes},
       tiers AS (SELECT unnest([${ProbeTiers.mkString(", ")}])::BIGINT AS nprobe),
       top AS (SELECT nprobe, query_id, neighbor_id FROM (
           SELECT t.nprobe, query_id, neighbor_id,
@@ -273,20 +210,15 @@ object Breadth20 {
     */
   private def pprSql(iters: Int): String = {
     val rounds = (1 to iters).map { i =>
-      s"""c$i AS (SELECT dst, CAST(sum(CAST(round(rank / outdeg, 12) AS DECIMAL(38,12))) AS DOUBLE) AS inr
-             FROM edges JOIN r${i - 1} ON src = node JOIN outdeg USING (src) GROUP BY dst),
+      s"""${Fragments.sqlPageRankInflowCte(i)},
       r$i AS (SELECT node, round(CASE WHEN s IS NOT NULL
                      THEN (1.0::DOUBLE - 0.85::DOUBLE) / ns ELSE 0.0::DOUBLE END
                    + 0.85::DOUBLE * coalesce(inr, 0.0::DOUBLE), 12) AS rank
              FROM flagged CROSS JOIN sn LEFT JOIN c$i ON node = dst)"""
     }.mkString(",\n      ")
     s"""
-      WITH edges AS (SELECT DISTINCT c_nationkey::BIGINT AS src, s_nationkey::BIGINT AS dst
-                     FROM customer JOIN orders ON c_custkey = o_custkey
-                     JOIN lineitem ON l_orderkey = o_orderkey
-                     JOIN supplier ON l_suppkey = s_suppkey),
-      nodes AS (SELECT DISTINCT node FROM
-                  (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
+      WITH ${Fragments.TradeEdgesCte},
+      ${Fragments.NodesCte},
       seeds AS (SELECT n_nationkey::BIGINT AS node FROM nation
                 JOIN region ON n_regionkey = r_regionkey
                 WHERE r_name = 'ASIA'),
@@ -315,14 +247,7 @@ object Breadth20 {
   val graphPpr = Q(
     "graph_ppr",
     (s, dir) => {
-      val edges = Tables(s, dir, "customer")
-        .join(Tables(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(Tables(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").cast("long").as("src"),
-          col("s_nationkey").cast("long").as("dst"))
-        .distinct()
-        .localCheckpoint()
+      val edges = Fragments.tradeEdges(s, dir)
       val seeds = Tables(s, dir, "nation")
         .join(Tables(s, dir, "region"),
           col("n_regionkey") === col("r_regionkey"))
@@ -348,18 +273,8 @@ object Breadth20 {
       graft.ext.Multimodal.silenceSegments(
           Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("seg_start")),
-    Some("""
-      WITH f AS (SELECT doc_id, text,
-                        unnest(range((length(text) + 63) // 64)) AS frame_no
-                 FROM documents WHERE length(text) > 0),
-      c AS (SELECT doc_id, frame_no,
-                   substring(text, (frame_no * 64 + 1)::INT, 64) AS chunk
-            FROM f),
-      e AS (SELECT doc_id, frame_no, length(chunk)::BIGINT AS n_samples,
-                   list_sum(list_transform(range(1, length(chunk) + 1),
-                     p -> ord(substring(chunk, p::INT, 1)) *
-                          ord(substring(chunk, p::INT, 1))))::BIGINT AS energy
-            FROM c),
+    Some(s"""
+      WITH ${Fragments.FrameEnergyCtes},
       r AS (SELECT doc_id, frame_no,
                    round(sqrt(energy::DOUBLE / n_samples), 9) AS rms
             FROM e WHERE round(sqrt(energy::DOUBLE / n_samples), 9) < 98.0),
@@ -386,7 +301,7 @@ object Breadth20 {
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "dedup_band_index_aug") { d =>
       graft.ext.Dedup.buildBandIndex(
-        Extensions.augmentedDocs(s, dir, perturb = true), "doc_id", "text")
+        Fragments.augmentedDocs(s, dir, perturb = true), "doc_id", "text")
         .write.parquet(d)
     }
 
@@ -404,7 +319,7 @@ object Breadth20 {
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "winnow_postings_aug") { d =>
       graft.ext.TextOps.winnowPostings(
-        Extensions.augmentedDocs(s, dir, perturb = true), "doc_id", "text",
+        Fragments.augmentedDocs(s, dir, perturb = true), "doc_id", "text",
         k = 4, w = 4).write.parquet(d)
     }
 
@@ -420,7 +335,7 @@ object Breadth20 {
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "shingle_sets_aug") { d =>
       graft.ext.Dedup.shingleSets(
-        Extensions.augmentedDocs(s, dir, perturb = true), "doc_id", "text",
+        Fragments.augmentedDocs(s, dir, perturb = true), "doc_id", "text",
         k = 3).write.parquet(d)
     }
 
@@ -437,7 +352,7 @@ object Breadth20 {
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "simhash_aug") { d =>
       graft.ext.Dedup.simhash32(
-        Extensions.augmentedDocs(s, dir, perturb = true), "doc_id", "text")
+        Fragments.augmentedDocs(s, dir, perturb = true), "doc_id", "text")
         .write.parquet(d)
     }
 
@@ -453,7 +368,7 @@ object Breadth20 {
     val idx = ensureAugBandIndex(s, dir)
     graft.etl.LayoutOps.ensureRunDir(s, dir, "dedup_clusters_aug") { d =>
       graft.ext.Dedup.clusterAssignmentStar(
-        Extensions.augmentedDocs(s, dir, perturb = true).select(col("doc_id")),
+        Fragments.augmentedDocs(s, dir, perturb = true).select(col("doc_id")),
         graft.ext.Dedup.indexCandidatePairs(s.read.parquet(idx), "doc_id"),
         "doc_id").write.parquet(d)
     }
@@ -474,7 +389,7 @@ object Breadth20 {
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "doc_stats_aug") { d =>
       import graft.ext.{Dedup, TextOps}
-      val docs = Extensions.augmentedDocs(s, dir, perturb = true)
+      val docs = Fragments.augmentedDocs(s, dir, perturb = true)
       val keep = TextOps.gopherRulesByLang(docs, "doc_id", "text", "lang")
         .select(col("doc_id"), col("keep").as("gopher_keep"))
       val qual = TextOps.withQuality(docs, "text")
@@ -581,13 +496,13 @@ object Breadth20 {
         graft.ext.Dedup.indexCandidatePairs(
           s.read.parquet(ensureAugBandIndex(s, dir)), "doc_id")),
     Some(s"""
-      WITH RECURSIVE ${Extensions.minhashPairsCtes},
-      gn AS (SELECT doc_id, lang, text, ${Extensions.NormW} AS w,
+      WITH RECURSIVE ${Fragments.minhashPairsCtes},
+      gn AS (SELECT doc_id, lang, text, ${Fragments.NormW} AS w,
                len(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS nc
              FROM aug),
       gb AS (SELECT doc_id, text, len(w)::BIGINT AS n_words,
                (nc - (len(w) - 1))::BIGINT AS n_word_chars,
-               ${Extensions.sqlStopDistinctByLang()} AS n_stop
+               ${Fragments.sqlStopDistinctByLang()} AS n_stop
              FROM gn),
       s2 AS (SELECT doc_id, text FROM gb
              WHERE n_words >= 30 AND n_words <= 100000
@@ -601,22 +516,18 @@ object Breadth20 {
                 UNION SELECT doc_b, doc_a FROM pairs
                 WHERE doc_a IN (SELECT doc_id FROM s3)
                   AND doc_b IN (SELECT doc_id FROM s3)),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s),
+      ${Fragments.sqlReachCompCtes()},
       s4 AS (SELECT s3.doc_id FROM s3 LEFT JOIN comp USING (doc_id)
              WHERE coalesce(least(mn, doc_id), doc_id) = doc_id),
-      qn AS (SELECT doc_id, text, ${Extensions.NormW} AS w FROM aug),
+      qn AS (SELECT doc_id, text, ${Fragments.NormW} AS w FROM aug),
       qm AS (SELECT doc_id,
                len(w)::BIGINT AS n_words,
-               length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-               length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-               ${Extensions.sqlHits(graft.ext.TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
+               ${Fragments.AvgWordLen},
+               ${Fragments.PunctRatio},
+               ${Fragments.sqlStopRatio(Fragments.sqlHits(graft.ext.TextOps.StopEn))}
              FROM qn),
       qs AS (SELECT doc_id, n_words,
-               round(least(avg_word_len / 8.0, 1.0) * 0.4
-                     + least(stop_ratio * 5.0, 1.0) * 0.4
-                     + (1.0 - punct_ratio) * 0.2, 9) AS quality
+               ${Fragments.QualityScore} AS quality
              FROM qm),
       s5 AS (SELECT s4.doc_id FROM s4 JOIN qs USING (doc_id)
              WHERE quality >= 0.5 AND n_words >= 10),

@@ -14,13 +14,8 @@ object Breadth21 {
     * UNION ALL + pair GROUP BY so n_passes survives (a pair appears at
     * most once per pass — each record is in exactly one block per key).
     */
-  private[queries] val erCandPassesCtes: String =
-    """r1 AS (SELECT *, right(c_name, 5) AS blk FROM allr),
-      b1 AS (SELECT blk FROM r1 GROUP BY blk HAVING count(*) <= 64),
-      k1 AS (SELECT r1.* FROM r1 JOIN b1 USING (blk)),
-      r2 AS (SELECT *, substring(c_name, 1, len(c_name) - 1) AS blk FROM allr),
-      b2 AS (SELECT blk FROM r2 GROUP BY blk HAVING count(*) <= 64),
-      k2 AS (SELECT r2.* FROM r2 JOIN b2 USING (blk)),
+  private[queries] def erCandPassesCtes: String =
+    s"""${Fragments.ErBlockCtes},
       candp AS (SELECT id_a, id_b, na, nb, count(*)::BIGINT AS n_passes FROM (
           SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
                  a.c_name AS na, b.c_name AS nb
@@ -58,40 +53,10 @@ object Breadth21 {
       ORDER BY id_a, id_b
     """.trim))
 
-  /** The injected ground-truth pairs of the er fixture (each dirty id
-    * encodes its clean source) — shared by the frontier tiers.
-    */
-  private def erTruth(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val cust = Tables(s, dir, "customer").select(col("c_custkey"))
-    cust.filter(col("c_custkey") % 10 === 0)
-        .select(col("c_custkey").as("id_a"), (col("c_custkey") + 200000L).as("id_b"))
-      .unionByName(cust.filter(col("c_custkey") % 10 === 5)
-        .select(col("c_custkey").as("id_a"), (col("c_custkey") + 400000L).as("id_b")))
-      .unionByName(cust.filter(col("c_custkey") % 10 === 2)
-        .select(col("c_custkey").as("id_a"), (col("c_custkey") + 600000L).as("id_b")))
-      .withColumn("__t", lit(1L))
-  }
-
   private def erTierMetrics(tier: String,
       pred: org.apache.spark.sql.DataFrame,
       truth: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    pred.select(col("id_a"), col("id_b"), lit(1L).as("__p"))
-      .join(truth, Seq("id_a", "id_b"), "full_outer")
-      .withColumn("cls",
-        when(col("id_b") >= 600000L, "suffix_typo")
-          .when(col("id_b") >= 400000L, "transposition")
-          .when(col("id_b") >= 200000L, "deletion")
-          .otherwise("base_pair"))
-      .groupBy(col("cls"))
-      .agg(sum(coalesce(col("__t"), lit(0L))).as("n_truth"),
-        sum(coalesce(col("__p"), lit(0L))).as("n_pred"),
-        sum(when(col("__p").isNotNull && col("__t").isNotNull, 1L)
-          .otherwise(0L)).as("n_hit"))
-      .withColumn("precision", when(col("n_pred") > 0,
-        round(col("n_hit").cast("double") / col("n_pred"), 9)))
-      .withColumn("recall", when(col("n_truth") > 0,
-        round(col("n_hit").cast("double") / col("n_truth"), 9)))
+    Fragments.erClassMetrics(pred, truth)
       .select(lit(tier).as("tier"), col("cls"), col("n_truth"),
         col("n_pred"), col("n_hit"), col("precision"), col("recall"))
 
@@ -100,12 +65,7 @@ object Breadth21 {
                    coalesce(p.id_b, t.id_b) AS id_b, p.p, t.t
             FROM $predCte p FULL OUTER JOIN truth t
               ON p.id_a = t.id_a AND p.id_b = t.id_b),
-      c_$tier AS (SELECT CASE WHEN id_b >= 600000 THEN 'suffix_typo'
-                        WHEN id_b >= 400000 THEN 'transposition'
-                        WHEN id_b >= 200000 THEN 'deletion'
-                        ELSE 'base_pair' END AS cls,
-                   coalesce(t, 0) AS t, coalesce(p, 0) AS p,
-                   CASE WHEN t = 1 AND p = 1 THEN 1 ELSE 0 END AS hit
+      c_$tier AS (SELECT ${Fragments.ErClassCols}
             FROM j_$tier),
       a_$tier AS (SELECT '$tier' AS tier, cls, sum(t)::BIGINT AS n_truth,
                    sum(p)::BIGINT AS n_pred, sum(hit)::BIGINT AS n_hit
@@ -128,7 +88,7 @@ object Breadth21 {
   val evalErFrontier = Q(
     "eval_er_frontier",
     (s, dir) => {
-      val truth = erTruth(s, dir)
+      val truth = Fragments.erTruth(s, dir)
       // ONE propose serves BOTH tiers (r17): the recall-first tier is
       // the verified pairs-with-passes frame itself, the agreement tier
       // a filter on it — the live path ran the whole two-pass propose
@@ -150,14 +110,7 @@ object Breadth21 {
       pred_agree AS (SELECT id_a, id_b, 1 AS p FROM candp
                      WHERE levenshtein(na, nb) <= 2
                        AND (levenshtein(na, nb) <= 1 OR n_passes >= 2)),
-      truth AS (SELECT c_custkey AS id_a, c_custkey + 200000 AS id_b, 1 AS t
-                FROM base WHERE c_custkey % 10 = 0
-                UNION ALL
-                SELECT c_custkey, c_custkey + 400000, 1
-                FROM base WHERE c_custkey % 10 = 5
-                UNION ALL
-                SELECT c_custkey, c_custkey + 600000, 1
-                FROM base WHERE c_custkey % 10 = 2),
+      ${Fragments.ErTruthCte},
       ${erFrontierTierSql("two_pass_d2", "pred_base")},
       ${erFrontierTierSql("agree2_or_d1", "pred_agree")},
       u AS (SELECT * FROM a_two_pass_d2 UNION ALL SELECT * FROM a_agree2_or_d1)
@@ -189,7 +142,7 @@ object Breadth21 {
     (s, dir) => {
       import graft.ext.Similarity
       val emb = Tables(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") % 100 === 0)
+      val queries = Fragments.annQueries(emb)
       val idx = s.read.parquet(Extensions.ensureIvfInt8Index(s, dir))
       val cents = Extensions.servingCentroids(s, dir)
       val truth = s.read.parquet(Extensions.ensureAnnTruth(s, dir))
@@ -224,35 +177,10 @@ object Breadth21 {
         .orderBy(col("config"))
     },
     Some(s"""
-      WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
-                  FROM embeddings),
-      cq AS (SELECT vec_id, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
-             FROM qn),
-      rec AS (SELECT vec_id, list_transform(range(len(codes)), i -> codes[i+1] * s) AS embedding
-              FROM cq),
-      ${Extensions.sqlTrainedCentCtes},
-      corp_a AS (SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM rec e, cent t) WHERE rn <= ${Extensions.ServingSpill}),
-      sup AS (SELECT cid, cv FROM cent WHERE cid % 29 = 7),
-      c2s AS (SELECT cid, cv, super FROM (
-          SELECT c.cid, c.cv, s.cid AS super,
-                 row_number() OVER (PARTITION BY c.cid
-                   ORDER BY ${Extensions.sqlCos("c.cv", "s.cv")} DESC, s.cid) AS rn
-          FROM cent c, sup s) WHERE rn = 1),
+      WITH ${Fragments.sqlInt8IndexCtes(Extensions.ServingSpill)},
+      ${Fragments.sqlSuperCtes},
       ch AS (SELECT super, count(*)::BIGINT AS nch FROM c2s GROUP BY super),
-      q2s AS (SELECT vec_id, embedding, super FROM (
-          SELECT e.vec_id, e.embedding, s.cid AS super,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "s.cv")} DESC, s.cid) AS rn
-          FROM embeddings e, sup s WHERE e.vec_id % 100 = 0) WHERE rn <= 3),
+      ${Fragments.sqlQuerySupersCte},
       qcos AS (SELECT vec_id,
                  (SELECT count(*) FROM sup)::BIGINT + sum(nch) AS rc
                FROM q2s JOIN ch USING (super) GROUP BY vec_id),
@@ -260,39 +188,19 @@ object Breadth21 {
       qf AS (SELECT vec_id, embedding, cid FROM (
           SELECT e.vec_id, e.embedding, t.cid,
                  row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
+                   ORDER BY ${Fragments.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
           FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
         WHERE rn <= ${Extensions.ServingNprobe}),
       pflat AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ${Extensions.sqlCos("q.embedding", "c.embedding")} AS sim
+                   ${Fragments.sqlCos("q.embedding", "c.embedding")} AS sim
             FROM qf q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id),
-      predf AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY sim DESC, neighbor_id) AS rank
-          FROM pflat) WHERE rank <= 5),
-      qr AS (SELECT vec_id, embedding, cid FROM (
-          SELECT q.vec_id, q.embedding, c.cid,
-                 row_number() OVER (PARTITION BY q.vec_id
-                   ORDER BY ${Extensions.sqlCos("q.embedding", "c.cv")} DESC, c.cid) AS rn
-          FROM q2s q JOIN c2s c ON q.super = c.super)
-        WHERE rn <= ${Extensions.ServingNprobe}),
+      ${Fragments.sqlRankCte("predf", "pflat", 5)},
+      ${Fragments.sqlRoutedProbeCte("qr", Extensions.ServingNprobe)},
       prout AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ${Extensions.sqlCos("q.embedding", "c.embedding")} AS sim
+                   ${Fragments.sqlCos("q.embedding", "c.embedding")} AS sim
             FROM qr q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id),
-      predr AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY sim DESC, neighbor_id) AS rank
-          FROM prout) WHERE rank <= 5),
-      tq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-             WHERE vec_id % 100 = 0),
-      tc AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      truth AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY ${Extensions.sqlCos("qv", "cv")} DESC, neighbor_id) AS rank
-          FROM tq, tc WHERE query_id <> neighbor_id) WHERE rank <= 5),
+      ${Fragments.sqlRankCte("predr", "prout", 5)},
+      ${Fragments.sqlTruthTop5Ctes},
       nt AS (SELECT count(*)::BIGINT AS n_truth FROM truth),
       hf AS (SELECT count(*)::BIGINT AS n_hit
              FROM predf JOIN truth USING (query_id, neighbor_id)),
@@ -515,7 +423,7 @@ object Breadth21 {
     (s, dir) => {
       import graft.ext.Dedup
       graft.functions.VectorExpressions.register(s)
-      val docs = Extensions.augmentedDocs(s, dir, perturb = true)
+      val docs = Fragments.augmentedDocs(s, dir, perturb = true)
         // base id < 1000 bounds the budget within one id epoch; the
         // absolute doc_id < 200000 bound keeps it fixed even when a
         // grown corpus (ScaleSmoke's replica strides) adds new epochs
@@ -575,20 +483,11 @@ object Breadth21 {
         .orderBy(col("rows_per_band"))
     },
     Some(s"""
-      WITH ${Extensions.augCte(perturb = true)},
+      WITH ${Fragments.augCte(perturb = true)},
       samp AS (SELECT doc_id, text FROM aug
                WHERE ('0x' || substr(md5((doc_id % 100000)::VARCHAR), 1, 8))::BIGINT % 4 = 1
                  AND doc_id % 100000 < 1000 AND doc_id < 200000),
-      norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM samp),
-      sh AS (SELECT doc_id, w FROM norm WHERE len(w) >= 3),
-      hs AS (SELECT doc_id,
-               list_transform(range(len(w) - 2),
-                 i -> ('0x' || substr(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]), 1, 8))::BIGINT) AS hs
-             FROM sh),
-      sig AS (SELECT doc_id, [${graft.ext.Dedup.SeedsA.zip(graft.ext.Dedup.SeedsB)
-        .map { case (a, b) =>
-          s"list_min(list_transform(hs, h -> ($a * h + $b) % ${graft.ext.Dedup.HashPrime}))"
-        }.mkString(", ")}] AS sig FROM hs),
+      ${Fragments.minhashSigCtes("samp")},
       dh AS (SELECT doc_id, list_distinct(hs) AS ds FROM hs),
       tp AS (SELECT doc_a, doc_b FROM (
                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -623,14 +522,7 @@ object Breadth21 {
           "doc_id", minShared = 3, maxDf = 20)
         .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""
-      WITH ${Extensions.augCte(perturb = true)},
-      n AS (SELECT doc_id, ${Extensions.NormW} AS w FROM aug),
-      g AS (SELECT doc_id, list_transform(range(len(w) - 3),
-              i -> ('0x' || substr(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]), 1, 15))::BIGINT) AS hs
-            FROM n WHERE len(w) >= 7),
-      f AS (SELECT doc_id, unnest(list_distinct(list_transform(range(len(hs) - 3),
-              i -> list_min(hs[i+1:i+4])))) AS fp
-            FROM g),
+      WITH ${Fragments.sqlWinnowFpCtes},
       tot AS (SELECT doc_id, count(*)::BIGINT AS nf FROM f GROUP BY doc_id),
       d AS (SELECT fp, count(*)::BIGINT AS df FROM f GROUP BY fp),
       k AS (SELECT f.doc_id, f.fp FROM f JOIN d USING (fp)
@@ -656,7 +548,7 @@ object Breadth21 {
       p_$d AS (SELECT query_id, neighbor_id FROM (
           SELECT query_id, neighbor_id,
                  row_number() OVER (PARTITION BY query_id
-                   ORDER BY ${Extensions.sqlCos("qv", "cv")} DESC, neighbor_id) AS rank
+                   ORDER BY ${Fragments.sqlCos("qv", "cv")} DESC, neighbor_id) AS rank
           FROM q_$d, c_$d WHERE query_id <> neighbor_id) WHERE rank <= 5),
       m_$d AS (SELECT $d::BIGINT AS dims,
                  (SELECT count(*) FROM truth)::BIGINT AS n_truth,
@@ -687,7 +579,7 @@ object Breadth21 {
         val tEmb = emb.select(col("vec_id"),
           expr(s"slice(embedding, 1, $d)").as("embedding"))
         val pred = Similarity.bruteForceTopK(s, tEmb,
-          tEmb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding", k = 5)
+          Fragments.annQueries(tEmb), "vec_id", "embedding", k = 5)
         val nHit = pred.select(col("query_id"), col("neighbor_id"))
           .join(truth, Seq("query_id", "neighbor_id"))
           .agg(count(lit(1)).as("n_hit"))
@@ -699,14 +591,7 @@ object Breadth21 {
         .orderBy(col("dims"))
     },
     Some(s"""
-      WITH tq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-                  WHERE vec_id % 100 = 0),
-      tc AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      truth AS (SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 row_number() OVER (PARTITION BY query_id
-                   ORDER BY ${Extensions.sqlCos("qv", "cv")} DESC, neighbor_id) AS rank
-          FROM tq, tc WHERE query_id <> neighbor_id) WHERE rank <= 5),
+      WITH ${Fragments.sqlTruthTop5Ctes},
       ${DimTiers.map(dimTierSql).mkString(",\n      ")}
       SELECT dims, n_truth, n_hit,
              round(n_hit::DOUBLE / n_truth, 9) AS recall
@@ -787,21 +672,12 @@ object Breadth21 {
                SELECT nation, segment FROM td GROUP BY nation, segment
                HAVING round(sum(CAST(round(abs(cum), 12) AS DECIMAL(38, 12)))::DOUBLE
                             / ((SELECT m FROM tm) - 1), 9) > 0.2)),
-      pdirty AS (SELECT doc_id, text ||
-          (CASE WHEN doc_id % 7 = 0
-                THEN ' contact user' || doc_id || '@example.com' ELSE '' END) ||
-          (CASE WHEN doc_id % 11 = 0
-                THEN ' call 555-01' || lpad((doc_id % 100)::VARCHAR, 2, '0')
-                     || '-' || lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END) ||
-          (CASE WHEN doc_id % 13 = 0
-                THEN ' host 10.0.' || (doc_id % 256) || '.' || ((doc_id * 7) % 256)
-                ELSE '' END) AS text
-        FROM documents),
+      pdirty AS (${Fragments.PiiDirtyDocs}),
       pii AS (SELECT count(*)::BIGINT AS n FROM pdirty
               WHERE len(regexp_extract_all(text, '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}'))
                   + len(regexp_extract_all(text, '[0-9]{3}-[0-9]{4}-[0-9]{4}'))
                   + len(regexp_extract_all(text, '[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}')) > 0),
-      ${Extensions.augCte(perturb = false)},
+      ${Fragments.augCte(perturb = false)},
       lt AS (SELECT md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fingerprint,
                     CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
                          ELSE 'test' END AS split
@@ -834,28 +710,8 @@ object Breadth21 {
     (s, dir) =>
       graft.ext.Multimodal.keyframes(Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("scene_no")),
-    Some("""
-      WITH f AS (SELECT doc_id, text,
-                        unnest(range((length(text) + 63) // 64)) AS frame_no
-                 FROM documents WHERE length(text) > 0),
-      c AS (SELECT doc_id, frame_no,
-                   substring(text, (frame_no * 64 + 1)::INT, 64) AS chunk
-            FROM f),
-      e AS (SELECT doc_id, frame_no, length(chunk)::BIGINT AS n_samples,
-                   list_sum(list_transform(range(1, length(chunk) + 1),
-                     p -> ord(substring(chunk, p::INT, 1)) *
-                          ord(substring(chunk, p::INT, 1))))::BIGINT AS energy
-            FROM c),
-      r AS (SELECT doc_id, frame_no,
-                   round(sqrt(energy::DOUBLE / n_samples), 9) AS rms
-            FROM e),
-      d AS (SELECT doc_id, frame_no, rms,
-                   lag(rms) OVER (PARTITION BY doc_id ORDER BY frame_no) AS prev
-            FROM r),
-      s AS (SELECT doc_id, frame_no, rms,
-                   CASE WHEN prev IS NULL OR abs(rms - prev) > 12.0
-                        THEN 1 ELSE 0 END AS cut
-            FROM d),
+    Some(s"""
+      WITH ${Fragments.sqlSceneCutCtes},
       sc AS (SELECT doc_id, frame_no, rms,
                     (sum(cut) OVER (PARTITION BY doc_id ORDER BY frame_no
                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT

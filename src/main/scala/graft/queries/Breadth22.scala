@@ -26,14 +26,14 @@ object Breadth22 {
     "dedup_span_removal",
     (s, dir) =>
       graft.ext.TextOps.spanRemoval(
-          Extensions.augmentedDocs(s, dir, perturb = true), "doc_id", "text",
+          Fragments.augmentedDocs(s, dir, perturb = true), "doc_id", "text",
           n = SpanN)
         .orderBy(col("doc_id")),
     Some {
       val gram = (1 to SpanN).map(j => s"w[pos+$j]").mkString(" || ' ' || ")
       s"""
-      WITH ${Extensions.augCte(perturb = true)},
-      nw AS (SELECT doc_id, ${Extensions.NormW} AS w FROM aug),
+      WITH ${Fragments.augCte(perturb = true)},
+      nw AS (SELECT doc_id, ${Fragments.NormW} AS w FROM aug),
       g0 AS (SELECT doc_id, unnest(range(len(w) - ${SpanN - 1})) AS pos, w
              FROM nw WHERE len(w) >= $SpanN),
       gh AS (SELECT doc_id, pos,
@@ -66,15 +66,6 @@ object Breadth22 {
     """.trim
     })
 
-  private[queries] def dailyTotals(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    import org.apache.spark.sql.types.DecimalType
-    Tables(s, dir, "events")
-      .select(to_date(col("ts")).as("d"), col("value"))
-      .groupBy(col("d"))
-      .agg(sum(round(col("value"), 9).cast(DecimalType(27, 9)))
-        .cast("double").as("total"))
-  }
-
   /** Moving-average seasonal decomposition of the daily event-value
     * series ([[graft.etl.StatOps.seasonalDecompose]]): trend = centered
     * 7-day MA (full windows only), seasonal = per-phase mean of the
@@ -89,13 +80,11 @@ object Breadth22 {
   val q68SeasonalDecompose = Q(
     "q68_seasonal_decompose",
     (s, dir) =>
-      graft.etl.StatOps.seasonalDecompose(dailyTotals(s, dir), "d", "total",
+      graft.etl.StatOps.seasonalDecompose(Fragments.dailyTotals(s, dir), "d", "total",
           period = 7, half = 3)
         .orderBy(col("d")),
-    Some("""
-      WITH ev AS (SELECT ts::DATE AS d, value FROM events),
-      daily AS (SELECT d, sum(CAST(round(value, 9) AS DECIMAL(27,9)))::DOUBLE AS total
-                FROM ev GROUP BY d),
+    Some(s"""
+      WITH ${Fragments.DailyTotalsCtes},
       m AS (SELECT d, total, count(*) OVER w AS n,
               sum(CAST(round(total, 9) AS DECIMAL(27,9))) OVER w AS s
             FROM daily WINDOW w AS (ORDER BY d ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
@@ -126,43 +115,13 @@ object Breadth22 {
   val q69CusumChangepoint = Q(
     "q69_cusum_changepoint",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      val ev = Tables(s, dir, "events")
-        .select(to_date(col("ts")).as("d"), col("value"))
-      val anchor = ev.agg(max(col("d")).as("gd"))
-      val shifted = ev.crossJoin(broadcast(anchor))
-        .withColumn("value",
-          when(col("d") > date_sub(col("gd"), 8), col("value") + 8.0)
-            .otherwise(col("value")))
-      val daily = shifted.groupBy(col("d"))
-        .agg(round(sum(round(col("value"), 9).cast(DecimalType(27, 9)))
-          .cast("double") / count(lit(1)).cast("double"), 9).as("x"))
-      graft.etl.StatOps.cusumChangepoints(daily, "d", "x", k = 0.5, h = 4.0)
+      graft.etl.StatOps.cusumChangepoints(Fragments.shiftedDailyMeans(s, dir),
+          "d", "x", k = 0.5, h = 4.0)
         .orderBy(col("d"))
     },
-    Some("""
-      WITH ev AS (SELECT ts::DATE AS d, value FROM events),
-      a AS (SELECT max(d) AS gd FROM ev),
-      sh AS (SELECT d, CASE WHEN d > gd - 8 THEN value + 8.0 ELSE value END AS value
-             FROM ev, a),
-      dl AS (SELECT d, round(sum(CAST(round(value, 9) AS DECIMAL(27,9)))::DOUBLE
-                       / count(*), 9) AS x
-             FROM sh GROUP BY d),
-      m AS (SELECT count(*) AS n, sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS s,
-              sum(CAST(round(x, 9) AS DECIMAL(18,9)) * CAST(round(x, 9) AS DECIMAL(18,9))) AS q
-            FROM dl),
-      st AS (SELECT dl.d, dl.x, m.s::DOUBLE / m.n AS mu,
-               sqrt((m.q::DOUBLE - m.s::DOUBLE * m.s::DOUBLE / m.n) / (m.n - 1.0)) AS sd
-             FROM dl, m),
-      dr AS (SELECT d, x, mu, sd,
-               CAST(round(x - mu - 0.5 * sd, 9) AS DECIMAL(27,9)) AS dp,
-               CAST(round(mu - x - 0.5 * sd, 9) AS DECIMAL(27,9)) AS dn
-             FROM st),
-      r1 AS (SELECT d, x, mu, sd, sum(dp) OVER w AS pp, sum(dn) OVER w AS pn
-             FROM dr WINDOW w AS (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-      r2 AS (SELECT d, x, mu, sd, pp, pn,
-               min(pp) OVER w AS mp0, min(pn) OVER w AS mn0
-             FROM r1 WINDOW w AS (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+    Some(s"""
+      WITH ${Fragments.ShiftedDailyCtes},
+      ${Fragments.CusumCtes},
       -- CASE, not least(): DuckDB least() demotes DECIMAL to DOUBLE
       r3 AS (SELECT d, x, mu, sd, pp, pn,
                CASE WHEN mp0 > 0 THEN CAST(0 AS DECIMAL(38,9)) ELSE mp0 END AS mp,
@@ -277,7 +236,7 @@ object Breadth22 {
           "doc_id", "text", topR = 20)
         .orderBy(col("rank")),
     Some(s"""
-      WITH n AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       tok AS (SELECT unnest(w) AS token FROM n),
       tf AS (SELECT token, count(*)::BIGINT AS freq FROM tok
              WHERE token <> '' GROUP BY token),
@@ -304,7 +263,7 @@ object Breadth22 {
           "doc_id", "text", buckets = 10)
         .orderBy(col("bucket")),
     Some(s"""
-      WITH nw AS (SELECT doc_id + 1 AS rk, ${Extensions.NormW} AS w FROM documents),
+      WITH nw AS (SELECT doc_id + 1 AS rk, ${Fragments.NormW} AS w FROM documents),
       mx AS (SELECT max(rk) AS nn FROM nw),
       dp AS (SELECT (floor((rk * 10 - 1) / nn::DOUBLE) + 1)::BIGINT AS bucket,
                count(*)::BIGINT AS nd
@@ -347,7 +306,7 @@ object Breadth22 {
         .orderBy(col("strategy")),
     Some(s"""
       WITH b AS (SELECT doc_id AS id,
-               len(${Extensions.NormW})::BIGINT AS nt,
+               len(${Fragments.NormW})::BIGINT AS nt,
                ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 8 AS shard
              FROM documents),
       a1 AS (SELECT shard, nt,
@@ -382,13 +341,11 @@ object Breadth22 {
   val q70Autocorrelation = Q(
     "q70_autocorrelation",
     (s, dir) =>
-      graft.etl.StatOps.autocorrelation(dailyTotals(s, dir), "d", "total",
+      graft.etl.StatOps.autocorrelation(Fragments.dailyTotals(s, dir), "d", "total",
           maxLag = 14)
         .orderBy(col("lag_k")),
-    Some("""
-      WITH ev AS (SELECT ts::DATE AS d, value FROM events),
-      daily AS (SELECT d, sum(CAST(round(value, 9) AS DECIMAL(27,9)))::DOUBLE AS total
-                FROM ev GROUP BY d),
+    Some(s"""
+      WITH ${Fragments.DailyTotalsCtes},
       m AS (SELECT count(*) AS n, sum(CAST(round(total, 9) AS DECIMAL(27,9))) AS s
             FROM daily),
       dd AS (SELECT row_number() OVER (ORDER BY d) AS rn,
@@ -468,42 +425,11 @@ object Breadth22 {
   val pipelineAnomalyReport = Q(
     "pipeline_anomaly_report",
     (s, dir) => {
-      import org.apache.spark.sql.types.DecimalType
-      val ev = Tables(s, dir, "events")
-        .select(to_date(col("ts")).as("d"), col("value"))
-      val anchor = ev.agg(max(col("d")).as("gd"))
-      val daily = ev.crossJoin(broadcast(anchor))
-        .withColumn("value",
-          when(col("d") > date_sub(col("gd"), 8), col("value") + 8.0)
-            .otherwise(col("value")))
-        .groupBy(col("d"))
-        .agg(round(sum(round(col("value"), 9).cast(DecimalType(27, 9)))
-          .cast("double") / count(lit(1)).cast("double"), 9).as("x"))
-      anomalyReport(daily).orderBy(col("d"))
+      anomalyReport(Fragments.shiftedDailyMeans(s, dir)).orderBy(col("d"))
     },
-    Some("""
-      WITH ev AS (SELECT ts::DATE AS d, value FROM events),
-      a AS (SELECT max(d) AS gd FROM ev),
-      sh AS (SELECT d, CASE WHEN d > gd - 8 THEN value + 8.0 ELSE value END AS value
-             FROM ev, a),
-      dl AS (SELECT d, round(sum(CAST(round(value, 9) AS DECIMAL(27,9)))::DOUBLE
-                       / count(*), 9) AS x
-             FROM sh GROUP BY d),
-      m AS (SELECT count(*) AS n, sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS s,
-              sum(CAST(round(x, 9) AS DECIMAL(18,9)) * CAST(round(x, 9) AS DECIMAL(18,9))) AS q
-            FROM dl),
-      st AS (SELECT dl.d, dl.x, m.s::DOUBLE / m.n AS mu,
-               sqrt((m.q::DOUBLE - m.s::DOUBLE * m.s::DOUBLE / m.n) / (m.n - 1.0)) AS sd
-             FROM dl, m),
-      dr AS (SELECT d, x, mu, sd,
-               CAST(round(x - mu - 0.5 * sd, 9) AS DECIMAL(27,9)) AS dp,
-               CAST(round(mu - x - 0.5 * sd, 9) AS DECIMAL(27,9)) AS dn
-             FROM st),
-      r1 AS (SELECT d, x, mu, sd, sum(dp) OVER w AS pp, sum(dn) OVER w AS pn
-             FROM dr WINDOW w AS (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-      r2 AS (SELECT d, x, mu, sd, pp, pn,
-               min(pp) OVER w AS mp0, min(pn) OVER w AS mn0
-             FROM r1 WINDOW w AS (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+    Some(s"""
+      WITH ${Fragments.ShiftedDailyCtes},
+      ${Fragments.CusumCtes},
       r3 AS (SELECT d, x, mu, sd, pp, pn,
                CASE WHEN mp0 > 0 THEN CAST(0 AS DECIMAL(38,9)) ELSE mp0 END AS mp,
                CASE WHEN mn0 > 0 THEN CAST(0 AS DECIMAL(38,9)) ELSE mn0 END AS mn
@@ -547,12 +473,6 @@ object Breadth22 {
 
   private val PrfTerms = Seq("vector", "stream")
 
-  private val Bm25Formula =
-    """ln(1.0::DOUBLE + (n_docs - df_docs + 0.5::DOUBLE) / (df_docs + 0.5::DOUBLE)) *
-       ((tf * 2.2::DOUBLE) /
-        (tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE *
-          (dl::DOUBLE / (sum_dl::DOUBLE / n_docs::DOUBLE)))))"""
-
   /** BM25 with pseudo-relevance feedback
     * ([[graft.ext.TextOps.bm25Prf]]): base query → top-5 feedback docs
     * → 3 highest-tf expansion terms → final ranking over base ∪
@@ -573,14 +493,11 @@ object Breadth22 {
     Some {
       val inList = PrfTerms.map(t => s"'$t'").mkString(", ")
       s"""
-      WITH norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
-      t AS (SELECT doc_id, unnest(w) AS term FROM norm),
-      dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY doc_id),
-      stats AS (SELECT count(*) AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
+      WITH ${Fragments.sqlBm25BaseCtes()},
       tfall AS (SELECT doc_id, term, count(*) AS tf FROM t GROUP BY doc_id, term),
       tf0 AS (SELECT * FROM tfall WHERE term IN ($inList)),
       df0 AS (SELECT term, count(*) AS df_docs FROM tf0 GROUP BY term),
-      sc0 AS (SELECT tf0.doc_id, round($Bm25Formula, 9) AS score_t
+      sc0 AS (SELECT tf0.doc_id, round(${Fragments.Bm25Formula}, 9) AS score_t
               FROM tf0 JOIN df0 USING (term) JOIN dl USING (doc_id) CROSS JOIN stats),
       agg0 AS (SELECT doc_id, CAST(sum(CAST(score_t AS DECIMAL(27,9))) AS DOUBLE) AS score
                FROM sc0 GROUP BY doc_id),
@@ -591,7 +508,7 @@ object Breadth22 {
       qt AS (SELECT term FROM exp UNION SELECT unnest([$inList]) AS term),
       tf2 AS (SELECT tfall.* FROM tfall JOIN qt USING (term)),
       df2 AS (SELECT term, count(*) AS df_docs FROM tf2 GROUP BY term),
-      sc2 AS (SELECT tf2.doc_id, round($Bm25Formula, 9) AS score_t
+      sc2 AS (SELECT tf2.doc_id, round(${Fragments.Bm25Formula}, 9) AS score_t
               FROM tf2 JOIN df2 USING (term) JOIN dl USING (doc_id) CROSS JOIN stats),
       agg2 AS (SELECT doc_id, CAST(sum(CAST(score_t AS DECIMAL(27,9))) AS DOUBLE) AS score
                FROM sc2 GROUP BY doc_id),
@@ -769,12 +686,8 @@ object Breadth22 {
           round((col("estimate") - col("exact")) / col("exact"), 9))
         .orderBy(col("metric"))
     },
-    Some("""
-      WITH w AS (SELECT doc_id, n_chars::BIGINT AS weight,
-                        sum(n_chars::BIGINT) OVER (ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cend,
-                        sum(n_chars::BIGINT) OVER () AS total
-                 FROM documents),
+    Some(s"""
+      WITH ${Fragments.PpsWeightsCte},
       h AS (SELECT doc_id, weight, total,
               (floor(cend / (total // 100)) - floor((cend - weight) / (total // 100)))::BIGINT AS hits
             FROM w

@@ -25,12 +25,10 @@ object Breadth23 {
   val q71TheilSen = Q(
     "q71_theil_sen_trend",
     (s, dir) =>
-      StatOps.theilSenTrend(Breadth22.dailyTotals(s, dir), "d", "total")
+      StatOps.theilSenTrend(Fragments.dailyTotals(s, dir), "d", "total")
         .orderBy(col("d")),
-    Some("""
-      WITH ev AS (SELECT ts::DATE AS d, value FROM events),
-      daily AS (SELECT d, sum(CAST(round(value, 9) AS DECIMAL(27,9)))::DOUBLE AS total
-                FROM ev GROUP BY d),
+    Some(s"""
+      WITH ${Fragments.DailyTotalsCtes},
       pts AS (SELECT d, date_diff('day', DATE '1970-01-01', d)::BIGINT AS x,
                 CAST(round(total, 9) AS DECIMAL(27,9)) AS y FROM daily),
       sl AS (SELECT (round((b.y - a.y)::DOUBLE / (b.x - a.x), 9) + 0.0) AS s
@@ -68,16 +66,12 @@ object Breadth23 {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, text, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, text, ${Fragments.NormW} AS w FROM documents),
       m AS (SELECT doc_id,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
+              ${Fragments.sqlQualityFeatures(Fragments.sqlHits(TextOps.StopEn))}
             FROM n),
       q AS (SELECT doc_id,
-              round(least(avg_word_len / 8.0, 1.0) * 0.4
-                    + least(stop_ratio * 5.0, 1.0) * 0.4
-                    + (1.0 - punct_ratio) * 0.2, 9) AS score
+              ${Fragments.QualityScore} AS score
             FROM m),
       sh AS (SELECT doc_id, score,
                ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 8 AS shard
@@ -133,24 +127,11 @@ object Breadth23 {
     (s, dir) => {
       val table = ensureRangeOrders(s, dir)
       val mani = s.read.parquet(ensureOrdersManifest(s, dir))
-      val lo = lit(java.sql.Date.valueOf("1995-01-01"))
-      val hi = lit(java.sql.Date.valueOf("1995-03-31"))
-      graft.etl.LayoutOps.manifestPrunedRead(s, table, mani, "o_orderdate",
-          lo, hi)
-        .filter(col("o_orderdate").between(lo, hi))
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n_orders"),
-          Q.moneySum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("month"))
+      Fragments.monthlyRevenue("1995-01-01", "1995-03-31") { (lo, hi) =>
+        graft.etl.LayoutOps.manifestPrunedRead(s, table, mani, "o_orderdate", lo, hi)
+      }
     },
-    Some("""
-      SELECT strftime(o_orderdate, '%Y-%m') AS month,
-             count(*)::BIGINT AS n_orders,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM orders
-      WHERE o_orderdate BETWEEN DATE '1995-01-01' AND DATE '1995-03-31'
-      GROUP BY 1 ORDER BY 1
-    """.trim))
+    Some(Fragments.sqlMonthlyRevenue("1995-01-01", "1995-03-31")))
 
   val all: Seq[Q] = Seq(q71TheilSen, q72CurriculumOrder, layoutManifestSkip)
 }

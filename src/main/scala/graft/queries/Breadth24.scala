@@ -50,24 +50,11 @@ object Breadth24 {
       val (table, mani0) = ensureStagedOrdersAppend(s, dir)
       val refreshed = LayoutOps.refreshFileManifest(s, table,
         s.read.parquet(mani0), Seq("o_orderdate"))
-      val lo = lit(java.sql.Date.valueOf("1996-04-01"))
-      val hi = lit(java.sql.Date.valueOf("1996-06-30"))
-      LayoutOps.manifestPrunedRead(s, table, refreshed, "o_orderdate",
-          lo, hi)
-        .filter(col("o_orderdate").between(lo, hi))
-        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-        .agg(count(lit(1)).as("n_orders"),
-          Q.moneySum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("month"))
+      Fragments.monthlyRevenue("1996-04-01", "1996-06-30") { (lo, hi) =>
+        LayoutOps.manifestPrunedRead(s, table, refreshed, "o_orderdate", lo, hi)
+      }
     },
-    Some("""
-      SELECT strftime(o_orderdate, '%Y-%m') AS month,
-             count(*)::BIGINT AS n_orders,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM orders
-      WHERE o_orderdate BETWEEN DATE '1996-04-01' AND DATE '1996-06-30'
-      GROUP BY 1 ORDER BY 1
-    """.trim))
+    Some(Fragments.sqlMonthlyRevenue("1996-04-01", "1996-06-30")))
 
   /** Versioned orders table staged through TWO append commits
     * ([[graft.etl.CommitOps.appendCommit]] — even keys then odd keys),
@@ -100,17 +87,9 @@ object Breadth24 {
     "layout_append_commit",
     (s, dir) => {
       val root = s"${ensureOrdersCommits(s, dir)}/table"
-      CommitOps.readSnapshot(s, root)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          Q.moneySum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("o_orderstatus"))
+      Fragments.statusRevenue(CommitOps.readSnapshot(s, root))
     },
-    Some("""
-      SELECT o_orderstatus, count(*)::BIGINT AS n_orders,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM orders GROUP BY 1 ORDER BY 1
-    """.trim))
+    Some(Fragments.sqlStatusRevenue("orders")))
 
   /** Range-clustered lineitem layout (16 files by l_orderkey) + its
     * file manifest — the fact side a join-key runtime filter prunes
@@ -210,13 +189,9 @@ object Breadth24 {
     "layout_merge_commit",
     (s, dir) => {
       val root = s"${ensureOrdersMergeCommit(s, dir)}/table"
-      CommitOps.readSnapshot(s, root)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          Q.moneySum(col("o_totalprice")).as("revenue"))
-        .orderBy(col("o_orderstatus"))
+      Fragments.statusRevenue(CommitOps.readSnapshot(s, root))
     },
-    Some("""
+    Some(s"""
       WITH mc AS (SELECT min(o_custkey) AS m FROM orders),
       t AS (SELECT o_orderkey,
               CASE WHEN o_custkey = (SELECT m FROM mc) THEN 'U'
@@ -226,9 +201,7 @@ object Breadth24 {
             UNION ALL
             SELECT o_orderkey + 10000000, 'I', o_totalprice
             FROM orders WHERE o_custkey = (SELECT m FROM mc))
-      SELECT o_orderstatus, count(*)::BIGINT AS n_orders,
-             CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-      FROM t GROUP BY 1 ORDER BY 1
+      ${Fragments.sqlStatusRevenue("t")}
     """.trim))
 
   val all: Seq[Q] = Seq(layoutManifestRefresh, layoutAppendCommit,

@@ -209,11 +209,7 @@ object Breadth3 {
   val j9AsofCustom = Q(
     "j9_asof_custom_operator",
     (s, dir) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id").as("r_user_id"), col("ts").as("r_ts"))
+      val (purchases, signups) = Fragments.purchasesAndSignups(s, dir)
       graft.plans.AsOfJoin.asofJoin(purchases, signups,
           Seq("user_id"), Seq("r_user_id"), "ts", "r_ts")
         .select(col("event_id"), col("user_id"), col("ts"),
@@ -238,11 +234,7 @@ object Breadth3 {
   val j11AsofTolerance = Q(
     "j11_asof_tolerance",
     (s, dir) => {
-      val ev = Tables(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id").as("r_user_id"), col("ts").as("r_ts"))
+      val (purchases, signups) = Fragments.purchasesAndSignups(s, dir)
       graft.plans.AsOfJoin.asofJoin(purchases, signups,
           Seq("user_id"), Seq("r_user_id"), "ts", "r_ts",
           tolerance = Some(7L * 86400 * 1000000)) // 7 days in µs

@@ -25,21 +25,10 @@ object Breadth5 {
     (s, dir) => {
       val ot = LayoutOps.ensureBucketed(s, dir, "orders", Seq("o_orderkey"), 8)
       val lt = LayoutOps.ensureBucketed(s, dir, "lineitem", Seq("l_orderkey"), 8)
-      s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1.0) - col("l_discount")).cast("decimal(18,2)"))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
+      Fragments.priorityRevenue(
+        s.table(lt).join(s.table(ot), col("l_orderkey") === col("o_orderkey")))
     },
-    Some("""
-      SELECT o_orderpriority,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-             count(*) AS n
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """.trim))
+    Some(Fragments.PriorityRevenueOracle))
 
   /** Static partition pruning: orders live as o_month=yyyy-MM directories
     * (LayoutOps.ensurePartitionedOrders); the month filter prunes at the
@@ -135,21 +124,10 @@ object Breadth5 {
           col("l_extendedprice"), col("l_discount"))
       val or = Tables(s, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      SkewOps.saltedJoin(li, or, Seq("l_orderkey"), "l_partkey", buckets = 8)
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1.0) - col("l_discount")).cast("decimal(18,2)"))
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy(col("o_orderpriority"))
+      Fragments.priorityRevenue(
+        SkewOps.saltedJoin(li, or, Seq("l_orderkey"), "l_partkey", buckets = 8))
     },
-    Some("""
-      SELECT o_orderpriority,
-             CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(1.0 - l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-             count(*) AS n
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderpriority ORDER BY o_orderpriority
-    """.trim))
+    Some(Fragments.PriorityRevenueOracle))
 
   /** CSV round-trip through the engine's own source/sink pair: orders →
     * full-refresh semicolon CSV export (S10: all-string, header row) →
@@ -218,8 +196,6 @@ object Breadth5 {
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """.trim))
 
-  private val NormW = Extensions.NormW
-
   /** Overlapping 50-word chunks every 40 words (10-word overlap) — the
     * RAG/context chunking op, shuffle-free scan-side per doc; chunk
     * content is pinned by md5 so the oracle checks the exact text of
@@ -232,7 +208,7 @@ object Breadth5 {
           "doc_id", "text", window = 50, step = 40)
         .orderBy(col("doc_id"), col("chunk_no")),
     Some(s"""
-      WITH norm AS (SELECT doc_id, $NormW AS w FROM documents),
+      WITH norm AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       c AS (SELECT doc_id, w,
               unnest(range(CAST(ceil(greatest(len(w) - 10, 1) / 40.0) AS BIGINT))) AS chunk_no
             FROM norm)
@@ -255,15 +231,8 @@ object Breadth5 {
           "doc_id", "text", windowTokens = 512)
         .orderBy(col("doc_id")),
     Some(s"""
-      WITH n AS (SELECT doc_id, len($NormW)::BIGINT AS n_tokens FROM documents),
-      srt AS (SELECT doc_id, n_tokens,
-                (sum(n_tokens) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens)::BIGINT AS start_pos
-              FROM n)
-      SELECT doc_id, n_tokens, start_pos,
-             (start_pos // 512)::BIGINT AS first_window,
-             ((start_pos + n_tokens - 1) // 512)::BIGINT AS last_window
-      FROM srt ORDER BY doc_id
+      WITH n AS (SELECT doc_id, len(${Fragments.NormW})::BIGINT AS n_tokens FROM documents),
+      ${Fragments.sqlPackWindows("n")}
     """.trim))
 
   def all: Seq[Q] = Seq(

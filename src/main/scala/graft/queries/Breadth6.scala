@@ -102,12 +102,8 @@ object Breadth6 {
       SampleOps.ppsSystematicSample(Tables(s, dir, "documents"),
           "doc_id", "n_chars", n = 100)
         .orderBy(col("doc_id")),
-    Some("""
-      WITH w AS (SELECT doc_id, n_chars::BIGINT AS weight,
-                        sum(n_chars::BIGINT) OVER (ORDER BY doc_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cend,
-                        sum(n_chars::BIGINT) OVER () AS total
-                 FROM documents)
+    Some(s"""
+      WITH ${Fragments.PpsWeightsCte}
       SELECT doc_id, weight FROM w
       WHERE floor((cend - weight) / (total // 100)) < floor(cend / (total // 100))
       ORDER BY doc_id

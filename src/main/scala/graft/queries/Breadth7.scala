@@ -65,18 +65,12 @@ object Breadth7 {
       pre: String = ""): String = {
     val inList = terms.map(t => s"'$t'").mkString(", ")
     s"""
-      WITH ${pre}norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM $source),
-      t AS (SELECT doc_id, unnest(w) AS term FROM norm),
-      dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY doc_id),
-      stats AS (SELECT count(*) AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
+      WITH $pre${Fragments.sqlBm25BaseCtes(source)},
       tf AS (SELECT doc_id, term, count(*) AS tf FROM t
              WHERE term IN ($inList) GROUP BY doc_id, term),
       dfq AS (SELECT term, count(*) AS df_docs FROM tf GROUP BY term),
       sc AS (SELECT tf.doc_id,
-               round(ln(1.0::DOUBLE + (n_docs - df_docs + 0.5::DOUBLE) / (df_docs + 0.5::DOUBLE)) *
-                     ((tf * 2.2::DOUBLE) /
-                      (tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE *
-                        (dl::DOUBLE / (sum_dl::DOUBLE / n_docs::DOUBLE))))), 9) AS score_t
+               round(${Fragments.Bm25Formula}, 9) AS score_t
              FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN stats),
       agg AS (SELECT doc_id, CAST(sum(CAST(score_t AS DECIMAL(27,9))) AS DOUBLE) AS score
               FROM sc GROUP BY doc_id),
@@ -142,18 +136,13 @@ object Breadth7 {
     */
   private def pageRankSql(iters: Int): String = {
     val rounds = (1 to iters).map { i =>
-      s"""c$i AS (SELECT dst, CAST(sum(CAST(round(rank / outdeg, 12) AS DECIMAL(38,12))) AS DOUBLE) AS inr
-             FROM edges JOIN r${i - 1} ON src = node JOIN outdeg USING (src) GROUP BY dst),
+      s"""${Fragments.sqlPageRankInflowCte(i)},
       r$i AS (SELECT node, round((1.0::DOUBLE - 0.85::DOUBLE) / n + 0.85::DOUBLE * coalesce(inr, 0.0::DOUBLE), 12) AS rank
              FROM nodes CROSS JOIN nn LEFT JOIN c$i ON node = dst)"""
     }.mkString(",\n      ")
     s"""
-      WITH edges AS (SELECT DISTINCT c_nationkey::BIGINT AS src, s_nationkey::BIGINT AS dst
-                     FROM customer JOIN orders ON c_custkey = o_custkey
-                     JOIN lineitem ON l_orderkey = o_orderkey
-                     JOIN supplier ON l_suppkey = s_suppkey),
-      nodes AS (SELECT DISTINCT node FROM
-                  (SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
+      WITH ${Fragments.TradeEdgesCte},
+      ${Fragments.NodesCte},
       nn AS (SELECT count(*) AS n FROM nodes),
       outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
       r0 AS (SELECT node, round(1.0::DOUBLE / n, 12) AS rank FROM nodes CROSS JOIN nn),
@@ -172,14 +161,7 @@ object Breadth7 {
   val q54PageRank = Q(
     "q54_pagerank",
     (s, dir) => {
-      val edges = Tables(s, dir, "customer")
-        .join(Tables(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(Tables(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").cast("long").as("src"),
-          col("s_nationkey").cast("long").as("dst"))
-        .distinct()
-        .localCheckpoint()
+      val edges = Fragments.tradeEdges(s, dir)
       graft.ext.GraphOps.pageRank(edges, iters = 5)
         .orderBy(col("node"))
     },
@@ -243,7 +225,7 @@ object Breadth7 {
                     WHERE vec_id % 250 = 0 AND vec_id < 5000),
       a AS (SELECT vec_id, cid, sim,
                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
-            FROM (SELECT e.vec_id, c.cid, ${Extensions.sqlCos("e.embedding", "c.cv")} AS sim
+            FROM (SELECT e.vec_id, c.cid, ${Fragments.sqlCos("e.embedding", "c.cv")} AS sim
                   FROM embeddings e, cent c)),
       asg AS (SELECT vec_id, cid AS cluster, sim FROM a WHERE rn = 1),
       m AS (SELECT cluster, CAST(sum(CAST(sim AS DECIMAL(15,9))) AS DOUBLE) / count(*) AS avg_sim
@@ -342,10 +324,10 @@ object Breadth7 {
       asg AS (SELECT vec_id, embedding, cid FROM (
                 SELECT e.vec_id, e.embedding, t.cid,
                        row_number() OVER (PARTITION BY e.vec_id
-                         ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
+                         ORDER BY ${Fragments.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
                 FROM embeddings e, cent t) WHERE rn = 1),
       cand AS (SELECT a.vec_id AS src, b.vec_id AS dst,
-                      ${Extensions.sqlCos("a.embedding", "b.embedding")} AS sim
+                      ${Fragments.sqlCos("a.embedding", "b.embedding")} AS sim
                FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id <> b.vec_id),
       pairs AS (SELECT src, dst FROM (
                  SELECT src, dst,
@@ -389,15 +371,6 @@ object Breadth7 {
 
   // ---- triangle counting -------------------------------------------------
 
-  /** Shared edge CTE: the customer-nation → supplier-nation trade graph
-    * (same derivation as q54_pagerank).
-    */
-  private val TradeEdgesCte =
-    """edges AS (SELECT DISTINCT c_nationkey::BIGINT AS src, s_nationkey::BIGINT AS dst
-                 FROM customer JOIN orders ON c_custkey = o_custkey
-                 JOIN lineitem ON l_orderkey = o_orderkey
-                 JOIN supplier ON l_suppkey = s_suppkey)"""
-
   /** Per-node triangle participation on the trade graph, via the
     * degree-ordered orientation (each triangle enumerated once at its
     * (deg, id)-minimum corner — the skew-safe O(m^1.5) wedge bound).
@@ -405,18 +378,11 @@ object Breadth7 {
   val graphTriangles = Q(
     "graph_triangles",
     (s, dir) => {
-      val edges = Tables(s, dir, "customer")
-        .join(Tables(s, dir, "orders"), col("c_custkey") === col("o_custkey"))
-        .join(Tables(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
-        .select(col("c_nationkey").cast("long").as("src"),
-          col("s_nationkey").cast("long").as("dst"))
-        .distinct()
-        .localCheckpoint()
+      val edges = Fragments.tradeEdges(s, dir)
       graft.ext.GraphOps.triangleCounts(edges).orderBy(col("node"))
     },
     Some(s"""
-      WITH $TradeEdgesCte,
+      WITH ${Fragments.TradeEdgesCte},
       und AS (SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
               FROM edges WHERE src <> dst),
       deg AS (SELECT node, count(*) AS deg FROM
@@ -487,18 +453,8 @@ object Breadth7 {
     (s, dir) =>
       graft.ext.Multimodal.frameEnergy(Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("frame_no")),
-    Some("""
-      WITH f AS (SELECT doc_id, text,
-                        unnest(range((length(text) + 63) // 64)) AS frame_no
-                 FROM documents WHERE length(text) > 0),
-      c AS (SELECT doc_id, frame_no,
-                   substring(text, (frame_no * 64 + 1)::INT, 64) AS chunk
-            FROM f),
-      e AS (SELECT doc_id, frame_no, length(chunk)::BIGINT AS n_samples,
-                   list_sum(list_transform(range(1, length(chunk) + 1),
-                     p -> ord(substring(chunk, p::INT, 1)) *
-                          ord(substring(chunk, p::INT, 1))))::BIGINT AS energy
-            FROM c)
+    Some(s"""
+      WITH ${Fragments.FrameEnergyCtes}
       SELECT doc_id, frame_no, n_samples, energy,
              round(sqrt(energy::DOUBLE / n_samples), 9) AS rms
       FROM e ORDER BY doc_id, frame_no
@@ -516,38 +472,11 @@ object Breadth7 {
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       graft.ext.Similarity.ivfHardNegatives(s, emb,
-          emb.filter(col("vec_id") % 100 === 0),
-          emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 5000),
+          Fragments.annQueries(emb), Fragments.annSampledCentroids(emb),
           "vec_id", "embedding", "label", "vec_id", "embedding", k = 3, nprobe = 2)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-                    WHERE vec_id % 37 = 0 AND vec_id < 5000),
-      corp_a AS (
-        SELECT vec_id, embedding, label, cid FROM (
-          SELECT e.vec_id, e.embedding, e.label, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t)
-        WHERE rn = 1),
-      q_a AS (
-        SELECT vec_id, embedding, label, cid FROM (
-          SELECT e.vec_id, e.embedding, e.label, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= 2),
-      p AS (SELECT q.vec_id AS query_id, q.label, c.vec_id AS neighbor_id,
-                   ${Extensions.sqlCos("q.embedding", "c.embedding")} AS sim
-            FROM q_a q JOIN corp_a c
-              ON q.cid = c.cid AND q.label <> c.label AND q.vec_id <> c.vec_id)
-      SELECT query_id, label, neighbor_id, rank, sim FROM (
-        SELECT query_id, label, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 3
-      ORDER BY query_id, rank
-    """.trim))
+    Some(Fragments.sqlLabelIvfTopK("<>")))
 
   // ---- temporal SCD2 dimension join --------------------------------------
 
@@ -638,7 +567,7 @@ object Breadth7 {
       graft.ext.TextOps.bigramLmScore(Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
     Some(s"""
-      WITH norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
+      WITH norm AS (SELECT doc_id, ${Fragments.NormW} AS w FROM documents),
       pairs AS (SELECT doc_id, p['a'] AS w1, p['b'] AS w2 FROM (
                   SELECT doc_id, unnest(list_transform(range(len(w) - 1),
                     i -> {'a': w[i+1], 'b': w[i+2]})) AS p
@@ -827,24 +756,9 @@ object Breadth7 {
     Some {
       val values = MultiQueries.map { case (q, t) => s"($q::BIGINT, '$t')" }.mkString(", ")
       s"""
-      WITH norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
-      t AS (SELECT doc_id, unnest(w) AS term FROM norm),
-      dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY doc_id),
-      stats AS (SELECT count(*) AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
+      WITH ${Fragments.sqlBm25BaseCtes()},
       qt(query_id, term) AS (SELECT * FROM (VALUES $values)),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM t
-             WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
-      dfq AS (SELECT term, count(*) AS df_docs FROM tf GROUP BY term),
-      sc AS (SELECT qt.query_id, tf.doc_id,
-               round(ln(1.0::DOUBLE + (n_docs - df_docs + 0.5::DOUBLE) / (df_docs + 0.5::DOUBLE)) *
-                     ((tf * 2.2::DOUBLE) /
-                      (tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE *
-                        (dl::DOUBLE / (sum_dl::DOUBLE / n_docs::DOUBLE))))), 9) AS score_t
-             FROM tf JOIN qt USING (term) JOIN dfq USING (term)
-             JOIN dl USING (doc_id) CROSS JOIN stats),
-      agg AS (SELECT query_id, doc_id,
-                     CAST(sum(CAST(score_t AS DECIMAL(27,9))) AS DOUBLE) AS score
-              FROM sc GROUP BY query_id, doc_id),
+      ${Fragments.sqlBm25QueryScoreCtes},
       r AS (SELECT query_id, doc_id, score,
                    row_number() OVER (PARTITION BY query_id
                      ORDER BY score DESC, doc_id) AS rn

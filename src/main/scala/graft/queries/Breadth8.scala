@@ -29,28 +29,8 @@ object Breadth8 {
     (s, dir) =>
       graft.ext.Multimodal.sceneChanges(Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id"), col("frame_no")),
-    Some("""
-      WITH f AS (SELECT doc_id, text,
-                        unnest(range((length(text) + 63) // 64)) AS frame_no
-                 FROM documents WHERE length(text) > 0),
-      c AS (SELECT doc_id, frame_no,
-                   substring(text, (frame_no * 64 + 1)::INT, 64) AS chunk
-            FROM f),
-      e AS (SELECT doc_id, frame_no, length(chunk)::BIGINT AS n_samples,
-                   list_sum(list_transform(range(1, length(chunk) + 1),
-                     p -> ord(substring(chunk, p::INT, 1)) *
-                          ord(substring(chunk, p::INT, 1))))::BIGINT AS energy
-            FROM c),
-      r AS (SELECT doc_id, frame_no,
-                   round(sqrt(energy::DOUBLE / n_samples), 9) AS rms
-            FROM e),
-      d AS (SELECT doc_id, frame_no, rms,
-                   lag(rms) OVER (PARTITION BY doc_id ORDER BY frame_no) AS prev
-            FROM r),
-      s AS (SELECT doc_id, frame_no, rms,
-                   CASE WHEN prev IS NULL OR abs(rms - prev) > 12.0
-                        THEN 1 ELSE 0 END AS cut
-            FROM d)
+    Some(s"""
+      WITH ${Fragments.sqlSceneCutCtes}
       SELECT doc_id, frame_no, rms,
              (sum(cut) OVER (PARTITION BY doc_id ORDER BY frame_no
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1)::BIGINT AS scene_no
@@ -68,20 +48,7 @@ object Breadth8 {
         .select(col("doc_id"), col("logit"), col("prob"), col("keep"))
         .orderBy(col("doc_id")),
     Some(s"""
-      WITH n AS (SELECT doc_id, text, ${Extensions.NormW} AS w FROM documents),
-      m AS (SELECT doc_id,
-              len(w)::BIGINT AS n_words,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
-            FROM n),
-      l AS (SELECT doc_id,
-              2.0 * least(stop_ratio * 5.0, 1.0)
-                  + 1.5 * least(avg_word_len / 8.0, 1.0)
-                  - 3.0 * punct_ratio
-                  + 0.5 * least(n_words / 200.0, 1.0)
-                  - 1.2 AS logit
-            FROM m),
+      WITH ${Fragments.sqlModelLogitCtes},
       p AS (SELECT doc_id, logit,
               round(1.0 / (1.0 + exp(-logit)), 9) AS prob FROM l)
       SELECT doc_id, logit, prob,
@@ -105,7 +72,7 @@ object Breadth8 {
   def ensureSplitFingerprints(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "split_fingerprints") { d =>
-      Extensions.augmentedDocs(s, dir, perturb = false)
+      Fragments.augmentedDocs(s, dir, perturb = false)
         .withColumn("fingerprint", md5(Dedup.normText(col("text"))))
         .withColumn("__b", Dedup.hash32(col("doc_id").cast("string")) % 100)
         .withColumn("split",
@@ -128,7 +95,7 @@ object Breadth8 {
         .orderBy(col("fingerprint"))
     },
     Some(s"""
-      WITH ${Extensions.augCte(perturb = false)},
+      WITH ${Fragments.augCte(perturb = false)},
       t AS (SELECT doc_id,
               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fingerprint,
               CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
@@ -166,7 +133,7 @@ object Breadth8 {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH ${Extensions.augCte(perturb = false)},
+      WITH ${Fragments.augCte(perturb = false)},
       t AS (SELECT doc_id,
               md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fingerprint
             FROM aug),
@@ -191,7 +158,7 @@ object Breadth8 {
       dir: String): String =
     graft.etl.LayoutOps.ensureRunDir(s, dir, "dedup_tfidf_postings") { d =>
       TextOps.tfidfWeightedPostings(
-        Extensions.augmentedDocs(s, dir, perturb = true),
+        Fragments.augmentedDocs(s, dir, perturb = true),
         "doc_id", "text", maxDf = 20).write.parquet(d)
     }
 
@@ -208,9 +175,9 @@ object Breadth8 {
           s.read.parquet(ensureTfidfPostings(s, dir)), "doc_id", minSim = 0.5)
         .orderBy(col("doc_a"), col("doc_b")),
     Some(s"""
-      WITH ${Extensions.augCte(perturb = true)},
-      norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM aug
-               WHERE len(${Extensions.NormW}) >= 3),
+      WITH ${Fragments.augCte(perturb = true)},
+      norm AS (SELECT doc_id, ${Fragments.NormW} AS w FROM aug
+               WHERE len(${Fragments.NormW}) >= 3),
       t AS (SELECT doc_id,
               ('0x' || substr(md5(w[i] || ' ' || w[i + 1] || ' ' || w[i + 2]), 1, 8))::BIGINT AS term
             FROM norm, unnest(range(1, len(w) - 1)) AS u(i)),
@@ -257,30 +224,20 @@ object Breadth8 {
         .localCheckpoint()
       val cells = SketchOps.cmsCells(wc, "word", "exact_cnt", depth = 3, width = 64)
       val top = wc.orderBy(col("exact_cnt").desc, col("word")).limit(15)
-      SketchOps.cmsEstimate(cells, top, "word", depth = 3, width = 64)
-        .join(top, "word")
-        .select(col("word"), col("exact_cnt"), col("cms_est"))
-        .orderBy(col("exact_cnt").desc, col("word"))
+      Fragments.cmsEstimate(cells, top)
     },
-    Some("""
+    Some(s"""
       WITH w AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
                  FROM documents),
       wc AS (SELECT word, count(*) AS exact_cnt FROM w GROUP BY word),
       rows3 AS (SELECT unnest([0, 1, 2]) AS row),
       cells AS (SELECT r.row,
-                  ('0x' || substr(md5('cms' || r.row::VARCHAR || '|' || word), 1, 8))::BIGINT % 64 AS bucket,
+                  ${Fragments.CmsBucket} AS bucket,
                   sum(exact_cnt)::BIGINT AS cell
                 FROM wc, rows3 r GROUP BY 1, 2),
       top AS (SELECT word, exact_cnt FROM wc
               ORDER BY exact_cnt DESC, word LIMIT 15),
-      probes AS (SELECT word, r.row,
-                   ('0x' || substr(md5('cms' || r.row::VARCHAR || '|' || word), 1, 8))::BIGINT % 64 AS bucket
-                 FROM top, rows3 r),
-      est AS (SELECT word, min(cell) AS cms_est
-              FROM probes JOIN cells USING (row, bucket) GROUP BY word)
-      SELECT t.word, t.exact_cnt, e.cms_est
-      FROM top t JOIN est e USING (word)
-      ORDER BY exact_cnt DESC, word
+      ${Fragments.sqlCmsEstimate}
     """.trim))
 
   /** Incremental sketch maintenance, driver-graded: the corpus arrives
@@ -311,12 +268,9 @@ object Breadth8 {
         .groupBy(col("row"), col("bucket")).agg(sum(col("cell")).as("cell"))
       val full = wcPart.groupBy(col("word")).agg(sum(col("exact_cnt")).as("exact_cnt"))
       val top = full.orderBy(col("exact_cnt").desc, col("word")).limit(10)
-      SketchOps.cmsEstimate(merged, top, "word", depth = 3, width = 64)
-        .join(top, "word")
-        .select(col("word"), col("exact_cnt"), col("cms_est"))
-        .orderBy(col("exact_cnt").desc, col("word"))
+      Fragments.cmsEstimate(merged, top)
     },
-    Some("""
+    Some(s"""
       WITH w AS (SELECT doc_id,
                    unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
                  FROM documents),
@@ -325,12 +279,12 @@ object Breadth8 {
       wcd AS (SELECT word, count(*) AS cnt FROM w WHERE doc_id % 10 = 0 GROUP BY word),
       parts AS (
         SELECT r.row,
-               ('0x' || substr(md5('cms' || r.row::VARCHAR || '|' || word), 1, 8))::BIGINT % 64 AS bucket,
+               ${Fragments.CmsBucket} AS bucket,
                sum(cnt)::BIGINT AS cell
         FROM wcb, rows3 r GROUP BY 1, 2
         UNION ALL
         SELECT r.row,
-               ('0x' || substr(md5('cms' || r.row::VARCHAR || '|' || word), 1, 8))::BIGINT % 64 AS bucket,
+               ${Fragments.CmsBucket} AS bucket,
                sum(cnt)::BIGINT AS cell
         FROM wcd, rows3 r GROUP BY 1, 2),
       cells AS (SELECT row, bucket, sum(cell)::BIGINT AS cell
@@ -338,14 +292,7 @@ object Breadth8 {
       wc AS (SELECT word, count(*) AS exact_cnt FROM w GROUP BY word),
       top AS (SELECT word, exact_cnt FROM wc
               ORDER BY exact_cnt DESC, word LIMIT 10),
-      probes AS (SELECT word, r.row,
-                   ('0x' || substr(md5('cms' || r.row::VARCHAR || '|' || word), 1, 8))::BIGINT % 64 AS bucket
-                 FROM top, rows3 r),
-      est AS (SELECT word, min(cell) AS cms_est
-              FROM probes JOIN cells USING (row, bucket) GROUP BY word)
-      SELECT t.word, t.exact_cnt, e.cms_est
-      FROM top t JOIN est e USING (word)
-      ORDER BY exact_cnt DESC, word
+      ${Fragments.sqlCmsEstimate}
     """.trim))
 
   /** Incremental k-means, the model twin of the index merges: base and
@@ -362,7 +309,7 @@ object Breadth8 {
     "ann_kmeans_merge",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cents = emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 5000)
+      val cents = Fragments.annSampledCentroids(emb)
       def stats(part: org.apache.spark.sql.DataFrame) =
         graft.ext.Similarity.kmeansAssign(s, part, cents,
             "vec_id", "embedding", "vec_id", "embedding")
@@ -388,7 +335,7 @@ object Breadth8 {
       a AS (SELECT vec_id, embedding, is_delta, cid FROM (
               SELECT e.vec_id, e.embedding, (e.vec_id % 10 = 0) AS is_delta, t.cid,
                      row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
+                       ORDER BY ${Fragments.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
               FROM embeddings e, cent t) WHERE rn = 1),
       x AS (SELECT cid AS cluster, i AS dim, embedding[(i + 1)::INT]::DOUBLE AS xd,
                    is_delta
@@ -466,7 +413,7 @@ object Breadth8 {
   private def mmrRoundCtes(r: Int): String = {
     val prev = s"selu${r - 1}"
     s"""m$r AS (
-        SELECT c.query_id, c.cand_id, max(${Extensions.sqlCos("c.cv", "s.sv")}) AS ms
+        SELECT c.query_id, c.cand_id, max(${Fragments.sqlCos("c.cv", "s.sv")}) AS ms
         FROM cand c JOIN (SELECT query_id, cv AS sv FROM $prev) s USING (query_id)
         WHERE NOT EXISTS (SELECT 1 FROM $prev x
                           WHERE x.query_id = c.query_id AND x.cand_id = c.cand_id)
@@ -492,15 +439,14 @@ object Breadth8 {
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       graft.ext.Similarity.mmrSelect(s, emb,
-          emb.filter(col("vec_id") % 100 === 0),
+          Fragments.annQueries(emb),
           "vec_id", "embedding", k = 5, nCand = 25, lambda = 0.7)
         .orderBy(col("query_id"), col("step"))
     },
     Some(s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-                 WHERE vec_id % 100 = 0),
+      WITH ${Fragments.sqlQueryPanelCte()},
       c0 AS (SELECT q.query_id, e.vec_id AS cand_id,
-                    ${Extensions.sqlCos("e.embedding", "q.qv")} AS rel,
+                    ${Fragments.sqlCos("e.embedding", "q.qv")} AS rel,
                     e.embedding AS cv
              FROM embeddings e JOIN q ON e.vec_id <> q.query_id),
       cand AS (SELECT query_id, cand_id, rel, cv FROM (
@@ -531,15 +477,14 @@ object Breadth8 {
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       graft.ext.Similarity.rankFusionTopK(s, emb,
-          emb.filter(col("vec_id") % 100 === 0),
+          Fragments.annQueries(emb),
           "vec_id", "embedding", k = 5, kPool = 20)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-                 WHERE vec_id % 100 = 0),
+      WITH ${Fragments.sqlQueryPanelCte()},
       sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-                    ${Extensions.sqlCos("e.embedding", "q.qv")} AS cosv,
+                    ${Fragments.sqlCos("e.embedding", "q.qv")} AS cosv,
                     round(sqrt(list_sum(list_transform(range(len(q.qv)), i ->
                       (q.qv[i+1]::DOUBLE - e.embedding[i+1]::DOUBLE)
                       * (q.qv[i+1]::DOUBLE - e.embedding[i+1]::DOUBLE)))), 9) AS l2v

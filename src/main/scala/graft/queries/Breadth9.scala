@@ -46,25 +46,10 @@ object Breadth9 {
       val values = Breadth7.MultiQueries
         .map { case (q, t) => s"($q::BIGINT, '$t')" }.mkString(", ")
       s"""
-      WITH norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM documents),
-      t AS (SELECT doc_id, unnest(w) AS term FROM norm),
-      dl AS (SELECT doc_id, count(*) AS dl FROM t GROUP BY doc_id),
-      stats AS (SELECT count(*) AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
+      WITH ${Fragments.sqlBm25BaseCtes()},
       qt(query_id, term) AS (SELECT * FROM (VALUES $values)),
       qn AS (SELECT query_id, count(*) AS n_terms FROM qt GROUP BY query_id),
-      tf AS (SELECT doc_id, term, count(*) AS tf FROM t
-             WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, term),
-      dfq AS (SELECT term, count(*) AS df_docs FROM tf GROUP BY term),
-      sc AS (SELECT qt.query_id, tf.doc_id,
-               round(ln(1.0::DOUBLE + (n_docs - df_docs + 0.5::DOUBLE) / (df_docs + 0.5::DOUBLE)) *
-                     ((tf * 2.2::DOUBLE) /
-                      (tf + 1.2::DOUBLE * (0.25::DOUBLE + 0.75::DOUBLE *
-                        (dl::DOUBLE / (sum_dl::DOUBLE / n_docs::DOUBLE))))), 9) AS score_t
-             FROM tf JOIN qt USING (term) JOIN dfq USING (term)
-             JOIN dl USING (doc_id) CROSS JOIN stats),
-      agg AS (SELECT query_id, doc_id,
-                     CAST(sum(CAST(score_t AS DECIMAL(27,9))) AS DOUBLE) AS score
-              FROM sc GROUP BY query_id, doc_id),
+      ${Fragments.sqlBm25QueryScoreCtes},
       run AS (SELECT query_id, doc_id, rn AS rank FROM (
                 SELECT query_id, doc_id, score,
                        row_number() OVER (PARTITION BY query_id
@@ -118,7 +103,7 @@ object Breadth9 {
     "ann_binary_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.binaryHammingTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
+      Similarity.binaryHammingTopK(s, emb, Fragments.annQueries(emb),
           "vec_id", "embedding", kCand = 20, k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -136,7 +121,7 @@ object Breadth9 {
                           ORDER BY hamming, neighbor_id) AS hr
                  FROM h) WHERE hr <= 20),
       sc AS (SELECT query_id, neighbor_id, hamming,
-                    ${Extensions.sqlCos("qv", "cv")} AS sim
+                    ${Fragments.sqlCos("qv", "cv")} AS sim
              FROM cand),
       r AS (SELECT query_id, neighbor_id, hamming, sim,
                    row_number() OVER (PARTITION BY query_id
@@ -209,37 +194,12 @@ object Breadth9 {
             (col("tp") + col("fp") + col("fn") + col("tn")), 9))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, text, ${Extensions.NormW} AS w FROM documents),
-      m AS (SELECT doc_id,
-              len(w)::BIGINT AS n_words,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
-            FROM n),
-      l AS (SELECT doc_id,
-              2.0 * least(stop_ratio * 5.0, 1.0)
-                  + 1.5 * least(avg_word_len / 8.0, 1.0)
-                  - 3.0 * punct_ratio
-                  + 0.5 * least(n_words / 200.0, 1.0)
-                  - 1.2 AS logit
-            FROM m),
+      WITH ${Fragments.sqlModelLogitCtes},
       pred AS (SELECT doc_id,
                  CASE WHEN round(1.0 / (1.0 + exp(-logit)), 9) >= 0.5
                    THEN 1 ELSE 0 END AS p
                FROM l),
-      g0 AS (SELECT doc_id, ${Extensions.NormW} AS w,
-               len(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS nc
-             FROM documents),
-      g1 AS (SELECT doc_id, len(w)::BIGINT AS n_words,
-               (nc - (len(w) - 1))::BIGINT AS n_word_chars,
-               len(list_filter([${TextOps.StopEn.map(w => s"'$w'").mkString(", ")}],
-                 s -> list_contains(w, s)))::BIGINT AS n_stop_distinct
-             FROM g0),
-      truth AS (SELECT doc_id,
-                  (CASE WHEN n_words >= 30 AND n_words <= 100000 THEN 1 ELSE 0 END) *
-                  (CASE WHEN n_word_chars >= 3 * n_words AND n_word_chars <= 10 * n_words THEN 1 ELSE 0 END) *
-                  (CASE WHEN n_stop_distinct >= 2 THEN 1 ELSE 0 END) AS t
-                FROM g1),
+      ${Fragments.sqlGopherTruthCtes},
       c AS (SELECT
               sum(CASE WHEN p = 1 AND t = 1 THEN 1 ELSE 0 END)::BIGINT AS tp,
               sum(CASE WHEN p = 1 AND t = 0 THEN 1 ELSE 0 END)::BIGINT AS fp,
@@ -285,34 +245,9 @@ object Breadth9 {
         .orderBy(col("bin"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, text, ${Extensions.NormW} AS w FROM documents),
-      m AS (SELECT doc_id,
-              len(w)::BIGINT AS n_words,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${Extensions.sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
-            FROM n),
-      l AS (SELECT doc_id,
-              2.0 * least(stop_ratio * 5.0, 1.0)
-                  + 1.5 * least(avg_word_len / 8.0, 1.0)
-                  - 3.0 * punct_ratio
-                  + 0.5 * least(n_words / 200.0, 1.0)
-                  - 1.2 AS logit
-            FROM m),
+      WITH ${Fragments.sqlModelLogitCtes},
       pred AS (SELECT doc_id, round(1.0 / (1.0 + exp(-logit)), 9) AS prob FROM l),
-      g0 AS (SELECT doc_id, ${Extensions.NormW} AS w,
-               len(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS nc
-             FROM documents),
-      g1 AS (SELECT doc_id, len(w)::BIGINT AS n_words,
-               (nc - (len(w) - 1))::BIGINT AS n_word_chars,
-               len(list_filter([${TextOps.StopEn.map(w => s"'$w'").mkString(", ")}],
-                 s -> list_contains(w, s)))::BIGINT AS n_stop_distinct
-             FROM g0),
-      truth AS (SELECT doc_id,
-                  (CASE WHEN n_words >= 30 AND n_words <= 100000 THEN 1 ELSE 0 END) *
-                  (CASE WHEN n_word_chars >= 3 * n_words AND n_word_chars <= 10 * n_words THEN 1 ELSE 0 END) *
-                  (CASE WHEN n_stop_distinct >= 2 THEN 1 ELSE 0 END) AS t
-                FROM g1),
+      ${Fragments.sqlGopherTruthCtes},
       b AS (SELECT pred.doc_id, prob, t,
               least(floor(prob * 10), 9.0)::BIGINT AS bin
             FROM pred JOIN truth USING (doc_id))
@@ -514,8 +449,8 @@ object Breadth9 {
           "doc_id", threshold = 0.8)
         .orderBy(col("contained"), col("container")),
     Some(s"""
-      WITH ${Extensions.augCte(perturb = true)},
-      norm AS (SELECT doc_id, ${Extensions.NormW} AS w FROM aug),
+      WITH ${Fragments.augCte(perturb = true)},
+      norm AS (SELECT doc_id, ${Fragments.NormW} AS w FROM aug),
       sh AS (SELECT doc_id, w FROM norm WHERE len(w) >= 3),
       ss AS (SELECT doc_id,
                list_distinct(list_transform(range(len(w) - 2),
@@ -563,11 +498,11 @@ object Breadth9 {
         .orderBy(col("lang"), col("lang_pred"))
     },
     Some(s"""
-      WITH n AS (SELECT doc_id, lang, ${Extensions.NormW} AS w FROM documents),
+      WITH n AS (SELECT doc_id, lang, ${Fragments.NormW} AS w FROM documents),
       p AS (SELECT doc_id, lang,
-              ${Extensions.sqlHits(TextOps.StopEn)} AS hits_en,
-              ${Extensions.sqlHits(TextOps.StopEs)} AS hits_es,
-              ${Extensions.sqlHits(TextOps.StopDe)} AS hits_de,
+              ${Fragments.sqlHits(TextOps.StopEn)} AS hits_en,
+              ${Fragments.sqlHits(TextOps.StopEs)} AS hits_es,
+              ${Fragments.sqlHits(TextOps.StopDe)} AS hits_de,
               CASE WHEN hits_en >= hits_es AND hits_en >= hits_de THEN 'en'
                    WHEN hits_es >= hits_de THEN 'es' ELSE 'de' END AS lang_pred
             FROM n),
@@ -632,23 +567,13 @@ object Breadth9 {
         .orderBy(col("cid"), col("sub"))
     },
     Some(s"""
-      WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
-                  FROM embeddings),
-      cq AS (SELECT vec_id, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
-             FROM qn),
-      rec AS (SELECT vec_id, list_transform(range(len(codes)), i -> codes[i+1] * s) AS embedding
-              FROM cq),
-      ${Extensions.sqlTrainedCentCtes},
+      WITH ${Fragments.sqlInt8RecCtes},
+      ${Fragments.sqlTrainedCentCtes},
       corp_a AS (
         SELECT vec_id, cid FROM (
           SELECT e.vec_id, t.cid,
                  row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
+                   ORDER BY ${Fragments.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
           FROM rec e, cent t)
         WHERE rn <= ${Extensions.ServingSpill}),
       sizes AS (SELECT cid, count(*) AS n_before FROM corp_a GROUP BY cid),
@@ -661,8 +586,8 @@ object Breadth9 {
              JOIN embeddings a ON a.vec_id = s.s1
              JOIN embeddings b ON b.vec_id = s.s2),
       asg AS (SELECT m.cid, m.n_before, m.vec_id,
-                CASE WHEN ${Extensions.sqlCos("m.embedding", "sv.v1")} >=
-                          ${Extensions.sqlCos("m.embedding", "sv.v2")}
+                CASE WHEN ${Fragments.sqlCos("m.embedding", "sv.v1")} >=
+                          ${Fragments.sqlCos("m.embedding", "sv.v2")}
                      THEN 0 ELSE 1 END AS sub
               FROM m JOIN sv ON sv.cid = m.cid)
       SELECT cid, n_before, sub::BIGINT AS sub, count(*) AS n_members
@@ -696,7 +621,7 @@ object Breadth9 {
     Some(s"""
       WITH d AS (SELECT doc_id, n_chars,
                    ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 16 AS shard,
-                   len(${Extensions.NormW})::BIGINT AS tok
+                   len(${Fragments.NormW})::BIGINT AS tok
                  FROM documents)
       SELECT shard, count(*) AS n_docs, sum(tok)::BIGINT AS n_tokens,
              sum(n_chars)::BIGINT AS n_bytes
@@ -726,7 +651,7 @@ object Breadth9 {
   val evalDedupQuality = Q(
     "eval_dedup_quality",
     (s, dir) => {
-      val docs = Extensions.augmentedDocs(s, dir, perturb = true)
+      val docs = Fragments.augmentedDocs(s, dir, perturb = true)
       val m = 2 // 1-in-m systematic doc sample for the truth slice
       val inSample = (c: org.apache.spark.sql.Column) =>
         Dedup.hash32(c.cast("string")) % m === 0
@@ -758,8 +683,8 @@ object Breadth9 {
         .withColumn("sample_rate", lit(1.0 / m))
     },
     Some(s"""
-      WITH ${Extensions.minhashPairsCtes},
-      tn AS (SELECT doc_id, lang, ${Extensions.NormW} AS w FROM aug
+      WITH ${Fragments.minhashPairsCtes},
+      tn AS (SELECT doc_id, lang, ${Fragments.NormW} AS w FROM aug
              WHERE ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT % 2 = 0),
       tsh AS (SELECT doc_id, lang,
                 list_distinct(list_transform(range(len(w) - 2),
@@ -896,20 +821,12 @@ object Breadth9 {
   val q62BasketPairs = Q(
     "q62_basket_pairs",
     (s, dir) => {
-      // EAGER checkpoints (r17): `li` feeds three consumers and
-      // `partCounts` both marginal joins — without them the plan ran
-      // FOUR lineitem scans + three distinct shuffles (no
-      // ReusedExchange: the consumers' aggregates optimize to
-      // non-identical subtrees). Eager, not lazy: both frames are
-      // multiply referenced before the first action (the safety rule).
       val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .localCheckpoint()
       val nOrders = li.select(col("l_orderkey")).distinct()
         .agg(count(lit(1)).as("__n_orders"))
       val partCounts = li.groupBy(col("l_partkey"))
         .agg(count(lit(1)).as("__cnt"))
-        .localCheckpoint()
       val baskets = li.groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("__ps"))
         .filter(size(col("__ps")) >= 2)
@@ -978,7 +895,7 @@ object Breadth9 {
     "eval_ann_recall",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") % 100 === 0)
+      val queries = Fragments.annQueries(emb)
       val exact = Similarity.bruteForceTopK(s, emb, queries, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("neighbor_id"))
       val approx = Similarity.ivfTopK(s, emb, queries,
@@ -986,51 +903,13 @@ object Breadth9 {
           "vec_id", "embedding", "cid", "cv", k = 5, nprobe = Extensions.ServingNprobe,
           spill = Extensions.ServingSpill)
         .select(col("query_id"), col("neighbor_id"))
-      exact
-        .join(approx.withColumn("__hit", lit(1L)),
-          Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(sum(coalesce(col("__hit"), lit(0L))).as("n_hit"))
-        .withColumn("recall", round(col("n_hit").cast("double") / 5, 9))
-        .orderBy(col("query_id"))
+      Fragments.recallAt5(exact, approx)
     },
     Some(s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-                 WHERE vec_id % 100 = 0),
-      c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      ep AS (SELECT query_id, neighbor_id, ${Extensions.sqlCos("qv", "cv")} AS sim
-             FROM q, c WHERE query_id <> neighbor_id),
-      exact AS (SELECT query_id, neighbor_id FROM (
-                  SELECT query_id, neighbor_id,
-                         row_number() OVER (PARTITION BY query_id
-                           ORDER BY sim DESC, neighbor_id) AS rank
-                  FROM ep) WHERE rank <= 5),
-      ${Extensions.sqlTrainedCentCtes},
-      corp_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t)
-        WHERE rn <= ${Extensions.ServingSpill}),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${Extensions.sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= ${Extensions.ServingNprobe}),
-      ap AS (SELECT DISTINCT qa.vec_id AS query_id, ca.vec_id AS neighbor_id,
-                    ${Extensions.sqlCos("qa.embedding", "ca.embedding")} AS sim
-             FROM q_a qa JOIN corp_a ca ON qa.cid = ca.cid AND qa.vec_id <> ca.vec_id),
-      approx AS (SELECT query_id, neighbor_id FROM (
-                   SELECT query_id, neighbor_id,
-                          row_number() OVER (PARTITION BY query_id
-                            ORDER BY sim DESC, neighbor_id) AS rank
-                   FROM ap) WHERE rank <= 5)
-      SELECT e.query_id,
-             sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_hit,
-             round(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / 5, 9) AS recall
+      WITH ${Fragments.sqlExactPairsCtes("ep")},
+      ${Fragments.sqlRankCte("exact", "ep", 5)},
+      ${Fragments.sqlServeApproxCtes(Extensions.ServingSpill, Extensions.ServingNprobe, 5)}
+      ${Fragments.RecallSelect}
       FROM exact e LEFT JOIN approx a
         ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
       GROUP BY e.query_id

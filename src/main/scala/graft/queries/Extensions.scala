@@ -16,25 +16,7 @@ import org.apache.spark.sql.functions._
   * implementation.
   */
 object Extensions {
-
-  private[queries] def augmentedDocs(s: SparkSession, dir: String, perturb: Boolean): DataFrame = {
-    val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"), col("lang"))
-    val copies = d
-      .withColumn("doc_id", col("doc_id") + 100000L)
-      .withColumn("text", if (perturb) concat(lit("xx "), col("text")) else col("text"))
-    d.unionByName(copies)
-  }
-
-  private[queries] def augCte(perturb: Boolean): String = {
-    val t = if (perturb) "'xx ' || text" else "text"
-    s"""aug AS (
-      SELECT doc_id, text, lang FROM documents
-      UNION ALL
-      SELECT doc_id + 100000, $t, lang FROM documents)"""
-  }
-
-  /** DuckDB mirror of Dedup.normText + word split. */
-  private[queries] val NormW = raw"string_split(regexp_replace(trim(lower(text)), '\s+', ' ', 'g'), ' ')"
+  import Fragments._
 
   val dedupExact = Q(
     "dedup_exact",
@@ -47,38 +29,6 @@ object Extensions {
              min(doc_id) AS keep_id, count(*) AS n_copies
       FROM aug GROUP BY 1 ORDER BY content_hash
     """.trim))
-
-  /** DuckDB CTE chain reproducing Dedup.minhashCandidatePairs over the
-    * perturbed augmented corpus; ends with a `pairs` CTE (doc_a < doc_b,
-    * distinct). Shared by the pair query and the cluster query.
-    */
-  /** The minhash chain (norm → shingles → hashes → signature → bands →
-    * `pairs`) over an arbitrary source CTE exposing (doc_id, text) —
-    * lets composite oracles (the dedup cascade) run the SAME chain
-    * over a filtered survivor set.
-    */
-  private[queries] def minhashChainFrom(src: String): String = {
-    val sigs = Dedup.SeedsA.zip(Dedup.SeedsB).map { case (a, b) =>
-      s"list_min(list_transform(hs, h -> ($a * h + $b) % ${Dedup.HashPrime}))"
-    }.mkString(",\n               ")
-    val bands = (0 until 4).map { j =>
-      s"'$j:' || sig[${2 * j + 1}]::VARCHAR || '_' || sig[${2 * j + 2}]::VARCHAR"
-    }.mkString(",\n               ")
-    s"""norm AS (SELECT doc_id, $NormW AS w FROM $src),
-      sh AS (SELECT doc_id, w FROM norm WHERE len(w) >= 3),
-      hs AS (SELECT doc_id,
-               list_transform(range(len(w) - 2),
-                 i -> ('0x' || substr(md5(w[i+1] || ' ' || w[i+2] || ' ' || w[i+3]), 1, 8))::BIGINT) AS hs
-             FROM sh),
-      sig AS (SELECT doc_id, [$sigs] AS sig FROM hs),
-      bands AS (SELECT doc_id, unnest([$bands]) AS band FROM sig),
-      pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                FROM bands a JOIN bands b ON a.band = b.band AND a.doc_id < b.doc_id)"""
-  }
-
-  private[queries] def minhashPairsCtes: String =
-    s"""${augCte(perturb = true)},
-      ${minhashChainFrom("aug")}"""
 
   val dedupMinhash = Q(
     "dedup_minhash_pairs",
@@ -151,17 +101,7 @@ object Extensions {
         s.read.parquet(Breadth20.ensureAugBandIndex(s, dir)), "doc_id")
       Dedup.clusterAssignment(docs, pairs, "doc_id").orderBy(col("doc_id"))
     },
-    Some(s"""
-      WITH RECURSIVE $minhashPairsCtes,
-      edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s)
-      SELECT a.doc_id, coalesce(least(c.mn, a.doc_id), a.doc_id) AS cluster_id
-      FROM aug a LEFT JOIN comp c USING (doc_id)
-      ORDER BY doc_id
-    """.trim))
+    Some(sqlAugClusterIds(minhashComponentCtes)))
 
   /** Same clustering task as dedup_clusters, via the alternating
     * large-star/small-star contraction — the O(log n)-round algorithm a
@@ -180,17 +120,7 @@ object Extensions {
     (s, dir) =>
       s.read.parquet(Breadth20.ensureAugClusters(s, dir))
         .orderBy(col("doc_id")),
-    Some(s"""
-      WITH RECURSIVE $minhashPairsCtes,
-      edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s)
-      SELECT a.doc_id, coalesce(least(c.mn, a.doc_id), a.doc_id) AS cluster_id
-      FROM aug a LEFT JOIN comp c USING (doc_id)
-      ORDER BY doc_id
-    """.trim))
+    Some(sqlAugClusterIds(minhashComponentCtes)))
 
   val dedupSimhash = Q(
     "dedup_simhash",
@@ -409,11 +339,7 @@ object Extensions {
                          JOIN dh b ON b.doc_id = doc_b),
       hv AS (SELECT doc_a, doc_b FROM jac
              WHERE doc_a < 100000 AND doc_b < 100000 AND j >= 0.5),
-      edges AS (SELECT doc_a AS es, doc_b AS ed FROM hv
-                UNION SELECT doc_b, doc_a FROM hv),
-      reach(es, ed) AS (SELECT es, ed FROM edges
-                        UNION SELECT r.es, e.ed FROM reach r JOIN edges e ON r.ed = e.es),
-      comp AS (SELECT es AS doc_id, min(ed) AS mn FROM reach GROUP BY es),
+      ${sqlComponentCtes("hv", "es", "ed")},
       histclus AS (SELECT d.doc_id, coalesce(least(c.mn, d.doc_id), d.doc_id) AS cluster_id
                    FROM documents d LEFT JOIN comp c USING (doc_id)),
       cpv AS (SELECT doc_b AS doc_id, doc_a AS dup_of FROM jac
@@ -431,34 +357,17 @@ object Extensions {
 
   // ---- similarity search -------------------------------------------------
 
-  /** DuckDB cosine over list columns — sequential left-fold sums, same
-    * op order as the codegen'd CosineSimilarity kernel, rounded to 9dp
-    * in both engines.
-    */
-  private[queries] def sqlCos(a: String, b: String): String =
-    s"""round(
-       list_sum(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $b[i+1]::DOUBLE)) /
-       (sqrt(list_sum(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $a[i+1]::DOUBLE))) *
-        sqrt(list_sum(list_transform(range(len($b)), i -> $b[i+1]::DOUBLE * $b[i+1]::DOUBLE)))), 9)"""
-
   val annBrute = Q(
     "ann_cosine_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.bruteForceTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
+      Similarity.bruteForceTopK(s, emb, annQueries(emb),
           "vec_id", "embedding", k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
-      WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 100 = 0),
-      c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-      p AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "cv")} AS sim
-            FROM q, c WHERE query_id <> neighbor_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      WITH ${sqlExactPairsCtes("p")}
+      ${sqlTopK("p", 5)}
     """.trim))
 
   /** Asymmetric quantized search — the consumer of [[annQuantize]]:
@@ -475,19 +384,16 @@ object Extensions {
       val recon = Similarity.quantizeInt8(emb, "vec_id", "embedding")
         .select(col("vec_id"),
           expr("transform(codes, c -> c * scale)").as("embedding"))
-      Similarity.bruteForceTopK(s, recon, emb.filter(col("vec_id") % 100 === 0),
+      Similarity.bruteForceTopK(s, recon, annQueries(emb),
           "vec_id", "embedding", k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
       WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
+                    $Int8Amax
                   FROM embeddings),
       cq AS (SELECT vec_id, embedding, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
+               $Int8Codes
              FROM qn),
       c AS (SELECT vec_id AS neighbor_id,
               list_transform(range(len(codes)), i -> codes[i+1] * s) AS cv
@@ -495,11 +401,7 @@ object Extensions {
       q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 100 = 0),
       p AS (SELECT query_id, neighbor_id, ${sqlCos("qv", "cv")} AS sim
             FROM q, c WHERE query_id <> neighbor_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      ${sqlTopK("p", 5)}
     """.trim))
 
   private def lshTableCte(t: Int): String =
@@ -516,7 +418,7 @@ object Extensions {
     "ann_lsh_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.lshTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
+      Similarity.lshTopK(s, emb, annQueries(emb),
           "vec_id", "embedding", k = 5, bits = 4, tables = 4)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -529,49 +431,19 @@ object Extensions {
             FROM cand
             JOIN embeddings q ON q.vec_id = query_id
             JOIN embeddings c ON c.vec_id = neighbor_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      ${sqlTopK("p", 5)}
     """.trim))
 
   val annIvf = Q(
     "ann_ivf_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.ivfTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
-          emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 5000),
+      Similarity.ivfTopK(s, emb, annQueries(emb), annSampledCentroids(emb),
           "vec_id", "embedding", "vec_id", "embedding", k = 5, nprobe = 2)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id % 37 = 0 AND vec_id < 5000),
-      corp_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t)
-        WHERE rn = 1),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY round(
-       list_sum(list_transform(range(len(e.embedding)), i -> e.embedding[i+1]::DOUBLE * t.cv[i+1]::DOUBLE)) /
-       (sqrt(list_sum(list_transform(range(len(e.embedding)), i -> e.embedding[i+1]::DOUBLE * e.embedding[i+1]::DOUBLE))) *
-        sqrt(list_sum(list_transform(range(len(t.cv)), i -> t.cv[i+1]::DOUBLE * t.cv[i+1]::DOUBLE)))), 9) DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= 2),
-      p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ${sqlCos("q.embedding", "c.embedding")} AS sim
-            FROM q_a q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      WITH ${sqlSampledIvfTopK("embeddings")}
     """.trim))
 
   /** Quantized IVF serving — the 100 TB composition the round-5 verdict
@@ -587,46 +459,13 @@ object Extensions {
     "ann_ivf_quantized",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.ivfQuantizedTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
-          emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 5000),
+      Similarity.ivfQuantizedTopK(s, emb, annQueries(emb), annSampledCentroids(emb),
           "vec_id", "embedding", "vec_id", "embedding", k = 5, nprobe = 2)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
-      WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
-                  FROM embeddings),
-      cq AS (SELECT vec_id, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
-             FROM qn),
-      rec AS (SELECT vec_id, list_transform(range(len(codes)), i -> codes[i+1] * s) AS embedding
-              FROM cq),
-      cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id % 37 = 0 AND vec_id < 5000),
-      corp_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM rec e, cent t)
-        WHERE rn = 1),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= 2),
-      p AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ${sqlCos("q.embedding", "c.embedding")} AS sim
-            FROM q_a q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      WITH $sqlInt8RecCtes,
+      ${sqlSampledIvfTopK("rec")}
     """.trim))
 
   /** The build/serve split on top of `ann_ivf_quantized`: the
@@ -688,34 +527,6 @@ object Extensions {
     */
   private[graft] val ServingNprobe = 15
   private[graft] val ServingNprobeLite = 9
-
-  /** DuckDB twin of the trained serving quantizer: the seed CTE plus
-    * two unrolled Lloyd rounds (assign → exact-decimal element mean),
-    * ending in `cent(cid, cv)` — the same name the serving oracles
-    * always consumed, so the training chain drops in front of any of
-    * them. Each round is the proven ann_kmeans_iter recipe (sim at
-    * 9 dp, ties to the smaller cid, elements rounded to 9 dp and summed
-    * as DECIMAL(27,9) before one double division).
-    */
-  private[queries] def sqlTrainedCentCtes: String = {
-    def assign(centCte: String, tag: String) = s"""
-      tca$tag AS (SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, c.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "c.cv")} DESC, c.cid) AS rn
-          FROM embeddings e, $centCte c) WHERE rn = 1),
-      tcm$tag AS (SELECT cid, dim,
-                    CAST(sum(CAST(round(x, 9) AS DECIMAL(27,9))) AS DOUBLE) / count(*) AS v
-                  FROM (SELECT cid, unnest(embedding)::DOUBLE AS x,
-                               unnest(range(len(embedding))) AS dim FROM tca$tag)
-                  GROUP BY cid, dim)"""
-    s"""tcseed AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-                   WHERE vec_id % 6 = 3 AND vec_id < 5000),
-      ${assign("tcseed", "1")},
-      tcc1 AS (SELECT cid, list(v ORDER BY dim) AS cv FROM tcm1 GROUP BY cid),
-      ${assign("tcc1", "2")},
-      cent AS (SELECT cid, list(v ORDER BY dim) AS cv FROM tcm2 GROUP BY cid)"""
-  }
 
   /** Exact top-5 truth for the fixed 1%-query panel, staged once per
     * corpus: the recall evals (routed economics, dim truncation) read
@@ -785,72 +596,18 @@ object Extensions {
       val emb = Tables(s, dir, "embeddings")
       val idxDir = ensureIvfInt8Index(s, dir)
       Similarity.serveQuantizedIvf(s, s.read.parquet(idxDir),
-          emb.filter(col("vec_id") % 100 === 0), servingCentroids(s, dir),
+          annQueries(emb), servingCentroids(s, dir),
           "vec_id", "embedding", "cid", "cv", k = 5, nprobe = ServingNprobeLite,
           spill = ServingSpill)
         .orderBy(col("query_id"), col("rank"))
     },
     Some(s"""
-      WITH qn AS (SELECT vec_id, embedding,
-                    list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
-                  FROM embeddings),
-      cq AS (SELECT vec_id, round(amax / 127.0, 9) AS s,
-               CASE WHEN amax = 0 THEN list_transform(embedding, x -> 0)
-                    ELSE list_transform(embedding,
-                           x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-               END AS codes
-             FROM qn),
-      rec AS (SELECT vec_id, list_transform(range(len(codes)), i -> codes[i+1] * s) AS embedding
-              FROM cq),
+      WITH $sqlInt8RecCtes,
       $sqlTrainedCentCtes,
-      corp_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM rec e, cent t)
-        WHERE rn <= $ServingSpill),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= $ServingNprobeLite),
-      p AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   ${sqlCos("q.embedding", "c.embedding")} AS sim
-            FROM q_a q JOIN corp_a c ON q.cid = c.cid AND q.vec_id <> c.vec_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      ${sqlIvfProbeCtes("rec", s"<= $ServingSpill", s"<= $ServingNprobeLite")},
+      ${sqlProbePairsCte(distinct = true)}
+      ${sqlTopK("p", 5)}
     """.trim))
-
-  /** Shared DuckDB CTE chain for PQ encode + reconstruct (the oracle
-    * twin of `pqTrain`/`pqEncode`/`pqReconstruct` at m=8, codebook =
-    * every 5th vector in id order, dense codes): `rec` is the
-    * reconstructed corpus as (vec_id, embedding).
-    */
-  private[queries] def pqRecCtes(src: String = "embeddings"): String = s"""
-      cb0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS code, embedding
-                   FROM $src WHERE vec_id % 5 = 0 AND vec_id < 5000),
-      sp AS (SELECT unnest(range(8)) AS sub),
-      cb AS (SELECT b.code, s.sub,
-                    list_transform(range(8), i -> b.embedding[s.sub*8 + i + 1]::DOUBLE) AS cw
-             FROM cb0 b, sp s),
-      d AS (SELECT e.vec_id, c.sub, c.code,
-              round(list_sum(list_transform(range(8),
-                i -> (e.embedding[c.sub*8 + i + 1]::DOUBLE - c.cw[i+1]) *
-                     (e.embedding[c.sub*8 + i + 1]::DOUBLE - c.cw[i+1]))), 9) AS dist
-            FROM $src e, cb c),
-      enc AS (SELECT vec_id, sub, code FROM (
-                SELECT vec_id, sub, code,
-                       row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist, code) AS rn
-                FROM d) WHERE rn = 1),
-      rec AS (SELECT e.vec_id, flatten(list(c.cw ORDER BY e.sub)) AS embedding
-              FROM enc e JOIN cb c ON c.sub = e.sub AND c.code = e.code
-              GROUP BY e.vec_id)"""
 
   /** Product-quantization search (ADC): corpus encoded to m=8 dense
     * codeword indices (8 bytes/vector vs 256 — the canonical
@@ -865,8 +622,7 @@ object Extensions {
     "ann_pq_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.pqTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
-          emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 5000),
+      Similarity.pqTopK(s, emb, annQueries(emb), pqCodebookRows(emb),
           "vec_id", "embedding", m = 8, k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
@@ -875,11 +631,7 @@ object Extensions {
       q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id % 100 = 0),
       p AS (SELECT query_id, rec.vec_id AS neighbor_id, ${sqlCos("qv", "rec.embedding")} AS sim
             FROM q, rec WHERE query_id <> rec.vec_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      ${sqlTopK("p", 5)}
     """.trim))
 
   /** IVF-PQ — both scale levers composed, the architecture a 100 TB
@@ -900,11 +652,7 @@ object Extensions {
     */
   private def ivfPqOracleSql(corpus: String = "embeddings", pre: String = ""): String = s"""
       WITH ${ivfPqCandidateCtes(corpus, pre)}
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 5
-      ORDER BY query_id, rank
+      ${sqlTopK("p", 5)}
     """.trim
 
   /** The IVF-PQ candidate chain up to `p` = (query_id, neighbor_id,
@@ -950,13 +698,7 @@ object Extensions {
       corp AS (SELECT r.vec_id, r.cid,
                  list_transform(range(len(r.rr)), i -> t.cv[i+1]::DOUBLE + r.rr[i+1]) AS embedding
                FROM recr r JOIN cent t ON t.cid = r.cid),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= $ServingNprobe),
+      ${sqlAssignCte("q_a", "embeddings", s"<= $ServingNprobe", " WHERE e.vec_id % 100 = 0")},
       p0 AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                     ${sqlCos("q.embedding", "c.embedding")} AS sim
              FROM q_a q JOIN corp c ON q.cid = c.cid AND q.vec_id <> c.vec_id),
@@ -967,9 +709,8 @@ object Extensions {
     "ann_ivfpq_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.ivfPqTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
-          servingCentroids(s, dir),
-          emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 5000),
+      Similarity.ivfPqTopK(s, emb, annQueries(emb),
+          servingCentroids(s, dir), pqCodebookRows(emb),
           "vec_id", "embedding", "cid", "cv", m = 16, k = 5, nprobe = ServingNprobe,
           spill = ServingSpill)
         .orderBy(col("query_id"), col("rank"))
@@ -989,7 +730,7 @@ object Extensions {
       val emb = Tables(s, dir, "embeddings")
       val (idxDir, model) = ensureIvfPqIndex(s, dir)
       Similarity.serveIvfPq(s, s.read.parquet(idxDir),
-          emb.filter(col("vec_id") % 100 === 0), servingCentroids(s, dir), model,
+          annQueries(emb), servingCentroids(s, dir), model,
           "vec_id", "embedding", "cid", "cv", k = 5, nprobe = ServingNprobe,
           spill = ServingSpill)
         .orderBy(col("query_id"), col("rank"))
@@ -1010,7 +751,7 @@ object Extensions {
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       val (idxDir, model) = ensureIvfPqIndex(s, dir)
-      val qs = emb.filter(col("vec_id") % 100 === 0)
+      val qs = annQueries(emb)
       val shortlist = Similarity.serveIvfPq(s, s.read.parquet(idxDir), qs,
         servingCentroids(s, dir), model,
         "vec_id", "embedding", "cid", "cv", k = 15, nprobe = ServingNprobe,
@@ -1020,18 +761,11 @@ object Extensions {
     },
     Some(s"""
       WITH ${ivfPqCandidateCtes()},
-      sl AS (SELECT query_id, neighbor_id FROM (
-               SELECT query_id, neighbor_id,
-                      row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-               FROM p) WHERE rank <= 15),
+      ${sqlRankCte("sl", "p", 15)},
       rr AS (SELECT s.query_id, s.neighbor_id, ${sqlCos("qe.embedding", "ce.embedding")} AS sim
              FROM sl s JOIN embeddings qe ON qe.vec_id = s.query_id
                        JOIN embeddings ce ON ce.vec_id = s.neighbor_id)
-      SELECT query_id, neighbor_id, rank, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM rr) WHERE rank <= 5
-      ORDER BY query_id, rank
+      ${sqlTopK("rr", 5)}
     """.trim))
 
   /** Incremental ANN index maintenance — the third leg of the
@@ -1064,7 +798,7 @@ object Extensions {
       val merged = Similarity.mergeIvfPqIndex(s, s.read.parquet(idxDir),
         recrawl.unionByName(fresh), servingCentroids(s, dir), model,
         "vec_id", "embedding", "cid", "cv", spill = ServingSpill)
-      Similarity.serveIvfPq(s, merged, emb.filter(col("vec_id") % 100 === 0),
+      Similarity.serveIvfPq(s, merged, annQueries(emb),
           servingCentroids(s, dir), model,
           "vec_id", "embedding", "cid", "cv", k = 5, nprobe = ServingNprobe,
           spill = ServingSpill)
@@ -1091,28 +825,13 @@ object Extensions {
     "ann_range_search",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.ivfRangeSearch(s, emb, emb.filter(col("vec_id") % 100 === 0),
-          emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 5000),
+      Similarity.ivfRangeSearch(s, emb, annQueries(emb), annSampledCentroids(emb),
           "vec_id", "embedding", "vec_id", "embedding", minSim = 0.2, nprobe = 2)
         .orderBy(col("query_id"), col("neighbor_id"))
     },
     Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-                    WHERE vec_id % 37 = 0 AND vec_id < 5000),
-      corp_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t)
-        WHERE rn = 1),
-      q_a AS (
-        SELECT vec_id, embedding, cid FROM (
-          SELECT e.vec_id, e.embedding, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= 2)
+      WITH $SampledCentCte,
+      ${sqlIvfProbeCtes("embeddings", "= 1", "<= 2")}
       SELECT query_id, neighbor_id, sim FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                ${sqlCos("q.embedding", "c.embedding")} AS sim
@@ -1130,38 +849,11 @@ object Extensions {
     "ann_filtered_topk",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      Similarity.ivfFilteredTopK(s, emb, emb.filter(col("vec_id") % 100 === 0),
-          emb.filter(col("vec_id") % 37 === 0 && col("vec_id") < 5000),
+      Similarity.ivfFilteredTopK(s, emb, annQueries(emb), annSampledCentroids(emb),
           "vec_id", "embedding", "label", "vec_id", "embedding", k = 3, nprobe = 2)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
-                    WHERE vec_id % 37 = 0 AND vec_id < 5000),
-      corp_a AS (
-        SELECT vec_id, embedding, label, cid FROM (
-          SELECT e.vec_id, e.embedding, e.label, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t)
-        WHERE rn = 1),
-      q_a AS (
-        SELECT vec_id, embedding, label, cid FROM (
-          SELECT e.vec_id, e.embedding, e.label, t.cid,
-                 row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY ${sqlCos("e.embedding", "t.cv")} DESC, t.cid) AS rn
-          FROM embeddings e, cent t WHERE e.vec_id % 100 = 0)
-        WHERE rn <= 2),
-      p AS (SELECT q.vec_id AS query_id, q.label, c.vec_id AS neighbor_id,
-                   ${sqlCos("q.embedding", "c.embedding")} AS sim
-            FROM q_a q JOIN corp_a c
-              ON q.cid = c.cid AND q.label = c.label AND q.vec_id <> c.vec_id)
-      SELECT query_id, label, neighbor_id, rank, sim FROM (
-        SELECT query_id, label, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-        FROM p) WHERE rank <= 3
-      ORDER BY query_id, rank
-    """.trim))
+    Some(sqlLabelIvfTopK("=")))
 
   /** int8 scalar quantization of the embedding table: per-vector scale,
     * exact codes (pinned via md5 of the code list) and max
@@ -1176,16 +868,12 @@ object Extensions {
           md5(array_join(transform(col("codes"), c => c.cast("string")), ",")).as("codes_md5"),
           col("max_abs_err"))
         .orderBy(col("vec_id")),
-    Some("""
+    Some(s"""
       WITH q AS (SELECT vec_id, embedding,
-                   list_max(list_transform(embedding, x -> abs(x::DOUBLE))) AS amax
+                   $Int8Amax
                  FROM embeddings),
       c AS (SELECT vec_id, embedding, amax, amax / 127.0 AS s,
-              CASE WHEN amax = 0
-                   THEN list_transform(embedding, x -> 0)
-                   ELSE list_transform(embedding,
-                          x -> CAST(floor(x::DOUBLE / (amax / 127.0) + 0.5) AS INT))
-              END AS codes
+              $Int8Codes
             FROM q)
       SELECT vec_id, round(s, 9) AS scale,
              md5(array_to_string(codes, ',')) AS codes_md5,
@@ -1287,11 +975,7 @@ object Extensions {
       pairs AS (SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
                 FROM wb a JOIN wb b ON a.cid = b.cid AND a.vec_id < b.vec_id
                 WHERE ${sqlCos("a.embedding", "b.embedding")} >= 0.999),
-      edges AS (SELECT doc_a AS sv, doc_b AS dv FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(sv, dv) AS (SELECT sv, dv FROM edges
-                        UNION SELECT r.sv, e.dv FROM reach r JOIN edges e ON r.dv = e.sv),
-      comp AS (SELECT sv AS vec_id, min(dv) AS mn FROM reach GROUP BY sv)
+      ${sqlComponentCtes("pairs", "sv", "dv", "vec_id")}
       SELECT a.vec_id,
              coalesce(least(c.mn, a.vec_id), a.vec_id) AS cluster_id,
              CAST(CASE WHEN coalesce(least(c.mn, a.vec_id), a.vec_id) = a.vec_id
@@ -1301,33 +985,6 @@ object Extensions {
     """.trim))
 
   // ---- text analysis -----------------------------------------------------
-
-  private[queries] def sqlList(xs: Seq[String]): String = xs.mkString("['", "', '", "']")
-  private[queries] def sqlHits(stops: Seq[String]): String =
-    s"len(list_filter(w, x -> list_contains(${sqlList(stops)}, x)))::BIGINT"
-
-  /** Per-language stop-hit count — the DuckDB twin of the broadcast
-    * lookup in `TextOps.withQualityByLang`: a CASE over
-    * `TextOps.StopByLang` (generated, so adding a language updates
-    * both engines from one list), English fallback for unlisted langs.
-    */
-  private[queries] def sqlHitsByLang(langExpr: String = "lang"): String =
-    s"CASE $langExpr " +
-      TextOps.StopByLang.map { case (l, st) =>
-        s"WHEN '$l' THEN ${sqlHits(st)}" }.mkString(" ") +
-      s" ELSE ${sqlHits(TextOps.StopEn)} END"
-
-  /** Per-language DISTINCT stop-word count (the Gopher stop rule's
-    * statistic) — same generated CASE, distinct semantics.
-    */
-  private[queries] def sqlStopDistinctByLang(langExpr: String = "lang"): String = {
-    def one(st: Seq[String]): String =
-      s"len(list_filter(${sqlList(st)}, s -> list_contains(w, s)))::BIGINT"
-    s"CASE $langExpr " +
-      TextOps.StopByLang.map { case (l, st) =>
-        s"WHEN '$l' THEN ${one(st)}" }.mkString(" ") +
-      s" ELSE ${one(TextOps.StopEn)} END"
-  }
 
   val textLangid = Q(
     "text_langid",
@@ -1391,14 +1048,10 @@ object Extensions {
               length(text)::BIGINT AS n_chars_raw,
               len(w)::BIGINT AS n_words,
               length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::BIGINT AS n_alpha,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              ${sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
+              ${sqlQualityFeatures(sqlHits(TextOps.StopEn))}
             FROM n)
       SELECT doc_id, n_chars_raw, n_words, n_alpha, punct_ratio, avg_word_len, stop_ratio,
-             round(least(avg_word_len / 8.0, 1.0) * 0.4
-                   + least(stop_ratio * 5.0, 1.0) * 0.4
-                   + (1.0 - punct_ratio) * 0.2, 9) AS quality
+             $QualityScore AS quality
       FROM m ORDER BY doc_id
     """.trim))
 
@@ -1549,14 +1202,7 @@ object Extensions {
       WITH RECURSIVE $subwordRecCtes,
       cnt AS (SELECT d.doc_id, coalesce(a.n_subwords, 0)::BIGINT AS n_tokens
               FROM documents d LEFT JOIN agg a USING (doc_id)),
-      srt AS (SELECT doc_id, n_tokens,
-                (sum(n_tokens) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens)::BIGINT AS start_pos
-              FROM cnt)
-      SELECT doc_id, n_tokens, start_pos,
-             (start_pos // 512)::BIGINT AS first_window,
-             ((start_pos + n_tokens - 1) // 512)::BIGINT AS last_window
-      FROM srt ORDER BY doc_id
+      ${sqlPackWindows("cnt")}
     """.trim))
 
   val textFingerprint = Q(
@@ -1695,17 +1341,8 @@ object Extensions {
       val (assignDir, _) = ensurePhashClusters(s, dir)
       s.read.parquet(assignDir).orderBy(col("doc_id"))
     },
-    Some(s"""
-      WITH RECURSIVE $phashPairsCtes,
-      edges AS (SELECT doc_a AS es, doc_b AS ed FROM ppairs
-                UNION SELECT doc_b, doc_a FROM ppairs),
-      reach(es, ed) AS (SELECT es, ed FROM edges
-                        UNION SELECT r.es, e.ed FROM reach r JOIN edges e ON r.ed = e.es),
-      comp AS (SELECT es AS doc_id, min(ed) AS mn FROM reach GROUP BY es)
-      SELECT a.doc_id, coalesce(least(c.mn, a.doc_id), a.doc_id) AS cluster_id
-      FROM aug a LEFT JOIN comp c USING (doc_id)
-      ORDER BY doc_id
-    """.trim))
+    Some(sqlAugClusterIds(s"""$phashPairsCtes,
+      ${sqlComponentCtes("ppairs", "es", "ed")}""")))
 
   /** Fixed probe set for the phash serving path: ten originals plus
     * their ten perturbed copies.
@@ -1734,11 +1371,7 @@ object Extensions {
     },
     Some(s"""
       WITH RECURSIVE $phashPairsCtes,
-      edges AS (SELECT doc_a AS es, doc_b AS ed FROM ppairs
-                UNION SELECT doc_b, doc_a FROM ppairs),
-      reach(es, ed) AS (SELECT es, ed FROM edges
-                        UNION SELECT r.es, e.ed FROM reach r JOIN edges e ON r.ed = e.es),
-      comp AS (SELECT es AS doc_id, min(ed) AS mn FROM reach GROUP BY es),
+      ${sqlComponentCtes("ppairs", "es", "ed")},
       assign AS (SELECT a.doc_id, coalesce(least(c.mn, a.doc_id), a.doc_id) AS cluster_id
                  FROM aug a LEFT JOIN comp c USING (doc_id)),
       sizes AS (SELECT cluster_id, count(*)::BIGINT AS n_members
@@ -1803,25 +1436,18 @@ object Extensions {
         .orderBy(col("doc_id"))
     },
     Some(s"""
-      WITH RECURSIVE $minhashPairsCtes,
-      edges AS (SELECT doc_a AS s, doc_b AS d FROM pairs
-                UNION SELECT doc_b, doc_a FROM pairs),
-      reach(s, d) AS (SELECT s, d FROM edges
-                      UNION SELECT r.s, e.d FROM reach r JOIN edges e ON r.d = e.s),
-      comp AS (SELECT s AS doc_id, min(d) AS mn FROM reach GROUP BY s),
+      WITH RECURSIVE $minhashComponentCtes,
       canon AS (SELECT a.doc_id FROM aug a LEFT JOIN comp c USING (doc_id)
                 WHERE coalesce(least(c.mn, a.doc_id), a.doc_id) = a.doc_id),
       nq AS (SELECT doc_id, text, $NormW AS w FROM aug),
       m AS (SELECT doc_id, text,
               len(w)::BIGINT AS n_words,
-              length(regexp_replace(lower(text), '[^a-z]', '', 'g'))::DOUBLE / len(w) AS avg_word_len,
-              length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g'))::DOUBLE / length(text) AS punct_ratio,
-              ${sqlHits(TextOps.StopEn)}::DOUBLE / len(w) AS stop_ratio
+              $AvgWordLen,
+              $PunctRatio,
+              ${sqlStopRatio(sqlHits(TextOps.StopEn))}
             FROM nq),
       sc AS (SELECT doc_id, n_words,
-               round(least(avg_word_len / 8.0, 1.0) * 0.4
-                     + least(stop_ratio * 5.0, 1.0) * 0.4
-                     + (1.0 - punct_ratio) * 0.2, 9) AS quality,
+               $QualityScore AS quality,
                len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT AS bpe_tokens
              FROM m)
       SELECT sc.doc_id, sc.n_words, sc.quality, sc.bpe_tokens
@@ -1872,13 +1498,12 @@ object Extensions {
     "ann_kmeans_assign",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cent = emb.filter(col("vec_id") % 250 === 0 && col("vec_id") < 5000)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cent = kmeansSeeds(emb)
       kmeansRollup(Similarity.kmeansAssign(s, emb, cent,
         "vec_id", "embedding", "cid", "cv"))
     },
     Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id % 250 = 0 AND vec_id < 5000),
+      WITH $KmeansSeedCte,
       a AS (SELECT vec_id, cid, sim,
                    row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
             FROM (SELECT e.vec_id, c.cid, ${sqlCos("e.embedding", "c.cv")} AS sim
@@ -1900,13 +1525,12 @@ object Extensions {
     "ann_kmeans_iter",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val cent = emb.filter(col("vec_id") % 250 === 0 && col("vec_id") < 5000)
-        .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+      val cent = kmeansSeeds(emb)
       kmeansRollup(Similarity.kmeansLloydRound(s, emb, "vec_id", "embedding",
         cent, "cid", "cv"))
     },
     Some(s"""
-      WITH cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id % 250 = 0 AND vec_id < 5000),
+      WITH $KmeansSeedCte,
       a0 AS (SELECT vec_id, embedding, cid,
                     row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
              FROM (SELECT e.vec_id, e.embedding, c.cid, ${sqlCos("e.embedding", "c.cv")} AS sim
@@ -2039,35 +1663,12 @@ object Extensions {
   val textDecontaminate = Q(
     "text_decontaminate",
     (s, dir) => {
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-      val bench = d.filter(col("doc_id") % 97 === 0)
-      val corpus = d.select((col("doc_id") + 100000L).as("doc_id"),
-        concat(lit("xx "), col("text")).as("text"))
+      val (corpus, bench) = decontaminationSides(s, dir)
       graft.ext.TextOps.contaminationPairs(corpus, bench, "doc_id", "text",
           n = 8, minOverlap = 10)
         .orderBy(col("doc_id"), col("bench_id"))
     },
-    Some(s"""
-      WITH norm AS (SELECT doc_id, $NormW AS w FROM documents),
-      bench AS (SELECT doc_id AS bench_id,
-                  list_distinct(list_transform(range(len(w) - 7),
-                    i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] ||
-                         ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7] || ' ' || w[i+8])) AS s
-                FROM norm WHERE len(w) >= 8 AND doc_id % 97 = 0),
-      corpn AS (SELECT doc_id + 100000 AS doc_id,
-                  string_split(regexp_replace(trim(lower('xx ' || text)), '\\s+', ' ', 'g'), ' ') AS w
-                FROM documents),
-      corp AS (SELECT doc_id,
-                 list_distinct(list_transform(range(len(w) - 7),
-                   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] ||
-                        ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7] || ' ' || w[i+8])) AS s
-               FROM corpn WHERE len(w) >= 8),
-      p AS (SELECT c.doc_id, b.bench_id,
-              len(list_filter(c.s, x -> list_contains(b.s, x)))::BIGINT AS n_shared
-            FROM corp c CROSS JOIN bench b)
-      SELECT doc_id, bench_id, n_shared FROM p
-      WHERE n_shared >= 10 ORDER BY doc_id, bench_id
-    """.trim))
+    Some(decontaminateOracle))
 
   /** The bloom-pre-filtered twin of `text_decontaminate`: same synthetic
     * leak, same exact answer (the oracle is literally the exact SQL),
@@ -2080,35 +1681,12 @@ object Extensions {
   val textBloomDecontaminate = Q(
     "text_bloom_decontaminate",
     (s, dir) => {
-      val d = Tables(s, dir, "documents").select(col("doc_id"), col("text"))
-      val bench = d.filter(col("doc_id") % 97 === 0)
-      val corpus = d.select((col("doc_id") + 100000L).as("doc_id"),
-        concat(lit("xx "), col("text")).as("text"))
+      val (corpus, bench) = decontaminationSides(s, dir)
       graft.ext.TextOps.bloomContaminationPairs(corpus, bench, "doc_id", "text",
           n = 8, minOverlap = 10)
         .orderBy(col("doc_id"), col("bench_id"))
     },
-    Some(s"""
-      WITH norm AS (SELECT doc_id, $NormW AS w FROM documents),
-      bench AS (SELECT doc_id AS bench_id,
-                  list_distinct(list_transform(range(len(w) - 7),
-                    i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] ||
-                         ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7] || ' ' || w[i+8])) AS s
-                FROM norm WHERE len(w) >= 8 AND doc_id % 97 = 0),
-      corpn AS (SELECT doc_id + 100000 AS doc_id,
-                  string_split(regexp_replace(trim(lower('xx ' || text)), '\\s+', ' ', 'g'), ' ') AS w
-                FROM documents),
-      corp AS (SELECT doc_id,
-                 list_distinct(list_transform(range(len(w) - 7),
-                   i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] ||
-                        ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7] || ' ' || w[i+8])) AS s
-               FROM corpn WHERE len(w) >= 8),
-      p AS (SELECT c.doc_id, b.bench_id,
-              len(list_filter(c.s, x -> list_contains(b.s, x)))::BIGINT AS n_shared
-            FROM corp c CROSS JOIN bench b)
-      SELECT doc_id, bench_id, n_shared FROM p
-      WHERE n_shared >= 10 ORDER BY doc_id, bench_id
-    """.trim))
+    Some(decontaminateOracle))
 
   /** Corpus-global line dedup over a deterministically "lined" corpus:
     * the raw documents carry no newlines, so the test vector injects the
@@ -2165,15 +1743,13 @@ object Extensions {
     (s, dir) =>
       graft.ext.TextOps.gopherRules(Tables(s, dir, "documents"), "doc_id", "text")
         .orderBy(col("doc_id")),
-    Some {
-      val stops = TextOps.StopEn.map(w => s"'$w'").mkString(", ")
-      s"""
+    Some(s"""
       WITH n AS (SELECT doc_id, $NormW AS w,
                    len(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS nc
                  FROM documents),
       b AS (SELECT doc_id, len(w)::BIGINT AS n_words,
               (nc - (len(w) - 1))::BIGINT AS n_word_chars,
-              len(list_filter([$stops], s -> list_contains(w, s)))::BIGINT AS n_stop_distinct
+              ${sqlStopDistinct(TextOps.StopEn)} AS n_stop_distinct
             FROM n)
       SELECT doc_id, n_words, n_word_chars,
              round(n_word_chars::DOUBLE / n_words, 9) AS mean_wlen,
@@ -2185,8 +1761,7 @@ object Extensions {
              (CASE WHEN n_word_chars >= 3 * n_words AND n_word_chars <= 10 * n_words THEN 1 ELSE 0 END)::BIGINT *
              (CASE WHEN n_stop_distinct >= 2 THEN 1 ELSE 0 END)::BIGINT AS keep
       FROM b ORDER BY doc_id
-    """.trim
-    })
+    """.trim))
 
   /** Exact-substring duplicate spans at n=5 (the probe showed 71/500
     * docs carry a repeated 5-gram at sf0.01 — real discrimination, not

@@ -57,7 +57,8 @@ object DemoDrive {
         .getBytes(java.nio.charset.Charset.forName("ISO-8859-1")))
     val res = graft.etl.EtlRunner.run(spark, rawDir.toString, modDir.toString,
       "radicados", java.sql.Date.valueOf("2026-08-12"),
-      graft.etl.Dictionaries.radicados, auditCols = Seq("Rpta"))
+      graft.etl.Dictionaries.radicados, auditCols = Seq("Rpta"),
+      runId = java.util.UUID.randomUUID().toString, runTs = java.time.LocalDateTime.now())
     println(s"etl run: ${res.rows} rows → ${res.modeledPath}")
     spark.read.parquet(res.modeledPath)
       .select("Radicado", "grupo_destino", "Rpta").show(false)

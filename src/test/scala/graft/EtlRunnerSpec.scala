@@ -31,7 +31,8 @@ class EtlRunnerSpec extends SparkSpec {
       "100;15/03/2024 14:30;PEPE;asunto;N;WEB;E1;PROFESIONAL-GGC-JUAN PEREZ;0;",
       "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;"))
     val r1 = EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
-      Dictionaries.radicados, auditCols)
+      Dictionaries.radicados, auditCols,
+      runId = "run-1", runTs = java.time.LocalDateTime.of(2026, 8, 12, 8, 0))
     assert(r1.rows == 2 && r1.authlogRows.isEmpty) // first run: nothing to diff
     between(r1)
     writeCsv(raw, "raw2_radicados.csv", Seq(
@@ -39,8 +40,11 @@ class EtlRunnerSpec extends SparkSpec {
       "101;16/03/2024 09:00;ANA;otro;N;WEB;E2;MARIA LOPEZ;1;",
       "102;17/03/2024 10:00;LUIS;nuevo;N;WEB;E3;ASESOR-GTICS-ANA RUIZ;0;"))
     EtlRunner.run(spark, rawDir, modeledDir, "radicados", today,
-      Dictionaries.radicados, auditCols)
+      Dictionaries.radicados, auditCols, runId = Run2Id, runTs = Run2Ts)
   }
+
+  private val Run2Id = "run-2"
+  private val Run2Ts = java.time.LocalDateTime.of(2026, 8, 13, 9, 30)
 
   test("catalog → extract → transform → load → integrate, end to end") {
     val raw = Files.createTempDirectory("raw_")
@@ -60,6 +64,10 @@ class EtlRunnerSpec extends SparkSpec {
     val log = spark.read.parquet(modeled.toString + "/radicados_authlog")
     assert(log.count() == 1)
     assert(log.select("tipo_cambio").collect()(0).getString(0) == "Modificado")
+    // the committed log row carries run 2's own id and timestamp
+    val stamp = log.selectExpr("id_log", "CAST(fecha_modificacion AS STRING)").collect()(0)
+    assert(stamp.getString(0) == Run2Id)
+    assert(stamp.getString(1) == "2026-08-13 09:30:00")
   }
 
   test("a swap interrupted between its two renames is rolled back by the next run") {
@@ -248,6 +256,7 @@ class EtlRunnerSpec extends SparkSpec {
       val r = EtlRunner.run(spark, "raw-container", modeled.toString, "radicados",
         java.sql.Date.valueOf("2026-08-12"), Dictionaries.radicados,
         auditCols = Seq("Rpta", "funcionario_destino"),
+        runId = "run-rest", runTs = java.time.LocalDateTime.of(2026, 8, 12, 0, 0),
         source = rest, sink = rest)
       assert(r.sourceFile == "f-new") // newest by createdTime across pages
       assert(r.rows == 2)

@@ -28,6 +28,23 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  /** A shared fragment that loses its `s` interpolator renders a literal
+    * `${x}` or `$x`, and one read before its object has finished
+    * initialising renders `null`. Outside quoted literals the oracles
+    * use no `$`, and SQL's own NULL is upper case, so either token there
+    * can only come from Scala.
+    */
+  test("rendered oracles contain no unrendered interpolation") {
+    val quoted = "'(?:[^']|'')*'".r
+    val leftover = "\\$|\\bnull\\b".r
+    val offenders = SparkEntry.oracleSql.toSeq.sortBy(_._1).flatMap { case (name, sql) =>
+      val found = if (sql.contains("${")) Some("${")
+        else leftover.findFirstIn(quoted.replaceAllIn(sql, "''"))
+      found.map(t => s"$name renders $t")
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
   /** DuckDB's `sum(BIGINT)` returns HUGEINT (int128) while Spark's
     * `sum(long)` returns BIGINT — values compare equal but the driver's
     * type-aware hash differs, so the row is hash-red ONLY at the driver

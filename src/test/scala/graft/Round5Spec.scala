@@ -65,6 +65,7 @@ class Round5Spec extends SparkSpec {
     val r = graft.etl.EtlRunner.run(spark, raw.toString, modeled.toString,
       "radicados", java.sql.Date.valueOf("2026-08-12"),
       graft.etl.Dictionaries.radicados,
+      runId = "run-counting", runTs = java.time.LocalDateTime.of(2026, 8, 12, 0, 0),
       source = Counting, sink = Counting)
     assert(r.rows == 1L)
     assert(Counting.lists == 1 && Counting.reads == 1 && Counting.writes >= 1)
