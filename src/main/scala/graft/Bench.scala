@@ -110,8 +110,8 @@ object Bench {
     r.select(sum("id").over(
       org.apache.spark.sql.expressions.Window.partitionBy("k").orderBy("id"))).count()
     r.orderBy(desc("id")).limit(10).count()
-    // JIT the fused text-hashing kernels (shingle/minhash/simhash/cosine)
-    // on synthetic rows — whichever dedup query runs first otherwise
+    // JIT the fused text kernels (shingle/minhash/simhash/text stats) on
+    // synthetic rows — whichever dedup or text query runs first otherwise
     // pays their cold-compile cost.
     graft.functions.VectorExpressions.register(spark)
     val txt = spark.range(256).select(
@@ -119,6 +119,8 @@ object Bench {
     txt.select(expr("graft_minhash_sig(graft_shingle_hashes64(split(text, ' '), 3))").as("sig"))
       .select(explode(col("sig"))).count()
     txt.select(expr("graft_simhash32(graft_shingle_hashes32(split(text, ' '), 1))")).count()
+    txt.select(expr("graft_text_stats(text, lower(text), array('w1'))").as("s"))
+      .agg(sum(col("s.bpe_tokens"))).collect()
     // Layout/ingest warm-up: bucketed, partitioned, and exported copies
     // are ingest-time artifacts — queries pay to READ a layout, never to
     // build it (a production table is bucketed once at load, not per

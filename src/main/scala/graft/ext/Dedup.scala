@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Deduplication operators for large-scale text corpora (north-star
   * extension surface, SURVEY.md §7.5).
@@ -340,15 +341,19 @@ object Dedup {
     * appears in `edges`; isolated vertices are the caller's left join.
     */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25): DataFrame = {
+      maxIter: Int = 25): DataFrame =
     // materialize the pair list once BEFORE symmetrizing — the union
     // would otherwise evaluate the (expensive) upstream candidate
-    // pipeline twice, once per direction. The symmetrized view needs no
-    // distinct or checkpoint of its own: ordered pairs (a<b by
-    // convention) cannot collide with their swaps, duplicate edges
-    // cannot change a min-aggregate, and re-deriving the union from the
-    // materialized pairs is cheaper than another shuffle + write.
-    val p = edges.select(col(aCol).as("src"), col(bCol).as("dst")).localCheckpoint()
+    // pipeline twice, once per direction.
+    hashMin(edges.select(col(aCol).as("src"), col(bCol).as("dst")).localCheckpoint(), maxIter)
+
+  /** [[connectedComponents]] over a materialized (src, dst) pair list. */
+  private def hashMin(p: DataFrame, maxIter: Int): DataFrame = {
+    // The symmetrized view needs no distinct or checkpoint of its own:
+    // ordered pairs (a<b by convention) cannot collide with their swaps,
+    // duplicate edges cannot change a min-aggregate, and re-deriving the
+    // union from the materialized pairs is cheaper than another shuffle
+    // + write.
     val e = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
     // fold round 1 into initialization: every vertex of the symmetric
     // edge list appears as src, so one groupBy yields both the vertex
@@ -360,10 +365,9 @@ object Dedup {
       .localCheckpoint(eager = false)
     // The label table is one row per vertex *of the candidate graph* —
     // docs with at least one LSH collision, a small fraction of the
-    // corpus. When it fits the broadcast budget, each propagation round
-    // becomes a broadcast join (no shuffle of the edge list); past the
-    // budget it falls back to the shuffled join, which is the correct
-    // 100 TB plan.
+    // corpus. Up to [[SmallGraphRows]] vertices, each propagation round
+    // is a broadcast join (no shuffle of the edge list); past that it
+    // falls back to the shuffled join, which is the correct 100 TB plan.
     // Convergence via the monotone-sum invariant: each round takes a
     // componentwise min, so every label is non-increasing and the label
     // SUM strictly decreases until the fixpoint — equal sums ⟺ no label
@@ -379,7 +383,7 @@ object Dedup {
     }
     val init = labels.agg(count(lit(1)),
       sum(col("cluster_id").cast("decimal(38,0)"))).collect()(0)
-    val smallLabels = init.getLong(0) <= 4000000L // ~16 B/row → ≤ 64 MB
+    val smallLabels = init.getLong(0) <= SmallGraphRows
     var prevSum =
       if (init.isNullAt(1)) java.math.BigDecimal.ZERO else init.getDecimal(1)
     var converged = false
@@ -412,11 +416,6 @@ object Dedup {
     labels
   }
 
-  /** Cluster assignment for a whole corpus: every doc labeled with the
-    * min doc_id of its near-dup component (itself when isolated). The
-    * canonical survivor of each cluster is the row with
-    * `doc_id == cluster_id`.
-    */
   /** Connected components via alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     * the long-diameter scale path: hash-min propagation
@@ -494,11 +493,101 @@ object Dedup {
     throw new IllegalStateException("unreachable")
   }
 
-  def clusterAssignment(docs: DataFrame, pairs: DataFrame, idCol: String): DataFrame = {
-    val comp = connectedComponents(pairs, "doc_a", "doc_b")
+  /** Cluster assignment for a whole corpus: every doc labeled with the
+    * min doc_id of its near-dup component (itself when isolated). The
+    * canonical survivor of each cluster is the row with
+    * `doc_id == cluster_id`.
+    *
+    * The pairs are materialized once and counted (one job); the count
+    * picks the path:
+    *  - at most [[SmallGraphRows]] pairs with integral ids: a union-find
+    *    on the driver over the pairs fetched as primitive longs (one
+    *    more job), its labels broadcast back. Its union keeps the smaller
+    *    id as the root, so every label is its component's min id —
+    *    exactly the converged hash-min label, at any diameter, with no
+    *    propagation rounds (each round of [[connectedComponents]] is
+    *    jobs of fixed cost on a graph this small);
+    *  - otherwise hash-min propagation ([[connectedComponents]]) over
+    *    the same materialized pairs, the distributed plan.
+    */
+  def clusterAssignment(docs: DataFrame, pairs: DataFrame, idCol: String): DataFrame =
+    clusterAssignment(docs, pairs, idCol, SmallGraphRows)
+
+  /** [[clusterAssignment]] with the driver path taken up to `driverPairs`
+    * pairs; 0 always takes the distributed path.
+    */
+  private[graft] def clusterAssignment(docs: DataFrame, pairs: DataFrame, idCol: String,
+      driverPairs: Long): DataFrame = {
+    val p = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .localCheckpoint(eager = false) // the count job materializes
+    val types = p.schema.fields.map(_.dataType)
+    val comp =
+      if (types.forall(Integral) && p.count() <= driverPairs)
+        driverComponents(p, types.maxBy(_.defaultSize))
+      else hashMin(p, 25)
     docs.select(col(idCol))
       .join(comp, docs(idCol) === comp("id"), "left")
       .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
+  }
+
+  /** Size of a small candidate graph: a label table of at most this many
+    * vertices is broadcast in each [[connectedComponents]] round, and a
+    * pair set of at most this many pairs is labeled on the driver by
+    * [[clusterAssignment]]. ~16 B a row → ≤ 64 MB. At this many pairs
+    * (cliques of 5, or disjoint pairs; 4 local cores) the driver path
+    * took 5.7-6.9 s and allocated 0.4-0.7 GB on the calling thread
+    * (~100 B a pair), hash-min 16-29 s.
+    */
+  private[graft] val SmallGraphRows = 4000000L
+
+  private val Integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** (id, cluster_id) of materialized integral pairs `p` (src, dst) by
+    * union-find on the driver, typed `t` as hash-min's union of the two
+    * columns resolves them. Pairs with a null end connect nothing, as in
+    * hash-min propagation.
+    */
+  private def driverComponents(p: DataFrame, t: DataType): DataFrame = {
+    // the pairs as a flat (src, dst, src, dst, ...) array of primitive
+    // longs, packed per partition: no Row object per pair
+    val ends = p.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val b = Array.newBuilder[Long]
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) { b += r.getLong(0); b += r.getLong(1) }
+        }
+        Iterator(b.result())
+      }.collect().flatten
+    // vertex i is the i-th smallest id, so the smaller index is the
+    // smaller id and a root-by-min union leaves each component's min
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    ids.indices.foreach { i => if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 } }
+    val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    var k = 0
+    while (k < ends.length) {
+      val ra = find(java.util.Arrays.binarySearch(ids, 0, n, ends(k)))
+      val rb = find(java.util.Arrays.binarySearch(ids, 0, n, ends(k + 1)))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      k += 2
+    }
+    // the labels leave the driver as two primitive arrays in one
+    // broadcast and become rows in the tasks that read them
+    val spark = p.sparkSession
+    val labels = spark.sparkContext.broadcast(
+      (java.util.Arrays.copyOf(ids, n), Array.tabulate(n)(i => ids(find(i)))))
+    import spark.implicits._
+    spark.range(n).mapPartitions { (it: Iterator[java.lang.Long]) =>
+      val (v, l) = labels.value
+      it.map(i => (v(i.toInt), l(i.toInt)))
+    }.toDF("id", "cluster_id")
+      .select(col("id").cast(t).as("id"), col("cluster_id").cast(t).as("cluster_id"))
   }
 
   /** [[clusterAssignment]] over the star-contraction components —

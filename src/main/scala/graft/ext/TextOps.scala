@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §7.5):
   * language ID, quality scoring, token counting, document fingerprinting.
-  * All built-in expressions — scan-side, shuffle-free, codegen-friendly
-  * except the higher-order filters (acceptable: they run once per doc,
-  * not per token pair).
+  * Scan-side and shuffle-free: built-in expressions plus the fused
+  * `graft_*` kernels of [[graft.functions.VectorExpressions]] (the
+  * quality and token counts are one [[graft.functions.TextStats]] pass
+  * per document); the remaining higher-order filters run once per doc,
+  * not per token pair.
   */
 object TextOps {
 
@@ -98,28 +100,34 @@ object TextOps {
           .otherwise("de"))
   }
 
+  /** One fused [[graft.functions.TextStats]] pass over the text and its
+    * Spark-lowered copy: the struct of counts behind the quality and
+    * token features. `stops` is the stop-word list (array<string>).
+    */
+  private def textStats(df: DataFrame, textCol: String, stops: Column): Column = {
+    graft.functions.VectorExpressions.register(df.sparkSession)
+    call_function("graft_text_stats", col(textCol), lower(col(textCol)), stops)
+  }
+
   /** Heuristic quality score from length / punctuation / stopword
     * ratios. Deterministic arithmetic (single divisions, fixed op
-    * order), rounded once at the end. `stopHits` is the stop-word hit
-    * count expression — English-literal for the monolingual entry
-    * point, per-row list for the per-language one.
+    * order), rounded once at the end. `stops` is the stop-word list —
+    * the English literal for the monolingual entry point, the per-row
+    * list for the per-language one.
     */
-  private def qualityFrom(df: DataFrame, textCol: String,
-      stopHits: Column): DataFrame = {
-    val t = col(textCol)
-    val ws = words(t)
-    df.withColumn("n_chars_raw", length(t).cast("long"))
-      .withColumn("n_words", size(ws).cast("long"))
-      .withColumn("n_alpha", length(regexp_replace(lower(t), "[^a-z]", "")).cast("long"))
-      .withColumn("punct_ratio",
-        length(regexp_replace(t, "[a-zA-Z0-9 ]", "")).cast("double") / col("n_chars_raw"))
+  private def qualityFrom(df: DataFrame, textCol: String, stops: Column): DataFrame =
+    df.withColumn("__ts", textStats(df, textCol, stops))
+      .withColumn("n_chars_raw", col("__ts.n_chars"))
+      .withColumn("n_words", col("__ts.n_words"))
+      .withColumn("n_alpha", col("__ts.n_alpha"))
+      .withColumn("punct_ratio", col("__ts.n_punct").cast("double") / col("n_chars_raw"))
       .withColumn("avg_word_len", col("n_alpha").cast("double") / col("n_words"))
-      .withColumn("stop_ratio", stopHits.cast("double") / col("n_words"))
+      .withColumn("stop_ratio", col("__ts.stop_hits").cast("double") / col("n_words"))
       .withColumn("quality",
         round(least(col("avg_word_len") / 8.0, lit(1.0)) * 0.4
           + least(col("stop_ratio") * 5.0, lit(1.0)) * 0.4
           + (lit(1.0) - col("punct_ratio")) * 0.2, 9))
-  }
+      .drop("__ts")
 
   /** Monolingual (English-list) scoring — correct for an
     * English-gated corpus; on a multilingual one prefer
@@ -127,7 +135,7 @@ object TextOps {
     * case of.
     */
   def withQuality(df: DataFrame, textCol: String): DataFrame =
-    qualityFrom(df, textCol, stopwordHits(words(col(textCol)), StopEn))
+    qualityFrom(df, textCol, array(StopEn.map(lit): _*))
 
   /** Per-language quality scoring: `stop_ratio` counts hits against
     * the ROW'S OWN language's stopword list ([[StopByLang]], broadcast
@@ -137,12 +145,8 @@ object TextOps {
     * varies per row.
     */
   def withQualityByLang(df: DataFrame, textCol: String,
-      langCol: String): DataFrame = {
-    val ws = words(col(textCol))
-    qualityFrom(withLangStops(df, langCol), textCol,
-      size(filter(ws, w => array_contains(col("__st"), w))))
-      .drop("__st")
-  }
+      langCol: String): DataFrame =
+    qualityFrom(withLangStops(df, langCol), textCol, col("__st")).drop("__st")
 
   /** Model-based quality scoring: a fixed linear classifier over the
     * [[withQuality]] features — the shape of fasttext-style quality
@@ -172,14 +176,15 @@ object TextOps {
       .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(-col("logit"))), 9))
       .withColumn("keep", (col("prob") >= 0.5).cast("long"))
 
-  /** Whitespace tokens and a BPE-ish regex token count (letter runs,
-    * digit runs, single non-alphanumerics).
+  /** Whitespace tokens (`split(trim(text), '\\s+')`) and a BPE-ish
+    * token count (letter runs, digit runs, single non-alphanumerics of
+    * the lowered text) from one [[graft.functions.TextStats]] pass.
     */
   def withTokenCounts(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("ws_tokens", size(split(trim(col(textCol)), "\\s+")).cast("long"))
-      .withColumn("bpe_tokens",
-        size(regexp_extract_all(lower(col(textCol)),
-          lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))).cast("long"))
+    df.withColumn("__ts", textStats(df, textCol, array().cast("array<string>")))
+      .withColumn("ws_tokens", col("__ts.ws_tokens"))
+      .withColumn("bpe_tokens", col("__ts.bpe_tokens"))
+      .drop("__ts")
 
   /** Rolling polynomial fingerprint over word hashes:
     * h ← (31·h + hash32(word)) mod 1e9+7, left fold from 0.

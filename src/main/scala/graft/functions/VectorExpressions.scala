@@ -996,6 +996,199 @@ object SignWord64 {
   }
 }
 
+/** Per-document text counts in one codegen'd pass over each string:
+  * `graft_text_stats(text, lower(text), stops)` → struct of
+  *
+  *  - `n_chars`: code points of `text` (`length(text)`)
+  *  - `n_words`: words of the normalized lowered text
+  *    (`size(split(Dedup.normText(text), ' '))`)
+  *  - `n_alpha`: `a`-`z` characters of `lower(text)`
+  *  - `n_punct`: characters of `text` outside `[a-zA-Z0-9 ]`
+  *  - `stop_hits`: those words that are in `stops`
+  *  - `ws_tokens`: `size(split(trim(text), '\\s+'))`
+  *  - `bpe_tokens`: matches of `[a-z]+|[0-9]+|[^a-z0-9\\s]` in
+  *    `lower(text)`
+  *
+  * the quality and token features of [[graft.ext.TextOps]], which
+  * otherwise run five regex passes, a split and a per-word membership
+  * filter per document. `lower` is Spark's own expression, passed in,
+  * so case mapping (U+0130 lowers to two chars) is the engine's by
+  * construction. `trim` strips U+0020 only and `\\s` is Java's six
+  * ASCII whitespace chars, both as in the regex formulation — every
+  * class tested is ASCII, so the scan runs on UTF-8 bytes, and code
+  * points count as non-continuation bytes. The regex formulation is
+  * pinned equal in PropertySpec.
+  *
+  * Null inputs follow the expressions this replaces: a length is null,
+  * a `size` is -1 under `spark.sql.legacy.sizeOfNull` (ANSI off), else
+  * null; a null `stops` list matches nothing. Field nullability
+  * follows the same rule, so the derived columns keep their types.
+  */
+case class TextStats(text: Expression, lowered: Expression, stops: Expression,
+    legacySizeOfNull: Boolean)
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
+
+  def this(text: Expression, lowered: Expression, stops: Expression) =
+    this(text, lowered, stops,
+      org.apache.spark.sql.internal.SQLConf.get.legacySizeOfNull)
+
+  override def first: Expression = text
+  override def second: Expression = lowered
+  override def third: Expression = stops
+
+  override def nullable: Boolean = false
+
+  override def dataType: DataType = {
+    def f(name: String, nullable: Boolean) = StructField(name, LongType, nullable)
+    def size(name: String, of: Expression) = f(name, !legacySizeOfNull && of.nullable)
+    StructType(Seq(
+      f("n_chars", text.nullable), size("n_words", lowered), f("n_alpha", lowered.nullable),
+      f("n_punct", text.nullable), size("stop_hits", lowered), size("ws_tokens", text),
+      size("bpe_tokens", lowered)))
+  }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (text.dataType, lowered.dataType, stops.dataType) match {
+      case (StringType, StringType, ArrayType(StringType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
+        "graft_text_stats expects (string, string, array<string>), got " +
+          s"(${a.catalogString}, ${b.catalogString}, ${c.catalogString})")
+    }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    TextStats.compute(
+      text.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      lowered.eval(input).asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
+      stops.eval(input).asInstanceOf[ArrayData], legacySizeOfNull)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val (t, l, s) = (text.genCode(ctx), lowered.genCode(ctx), stops.genCode(ctx))
+    ev.copy(code = code"""
+      ${t.code}
+      ${l.code}
+      ${s.code}
+      final InternalRow ${ev.value} = graft.functions.TextStats.compute(
+        ${t.isNull} ? null : ${t.value}, ${l.isNull} ? null : ${l.value},
+        ${s.isNull} ? null : ${s.value}, $legacySizeOfNull);""",
+      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): Expression =
+    copy(text = newFirst, lowered = newSecond, stops = newThird)
+}
+
+object TextStats {
+  // Java's \s: space, \t, \n, \u000B, \f, \r
+  private def isWs(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
+  private def isLower(b: Byte): Boolean = b >= 'a' && b <= 'z'
+  private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
+  private def isLead(b: Byte): Boolean = (b & 0xc0) != 0x80
+
+  def compute(text: org.apache.spark.unsafe.types.UTF8String,
+      lowered: org.apache.spark.unsafe.types.UTF8String, stops: ArrayData,
+      legacySizeOfNull: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
+    val sizeOfNull: Any = if (legacySizeOfNull) -1L else null
+    val out = Array[Any](null, sizeOfNull, null, null, sizeOfNull, sizeOfNull, sizeOfNull)
+    if (text != null) {
+      val b = text.getBytes
+      var chars = 0L
+      var kept = 0L // [a-zA-Z0-9 ]
+      var i = 0
+      while (i < b.length) {
+        val c = b(i)
+        if (isLead(c)) chars += 1
+        if (c == ' ' || isDigit(c) || (c | 0x20) >= 'a' && (c | 0x20) <= 'z') kept += 1
+        i += 1
+      }
+      out(0) = chars
+      out(3) = chars - kept
+      val from = trimStart(b)
+      out(5) = wsRuns(b, from, trimEnd(b, from)) + 1L
+    }
+    if (lowered != null) {
+      val b = lowered.getBytes
+      var alpha = 0L
+      var bpe = 0L
+      var i = 0
+      while (i < b.length) {
+        val c = b(i)
+        if (isLower(c)) {
+          alpha += 1
+          if (i == 0 || !isLower(b(i - 1))) bpe += 1
+        } else if (isDigit(c)) {
+          if (i == 0 || !isDigit(b(i - 1))) bpe += 1
+        } else if (!isWs(c) && isLead(c)) bpe += 1
+        i += 1
+      }
+      out(2) = alpha
+      out(6) = bpe
+      // words: the segments between whitespace runs of the space-trimmed
+      // text, empty edge segments included (split with limit -1)
+      var start = trimStart(b)
+      val end = trimEnd(b, start)
+      var words = 1L
+      var hits = 0L
+      var j = start
+      while (j <= end) {
+        if (j == end || isWs(b(j))) {
+          if (stops != null && isStop(b, start, j, stops)) hits += 1
+          if (j < end) {
+            words += 1
+            while (j + 1 < end && isWs(b(j + 1))) j += 1
+            start = j + 1
+          }
+        }
+        j += 1
+      }
+      out(1) = words
+      out(4) = hits
+    }
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
+  }
+
+  private def trimStart(b: Array[Byte]): Int = {
+    var s = 0
+    while (s < b.length && b(s) == ' ') s += 1
+    s
+  }
+
+  private def trimEnd(b: Array[Byte], start: Int): Int = {
+    var e = b.length
+    while (e > start && b(e - 1) == ' ') e -= 1
+    e
+  }
+
+  private def wsRuns(b: Array[Byte], from: Int, until: Int): Long = {
+    var runs = 0L
+    var i = from
+    while (i < until) {
+      if (isWs(b(i)) && (i == from || !isWs(b(i - 1)))) runs += 1
+      i += 1
+    }
+    runs
+  }
+
+  private def isStop(b: Array[Byte], from: Int, until: Int, stops: ArrayData): Boolean = {
+    val n = stops.numElements()
+    var k = 0
+    while (k < n) {
+      if (!stops.isNullAt(k)) {
+        val s = stops.getUTF8String(k)
+        if (s.numBytes == until - from) {
+          var i = 0
+          while (i < s.numBytes && s.getByte(i) == b(from + i)) i += 1
+          if (i == s.numBytes) return true
+        }
+      }
+      k += 1
+    }
+    false
+  }
+}
+
 object VectorExpressions {
   /** Registers the graft_* expression family for SQL/expr use in this
     * session (idempotent).
@@ -1028,6 +1221,8 @@ object VectorExpressions {
       "graft_simhash32", exprs => SimHash32(exprs.head), "scala_udf")
     reg.createOrReplaceTempFunction(
       "graft_subword_tokens", exprs => SubwordTokens(exprs.head), "scala_udf")
+    reg.createOrReplaceTempFunction(
+      "graft_text_stats", exprs => new TextStats(exprs(0), exprs(1), exprs(2)), "scala_udf")
     reg.createOrReplaceTempFunction(
       "graft_byte_phash", exprs => BytePHash64(exprs.head), "scala_udf")
     reg.createOrReplaceTempFunction(

@@ -31,7 +31,7 @@ object Breadth13 {
     (s, dir) => {
       // localCheckpoint: paretoFront2D consumes its input twice (the
       // staircase aggregate and the join-back) — without it the
-      // quality regexes run over the corpus twice
+      // quality kernel runs over the corpus twice
       val scored = TextOps
         .withQualityByLang(Tables(s, dir, "documents"), "text", "lang")
         .select(col("doc_id"), col("lang"), col("n_words"), col("quality"))

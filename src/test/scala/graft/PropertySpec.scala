@@ -73,28 +73,33 @@ class PropertySpec extends SparkSpec {
   }
 
   test("connected components equal brute-force union-find on random graphs") {
-    val rnd = new scala.util.Random(42)
-    (0 until 3).foreach { trial =>
-      val nVerts = 30 + trial * 20
-      val nEdges = nVerts / 2 + trial * 15
-      val edges = (0 until nEdges).map { _ =>
-        (rnd.nextInt(nVerts).toLong, rnd.nextInt(nVerts).toLong)
-      }.filter { case (a, b) => a != b }
-      // brute-force union-find
-      val parent = Array.tabulate(nVerts)(identity)
-      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(ra) = rb
+    // once on the driver union-find (the default at these sizes) and
+    // once with no pair on the driver (distributed hash-min propagation)
+    for (driverPairs <- Seq(graft.ext.Dedup.SmallGraphRows, 0L)) {
+      val rnd = new scala.util.Random(42)
+      (0 until 3).foreach { trial =>
+        val nVerts = 30 + trial * 20
+        val nEdges = nVerts / 2 + trial * 15
+        val edges = (0 until nEdges).map { _ =>
+          (rnd.nextInt(nVerts).toLong, rnd.nextInt(nVerts).toLong)
+        }.filter { case (a, b) => a != b }
+        // brute-force union-find
+        val parent = Array.tabulate(nVerts)(identity)
+        def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+        edges.foreach { case (a, b) =>
+          val (ra, rb) = (find(a.toInt), find(b.toInt))
+          if (ra != rb) parent(ra) = rb
+        }
+        val expected = (0 until nVerts).map { v =>
+          v.toLong -> (0 until nVerts).filter(u => find(u) == find(v)).min.toLong
+        }.toMap
+        val docs = (0L until nVerts.toLong).toDF("doc_id")
+        val got = graft.ext.Dedup.clusterAssignment(
+            docs, edges.toDF("doc_a", "doc_b"), "doc_id", driverPairs)
+          .as[(Long, Long)].collect().toMap
+        assert(got == expected,
+            s"driverPairs $driverPairs trial $trial: nVerts=$nVerts nEdges=${edges.size}")
       }
-      val expected = (0 until nVerts).map { v =>
-        v.toLong -> (0 until nVerts).filter(u => find(u) == find(v)).min.toLong
-      }.toMap
-      val docs = (0L until nVerts.toLong).toDF("doc_id")
-      val got = graft.ext.Dedup.clusterAssignment(
-          docs, edges.toDF("doc_a", "doc_b"), "doc_id")
-        .as[(Long, Long)].collect().toMap
-      assert(got == expected, s"trial $trial: nVerts=$nVerts nEdges=${edges.size}")
     }
   }
 
@@ -149,6 +154,114 @@ class PropertySpec extends SparkSpec {
                           shiftleft(1L, b), 0L))"""))
       .withColumn("fused", expr("graft_simhash32(__whashes)"))
     assert(sim.filter(expr("ref <> fused")).isEmpty)
+  }
+
+  /** The regex formulation the fused `graft_text_stats` kernel replaced
+    * in TextOps' quality and token ops: the reference it is pinned to.
+    */
+  private object RegexText {
+    import org.apache.spark.sql.{Column, DataFrame}
+
+    private def words(t: Column): Column = split(Dedup.normText(t), " ")
+
+    private def qualityFrom(df: DataFrame, textCol: String, stopHits: Column): DataFrame = {
+      val t = col(textCol)
+      df.withColumn("n_chars_raw", length(t).cast("long"))
+        .withColumn("n_words", size(words(t)).cast("long"))
+        .withColumn("n_alpha", length(regexp_replace(lower(t), "[^a-z]", "")).cast("long"))
+        .withColumn("punct_ratio",
+          length(regexp_replace(t, "[a-zA-Z0-9 ]", "")).cast("double") / col("n_chars_raw"))
+        .withColumn("avg_word_len", col("n_alpha").cast("double") / col("n_words"))
+        .withColumn("stop_ratio", stopHits.cast("double") / col("n_words"))
+        .withColumn("quality",
+          round(least(col("avg_word_len") / 8.0, lit(1.0)) * 0.4
+            + least(col("stop_ratio") * 5.0, lit(1.0)) * 0.4
+            + (lit(1.0) - col("punct_ratio")) * 0.2, 9))
+    }
+
+    def withQuality(df: DataFrame, textCol: String): DataFrame =
+      qualityFrom(df, textCol, TextOps.stopwordHits(words(col(textCol)), TextOps.StopEn))
+
+    def withQualityByLang(df: DataFrame, textCol: String, langCol: String): DataFrame = {
+      val tbl = broadcast(TextOps.StopByLang.toDF("__slang", "__stops"))
+      val withStops = df.join(tbl, col(langCol) === col("__slang"), "left")
+        .withColumn("__st", coalesce(col("__stops"), array(TextOps.StopEn.map(lit): _*)))
+        .drop("__slang", "__stops")
+      qualityFrom(withStops, textCol,
+        size(filter(words(col(textCol)), w => array_contains(col("__st"), w))))
+        .drop("__st")
+    }
+
+    def withModelQuality(df: DataFrame, textCol: String): DataFrame =
+      withQuality(df, textCol)
+        .withColumn("logit",
+          lit(2.0) * least(col("stop_ratio") * 5.0, lit(1.0)) +
+            lit(1.5) * least(col("avg_word_len") / 8.0, lit(1.0)) -
+            lit(3.0) * col("punct_ratio") +
+            lit(0.5) * least(col("n_words").cast("double") / 200.0, lit(1.0)) -
+            lit(1.2))
+        .withColumn("prob", round(lit(1.0) / (lit(1.0) + exp(-col("logit"))), 9))
+        .withColumn("keep", (col("prob") >= 0.5).cast("long"))
+
+    def withTokenCounts(df: DataFrame, textCol: String): DataFrame =
+      df.withColumn("ws_tokens", size(split(trim(col(textCol)), "\\s+")).cast("long"))
+        .withColumn("bpe_tokens",
+          size(regexp_extract_all(lower(col(textCol)),
+            lit("[a-z]+|[0-9]+|[^a-z0-9\\s]"), lit(0))).cast("long"))
+  }
+
+  test("fused text statistics equal the regex formulation on arbitrary unicode text") {
+    // the six \s chars, NBSP, U+0130 (lowers to two chars), supplementary
+    // code points, lone surrogates, case, digits, punctuation, stop words
+    val piece: Gen[String] = Gen.oneOf(
+      Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r", "\u00A0", "  ", " \t "),
+      Gen.oneOf("\u0130", "\uD83C\uDF89", "\uD835\uDD18", "\uD800", "\uDC00", "\u212A",
+        "ß", "ñ", "中", "é"),
+      Gen.oneOf("the", "The", "AND", "of", "el", "la", "der", "le", "的", "fox", "a1b2", "42",
+        "!", ".", ",", "--", "_"),
+      Gen.alphaNumStr.map(_.take(6)), Gen.asciiPrintableStr.map(_.take(6)))
+    val text: Gen[String] = for {
+      body <- Gen.listOf(piece).map(_.mkString)
+      lead <- Gen.oneOf("", " ", "  ", "\t", " \t")
+      trail <- Gen.oneOf("", " ", "  ", "\t", "\t ")
+    } yield lead + body + trail
+    val edges = Seq("", " ", "\t", "\u000B", "\u00A0", "\u0130", "\uD83C\uDF89", "\uD800",
+      " the  and\tof ", "\tthe", "the\t", "İstanbul ıi", "x\u00A0y")
+    val texts: Seq[Option[String]] =
+      (samples(text, 300) ++ edges).map(Some(_)) ++ Seq(None, None)
+    val langs = Seq("en", "es", "de", "fr", "zh", "xx", null)
+    val df = texts.zipWithIndex.map { case (t, i) =>
+      (i.toLong, t, Option(langs(i % langs.size)))
+    }.toDF("doc_id", "text", "lang")
+    // a non-nullable text column too: field nullability must follow it
+    val nonNull = df.withColumn("text", coalesce($"text", lit("")))
+    import org.apache.spark.sql.DataFrame
+    val ops: Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
+      ("withQuality", TextOps.withQuality(_, "text"), RegexText.withQuality(_, "text")),
+      ("withQualityByLang", TextOps.withQualityByLang(_, "text", "lang"),
+        RegexText.withQualityByLang(_, "text", "lang")),
+      ("withModelQuality", TextOps.withModelQuality(_, "text"),
+        RegexText.withModelQuality(_, "text")),
+      ("withTokenCounts", TextOps.withTokenCounts(_, "text"),
+        RegexText.withTokenCounts(_, "text")))
+    val key = "spark.sql.legacy.sizeOfNull"
+    val default = spark.conf.get(key)
+    // a null's size is -1 under the legacy flag (ANSI off), else null
+    for (legacy <- Seq(default, "false")) {
+      spark.conf.set(key, legacy)
+      try {
+        for ((name, fused, regex) <- ops; (frame, input) <- Seq("nullable" -> df, "non-null" -> nonNull)) {
+          val got = fused(input)
+          val ref = regex(input)
+          val what = s"$name on $frame text, sizeOfNull=$legacy"
+          assert(got.schema == ref.schema, s"$what: ${got.schema.treeString} vs ${ref.schema.treeString}")
+          val g = got.orderBy("doc_id").collect().toSeq
+          val r = ref.orderBy("doc_id").collect().toSeq
+          val bad = g.zip(r).filter { case (a, b) => a != b }
+          assert(g.size == r.size && bad.isEmpty, s"$what: ${bad.take(3).mkString("; ")}")
+        }
+      } finally spark.conf.set(key, default)
+    }
   }
 
   test("redactPii is idempotent and never throws on arbitrary text") {

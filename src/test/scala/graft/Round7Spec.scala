@@ -242,6 +242,17 @@ class Round7Spec extends SparkSpec {
     assert((0L to 30L).forall(v => star(v) == 0L), star.toString)
   }
 
+  test("clusterAssignment labels a long chain exactly on the driver path") {
+    // the 30-hop path above: hash-min propagation throws on it, while 30
+    // pairs take the driver union-find, which labels every node with the
+    // component min, plus an isolated doc as itself
+    val chain = (0L until 30L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val docs = (0L to 31L).toDF("doc_id")
+    val got = graft.ext.Dedup.clusterAssignment(docs, chain, "doc_id")
+      .as[(Long, Long)].collect().toMap
+    assert(got == (0L to 30L).map(_ -> 0L).toMap + (31L -> 31L), got.toString)
+  }
+
   // ---- perceptual-hash image dedup ---------------------------------------
 
   test("image perceptual hashes: near-dup PNGs pair within hamming 7, distinct ones don't") {
