@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   * quality and token counts are one [[graft.functions.TextStats]] pass
   * per document); the remaining higher-order filters run once per doc,
   * not per token pair.
+  *
+  * Each kernel runs once per document. The stats struct is added with
+  * [[Dedup.withColumnOnce]], not `withColumn`: Catalyst substitutes a
+  * projection's alias into the filters it pushes below it, so a caller
+  * filtering on `quality` or `n_words` would otherwise run the kernel
+  * again inside the filter, once for every column the filter reads.
   */
 object TextOps {
 
@@ -116,7 +122,7 @@ object TextOps {
     * list for the per-language one.
     */
   private def qualityFrom(df: DataFrame, textCol: String, stops: Column): DataFrame =
-    df.withColumn("__ts", textStats(df, textCol, stops))
+    Dedup.withColumnOnce(df, "__ts", textStats(df, textCol, stops))
       .withColumn("n_chars_raw", col("__ts.n_chars"))
       .withColumn("n_words", col("__ts.n_words"))
       .withColumn("n_alpha", col("__ts.n_alpha"))
@@ -181,7 +187,7 @@ object TextOps {
     * the lowered text) from one [[graft.functions.TextStats]] pass.
     */
   def withTokenCounts(df: DataFrame, textCol: String): DataFrame =
-    df.withColumn("__ts", textStats(df, textCol, array().cast("array<string>")))
+    Dedup.withColumnOnce(df, "__ts", textStats(df, textCol, array().cast("array<string>")))
       .withColumn("ws_tokens", col("__ts.ws_tokens"))
       .withColumn("bpe_tokens", col("__ts.bpe_tokens"))
       .drop("__ts")

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -1190,61 +1191,53 @@ object TextStats {
 }
 
 object VectorExpressions {
+  /** The graft_* expression family by SQL name: builders over the
+    * call's argument expressions.
+    */
+  private val Builders: Seq[(String, Seq[Expression] => Expression)] = {
+    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
+    Seq(
+      "graft_cosine" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
+      "graft_hash32" -> (exprs => Md5Hash32(exprs.head)),
+      "graft_shingle_hashes32" -> (exprs => ShingleHashes(exprs(0), intArg(exprs(1)),
+        ShingleHashes.ModeMd5_32)),
+      "graft_shingle_hashes64" -> (exprs => ShingleHashes(exprs(0), intArg(exprs(1)),
+        ShingleHashes.ModeXx64)),
+      "graft_shingle_md5_60" -> (exprs => ShingleHashes(exprs(0), intArg(exprs(1)),
+        ShingleHashes.ModeMd5_60)),
+      "graft_shingle_md5_120" -> (exprs => ShingleHashPairs(exprs(0), intArg(exprs(1)))),
+      "graft_minhash_sig" -> (exprs => MinHashSig(exprs.head)),
+      "graft_simhash32" -> (exprs => SimHash32(exprs.head)),
+      "graft_subword_tokens" -> (exprs => SubwordTokens(exprs.head)),
+      "graft_text_stats" -> (exprs => new TextStats(exprs(0), exprs(1), exprs(2))),
+      "graft_byte_phash" -> (exprs => BytePHash64(exprs.head)),
+      "graft_sign_word" -> (exprs => SignWord64(exprs.head)),
+      "graft_frame_energies" -> (exprs => FrameEnergies(exprs(0), intArg(exprs(1)))),
+      // Spark ships BloomFilterAggregate/BloomFilterMightContain as the
+      // engine of its runtime-bloom join optimization but does NOT expose
+      // them in the public registry; graft's bloom-prefiltered semi join
+      // (j14_bloom_semi) uses the same battle-tested kernels explicitly.
+      // Signatures: graft_bloom_agg(xxhash64-key, estimatedItems, numBits)
+      // -> binary; graft_might_contain(bloom, xxhash64-key) -> boolean.
+      "graft_bloom_agg" -> (exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
+        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
+        .toAggregateExpression()),
+      "graft_might_contain" -> (exprs => org.apache.spark.sql.catalyst.expressions
+        .BloomFilterMightContain(exprs(0), exprs(1))))
+  }
+
   /** Registers the graft_* expression family for SQL/expr use in this
-    * session (idempotent).
+    * session. Operators call it for every DataFrame they build, so a
+    * name this session's registry already holds is left as it is: no
+    * registry rewrite (and no "replaced a previously registered
+    * function" warning) per call.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_hash32", exprs => Md5Hash32(exprs.head), "scala_udf")
-    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_hashes32",
-      exprs => ShingleHashes(exprs(0), intArg(exprs(1)),
-        ShingleHashes.ModeMd5_32), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_hashes64",
-      exprs => ShingleHashes(exprs(0), intArg(exprs(1)),
-        ShingleHashes.ModeXx64), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_md5_60",
-      exprs => ShingleHashes(exprs(0), intArg(exprs(1)),
-        ShingleHashes.ModeMd5_60), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_md5_120",
-      exprs => ShingleHashPairs(exprs(0), intArg(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_sig", exprs => MinHashSig(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash32", exprs => SimHash32(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_subword_tokens", exprs => SubwordTokens(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_text_stats", exprs => new TextStats(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_byte_phash", exprs => BytePHash64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_sign_word", exprs => SignWord64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_frame_energies",
-      exprs => FrameEnergies(exprs(0), intArg(exprs(1))), "scala_udf")
-    // Spark ships BloomFilterAggregate/BloomFilterMightContain as the
-    // engine of its runtime-bloom join optimization but does NOT expose
-    // them in the public registry; graft's bloom-prefiltered semi join
-    // (j14_bloom_semi) uses the same battle-tested kernels explicitly.
-    // Signatures: graft_bloom_agg(xxhash64-key, estimatedItems, numBits)
-    // -> binary; graft_might_contain(bloom, xxhash64-key) -> boolean.
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "scala_udf")
+    Builders.foreach { case (name, builder) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
   }
 }
 

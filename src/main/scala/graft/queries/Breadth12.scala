@@ -202,12 +202,9 @@ object Breadth12 {
         .unionByName(d.select((col("doc_id") + 100000L).as("doc_id"),
           concat(lit("xx "), col("text")).as("text")))
         .unionByName(d.select((col("doc_id") + 200000L).as("doc_id"), col("text")))
-      // NOTE (r16): a lazy checkpoint of keep1 was tried to stop the
-      // exact-hash aggregate re-running per consumer and REVERTED — the
-      // stats-free LogicalRDD demoted the docs ⋈ keep1 join from
-      // broadcast to shuffle, moving corpus text through an exchange
-      // (measured 2.85 -> 3.37 s calib-normalized; guide §3.1: the
-      // broadcast decision rides size estimates a checkpoint erases)
+      // keep1 feeds the survivor join, the pair search and the cluster
+      // count; Dedup.exact materializes its aggregate lazily, so the
+      // exact hash runs once for all three
       val keep1 = Dedup.exact(docs, "text", "doc_id")
         .select(col("keep_id").as("doc_id"))
       val surv = docs.join(keep1, "doc_id")

@@ -14,15 +14,22 @@ keeps its own e2ebench/target and .bench_work.
 
 Prints one line per run (metrics, `correct`, `failed`, the FAILED
 checks), then per end-to-end metric of BENCHMARK.json the median and
-[q1, q3] of each side and how many pairs the change won, and
-stored_bytes_ratio per seed. Standard library only.
+[q1, q3] of each side and how many pairs the change won, and per seed
+stored_bytes_ratio with `same`/`differ`: whether the two runs wrote the
+same outputs (every parquet table under the workload's output dir, as a
+row multiset, order ignored, plus its schema with nullability). Needs
+pyarrow, as e2ebench/run.py does.
 """
 import argparse
+import collections
 import json
 import os
 import statistics
 import subprocess
 import sys
+
+# where each workload leaves its outputs, under .bench_work/<workload>
+OUTPUTS = {"etl_cold": "modeled", "etl_incremental": "modeled", "curate": "curated"}
 
 
 def run_once(root, workload, seed, seconds):
@@ -38,6 +45,23 @@ def run_once(root, workload, seed, seconds):
     r = json.loads(lines[-1])
     r["checks_failed"] = [l.split()[1] for l in lines if l.startswith("check ") and "FAILED" in l]
     return r
+
+
+def outputs(root, workload):
+    """{table dir relative to the output dir: (schema, row multiset)} of
+    every parquet table a run left; the checkout's own path (the authlog
+    records its source dir) reads as <root>."""
+    import pyarrow.parquet as pq
+    base = os.path.join(root, ".bench_work", workload, OUTPUTS[workload])
+    out = {}
+    for d, _, files in os.walk(base):
+        if any(f.endswith(".parquet") for f in files):
+            t = pq.read_table(d)
+            schema = [(f.name, str(f.type), f.nullable) for f in t.schema]
+            rows = collections.Counter(repr(tuple(r.values())).replace(root, "<root>")
+                                       for r in t.to_pylist())
+            out[os.path.relpath(d, base)] = (schema, rows)
+    return out
 
 
 def quartiles(xs):
@@ -61,6 +85,7 @@ def main():
         e2e = json.load(f)["end_to_end"]
 
     runs = {"parent": [], "change": []}
+    same = []
     for i, seed in enumerate(a.seeds):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
@@ -71,6 +96,8 @@ def main():
                                       for m in e2e),
                 r["correct"], r["failed"], r["attempted"], ",".join(r["checks_failed"]) or "-"),
                 flush=True)
+        o = {side: outputs(roots[side], a.workload) for side in roots}
+        same.append(bool(o["parent"]) and o["parent"] == o["change"])
 
     print("\n%s, %d pairs, seeds %s" % (a.workload, len(a.seeds), " ".join(map(str, a.seeds))))
     for m in e2e:
@@ -83,10 +110,11 @@ def main():
             cells.append("%s %.6g [%.6g, %.6g]" % (s, statistics.median(vals[s]), q1, q3))
         print("%-20s %s  change better %d/%d (bound %s)" % (
             m["name"], "  ".join(cells), wins, len(a.seeds), m["bound"]))
-    print("stored_bytes_ratio per seed (parent -> change):")
-    for seed, p, c in zip(a.seeds, runs["parent"], runs["change"]):
+    print("stored_bytes_ratio per seed (parent -> change), outputs same/differ:")
+    for seed, p, c, eq in zip(a.seeds, runs["parent"], runs["change"], same):
         pv, cv = (r["metrics"]["stored_bytes_ratio"]["value"] for r in (p, c))
-        print("  seed %-4d %.8g -> %.8g%s" % (seed, pv, cv, "" if pv == cv else "  (differs)"))
+        print("  seed %-4d %.8g -> %.8g%s  %s" % (
+            seed, pv, cv, "" if pv == cv else "  (differs)", "same" if eq else "differ"))
 
 
 if __name__ == "__main__":
