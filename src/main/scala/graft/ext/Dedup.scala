@@ -31,6 +31,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
+  private val log = org.apache.log4j.Logger.getLogger(getClass)
+
   /** Prime > 2^32 for the universal-hash family h_i(x) = (a_i x + b_i)
     * mod p. Single source of truth is [[graft.functions.MinHashSig]] —
     * the fused expression and the DuckDB oracle generator must agree.
@@ -186,17 +188,12 @@ object Dedup {
     // shard fingerprints feed both the band join and the verify join —
     // checkpoint so the shingle+minhash pipeline runs once per shard doc
     val sh = buildBandIndex(shard, idCol, textCol, k = k).localCheckpoint()
-    val cands = idx.select(col("dup_of"), explode(col("__ba")).as("band"))
-      .join(sh.select(col(idCol), explode(col("bands")).as("band")).hint("shuffle_hash"),
-        "band")
+    val cands = PostingIndex.keyJoin(
+        idx.select(col("dup_of"), explode(col("__ba")).as("band")),
+        sh.select(col(idCol), explode(col("bands")).as("band")), Seq("band"))
       .select(col("dup_of"), col(idCol)).distinct()
-    cands
-      .join(idx.select(col("dup_of"), col("__ha")), "dup_of")
-      .join(sh.select(col(idCol), col("hset").as("__hb")), idCol)
-      .withColumn("__inter", size(array_intersect(col("__ha"), col("__hb"))))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        (size(col("__ha")) + size(col("__hb")) - col("__inter")))
-      .filter(col("jaccard") >= threshold)
+    PostingIndex.verifyJaccard(cands, idx.select(col("dup_of"), col("__ha")),
+        sh.select(col(idCol), col("hset")), threshold, "dup_of", idCol)
       .select(col(idCol), col("dup_of"), col("jaccard"))
   }
 
@@ -229,20 +226,15 @@ object Dedup {
     val newB = deltaState
       .select(col(idCol).as("__dy"), explode(col("bands")).as("band"))
       .localCheckpoint()
-    // same-key runs are the LSH point — SHJ over SMJ as in
-    // minhashCandidatePairs. The __dx =!= __dy predicate guards the
-    // doc-disjointness the march contract assumes: if a doc_id is
-    // re-ingested (appears in both state and delta), the band join would
-    // otherwise emit degenerate doc_a == doc_b self-pairs the one-shot
-    // never produces, silently breaking march == one-shot.
-    val cross = oldB.join(newB.hint("shuffle_hash"),
-        oldB("band") === newB("band") && col("__dx") =!= col("__dy"))
+    // The __dx =!= __dy predicate guards the doc-disjointness the march
+    // contract assumes: if a doc_id is re-ingested (appears in both
+    // state and delta), the band join would otherwise emit degenerate
+    // doc_a == doc_b self-pairs the one-shot never produces, silently
+    // breaking march == one-shot.
+    val cross = PostingIndex.keyJoin(oldB, newB, Seq("band"), col("__dx") =!= col("__dy"))
       .select(least(col("__dx"), col("__dy")).as("doc_a"),
         greatest(col("__dx"), col("__dy")).as("doc_b"))
-    val within = newB.select(col("__dy").as("doc_a"), col("band"))
-      .join(newB.select(col("__dy").as("doc_b"), col("band").as("band_b"))
-          .hint("shuffle_hash"),
-        col("band") === col("band_b") && col("doc_a") < col("doc_b"))
+    val within = PostingIndex.selfJoin(newB, "__dy", Seq("band"))
       .select(col("doc_a"), col("doc_b"))
     cross.unionByName(within).distinct()
   }
@@ -252,26 +244,20 @@ object Dedup {
     * membership — never the full cross product.
     */
   def minhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3): DataFrame = {
-    // materialize the (id, band) projection once: the self-join's two
-    // sides otherwise re-run the whole shingle+minhash pipeline (their
-    // exchanges differ by projection, so ReuseExchange cannot fire), and
-    // the banded rows are tiny — no text — while the signature
-    // computation is the expensive part
-    val bands = minhashBands(df, idCol, textCol, k = k).localCheckpoint()
-    val a = bands.select(col(idCol).as("doc_a"), col("band"))
-    val b = bands.select(col(idCol).as("doc_b"), col("band").as("band_b"))
-    // Band keys are heavily duplicated (that is the point of LSH), and
-    // sort-merge buffers every same-key run on both sides; a shuffled
-    // hash join streams one side against a per-partition map and
-    // measures ~2x faster. Spark's SHJ spills since 3.1, so the hint
-    // stays safe when a hot band overflows an executor at full scale
-    // (AQE skew handling still applies to the shuffle itself).
-    a.join(b.hint("shuffle_hash"),
-        col("band") === col("band_b") && col("doc_a") < col("doc_b"))
+      k: Int = 3): DataFrame =
+    bandPairs(minhashBands(df, idCol, textCol, k = k), idCol)
+
+  /** Distinct ordered pairs of (id, band) rows sharing a band key. The
+    * (id, band) rows are materialized once: the self-join's two sides
+    * otherwise re-run the whole shingle+minhash pipeline (their
+    * exchanges differ by projection, so ReuseExchange cannot fire), and
+    * the banded rows are tiny — no text — while the signature
+    * computation is the expensive part.
+    */
+  private def bandPairs(bands: DataFrame, idCol: String): DataFrame =
+    PostingIndex.selfJoin(bands.localCheckpoint(), idCol, Seq("band"))
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-  }
 
   /** Batch twin of [[graft.streaming.StreamingOps.streamingNearDedup]]
     * under in-order (ascending-id) arrival: each band bucket proposes
@@ -288,10 +274,8 @@ object Dedup {
       k: Int = 3): DataFrame = {
     val bands = minhashBands(df, idCol, textCol, k = k).localCheckpoint()
     val mins = bands.groupBy(col("band")).agg(min(col(idCol)).as("doc_a"))
-    // same-key runs are the LSH point; stream bands against the per-band
-    // min map (see minhashCandidatePairs for the SHJ-vs-SMJ rationale)
-    bands.join(mins.hint("shuffle_hash"), "band")
-      .filter(col(idCol) =!= col("doc_a"))
+    // stream bands against the per-band min map
+    PostingIndex.keyJoin(bands, mins, Seq("band"), col(idCol) =!= col("doc_a"))
       .select(col("doc_a"), col(idCol).as("doc_b"))
       .distinct()
   }
@@ -305,15 +289,8 @@ object Dedup {
     * (`ensureDedupIndex`) should probe the artifact instead of
     * re-shingling the corpus in-query (VERDICT r12 item 2).
     */
-  def indexCandidatePairs(index: DataFrame, idCol: String): DataFrame = {
-    val bands = index.select(col(idCol), explode(col("bands")).as("band"))
-      .localCheckpoint()
-    bands.select(col(idCol).as("doc_a"), col("band"))
-      .join(bands.select(col(idCol).as("doc_b"), col("band").as("band_b"))
-          .hint("shuffle_hash"),
-        col("band") === col("band_b") && col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
+  def indexCandidatePairs(index: DataFrame, idCol: String): DataFrame =
+    bandPairs(index.select(col(idCol), explode(col("bands")).as("band")), idCol)
 
   /** Batch near-dup pairs computed ENTIRELY from a stored fingerprint
     * index — no text access: band keys propose ([[indexCandidatePairs]]),
@@ -323,15 +300,8 @@ object Dedup {
     */
   def indexSelfPairs(index: DataFrame, idCol: String,
       threshold: Double): DataFrame = {
-    val cands = indexCandidatePairs(index, idCol)
-    cands
-      .join(index.select(col(idCol).as("doc_a"), col("hset").as("__ha")), "doc_a")
-      .join(index.select(col(idCol).as("doc_b"), col("hset").as("__hb")), "doc_b")
-      .withColumn("__inter", size(array_intersect(col("__ha"), col("__hb"))))
-      .withColumn("jaccard", col("__inter").cast("double") /
-        (size(col("__ha")) + size(col("__hb")) - col("__inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val sets = index.select(col(idCol), col("hset"))
+    PostingIndex.verifyJaccard(indexCandidatePairs(index, idCol), sets, sets, threshold)
   }
 
   /** Incremental cluster maintenance, attach step: each probed shard doc
@@ -500,8 +470,13 @@ object Dedup {
       val r = mins.agg(count(lit(1)), sum(col("m").cast("decimal(38,0)"))).collect()(0)
       val stats = (r.getLong(0),
         if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-      if (prev.contains(stats) || i == maxIter)
+      if (prev.contains(stats))
         return mins.select(col("u").as("id"), col("m").as("cluster_id"))
+      // the potential still moved after the last round the budget allows:
+      // returning these labels would hand out wrong cluster ids, the
+      // failure hash-min's guard exists for
+      if (i == maxIter) throw new IllegalStateException(
+        s"star connected components did not converge in $maxIter rounds")
       prev = Some(stats)
       // large-star: (v, m(u)) for every neighbor v > u
       val large = s.join(mins, "u").where(col("v") > col("u"))
@@ -563,7 +538,8 @@ object Dedup {
   /** Size of a small candidate graph: a label table of at most this many
     * vertices is broadcast in each [[connectedComponents]] round, and a
     * pair set of at most this many pairs is labeled on the driver by
-    * [[clusterAssignment]]. ~16 B a row → ≤ 64 MB. At this many pairs
+    * [[clusterAssignment]]; the [[GraphOps]] rounds broadcast their
+    * per-node frames up to this many rows. ~16 B a row → ≤ 64 MB. At this many pairs
     * (cliques of 5, or disjoint pairs; 4 local cores) the driver path
     * took 5.7-6.9 s and allocated 0.4-0.7 GB on the calling thread
     * (~100 B a pair), hash-min 16-29 s.
@@ -696,13 +672,8 @@ object Dedup {
         struct(lit(i).as("b"),
           shiftright(col("simhash"), i * 8).bitwiseAND(lit(255L)).as("v"))): _*)).as("bd"))
       .select(col(idCol), col("simhash"), col("bd.b").as("__b"), col("bd.v").as("__v"))
-    val a = bands.select(col(idCol).as("doc_a"), col("simhash").as("__sa"),
-      col("__b"), col("__v"))
-    val b = bands.select(col(idCol).as("doc_b"), col("simhash").as("__sb"),
-      col("__b").as("__b2"), col("__v").as("__v2"))
-    a.join(b.hint("shuffle_hash"),
-        col("__b") === col("__b2") && col("__v") === col("__v2") &&
-          col("doc_a") < col("doc_b"))
+    PostingIndex.selfJoin(bands, idCol, Seq("__b", "__v"),
+        Seq(col("simhash").as("__sa")), Seq(col("simhash").as("__sb")))
       .select(col("doc_a"), col("doc_b"),
         bit_count(col("__sa").bitwiseXOR(col("__sb"))).cast("long").as("hamming"))
       .distinct()
@@ -732,13 +703,9 @@ object Dedup {
       .select(col(idCol), col(hiCol), col(loCol),
         col("bd.b").as("__b"), col("bd.v").as("__v"))
       .localCheckpoint() // both join sides read the banded rows once
-    val a = bands.select(col(idCol).as("doc_a"), col(hiCol).as("__ha"),
-      col(loCol).as("__la"), col("__b"), col("__v"))
-    val b = bands.select(col(idCol).as("doc_b"), col(hiCol).as("__hb"),
-      col(loCol).as("__lb"), col("__b").as("__b2"), col("__v").as("__v2"))
-    a.join(b.hint("shuffle_hash"),
-        col("__b") === col("__b2") && col("__v") === col("__v2") &&
-          col("doc_a") < col("doc_b"))
+    PostingIndex.selfJoin(bands, idCol, Seq("__b", "__v"),
+        Seq(col(hiCol).as("__ha"), col(loCol).as("__la")),
+        Seq(col(hiCol).as("__hb"), col(loCol).as("__lb")))
       .select(col("doc_a"), col("doc_b"),
         (bit_count(col("__ha").bitwiseXOR(col("__hb"))) +
           bit_count(col("__la").bitwiseXOR(col("__lb")))).cast("long").as("hamming"))
@@ -767,30 +734,21 @@ object Dedup {
     // MinHash signatures only. Shingling + hashing is the fused
     // expression (same values as xxhash64 over the shingle strings —
     // the strings are never materialized).
-    graft.functions.VectorExpressions.register(df.sparkSession)
+    //
     // Each posting row carries its document's distinct-shingle count:
     // 8 bytes per posting buys back a whole groupBy over the postings
     // plus two shuffle joins to re-attach the sizes — at 100 TB the
     // postings relation is the largest intermediate in the query, and
     // re-aggregating + re-joining it twice dominates; the widened row
     // does not.
-    val postings = withWords(df, textCol, k)
-      .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $k)")))
+    val postings = withShingleSet(df, textCol, k)
       .select(col(idCol), col(bucketCol).as("__bk"),
         size(col("__hs")).as("__n"), explode(col("__hs")).as("__h"))
       // materialized once: both self-join sides read fixed-width posting
-      // rows instead of re-running shingling (see minhashCandidatePairs)
+      // rows instead of re-running shingling
       .localCheckpoint()
-    val a = postings.select(col(idCol).as("doc_a"), col("__bk"), col("__n").as("__na"),
-      col("__h"))
-    val b = postings.select(col(idCol).as("doc_b"), col("__bk").as("__bk2"),
-      col("__n").as("__nb"), col("__h").as("__h2"))
-    // shuffle_hash for the same reason as minhashCandidatePairs: the
-    // posting keys repeat per colliding document, and SMJ's same-key
-    // buffering is the measured bottleneck (~2x).
-    a.join(b.hint("shuffle_hash"),
-        col("__bk") === col("__bk2") && col("__h") === col("__h2") &&
-          col("doc_a") < col("doc_b"))
+    PostingIndex.selfJoin(postings, idCol, Seq("__bk", "__h"),
+        Seq(col("__n").as("__na")), Seq(col("__n").as("__nb")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).cast("int").as("inter"),
         first(col("__na")).as("__na"), first(col("__nb")).as("__nb"))
@@ -800,21 +758,22 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** LSH-band-bucketed exact Jaccard: candidates come from the MinHash
-    * band join ([[minhashCandidatePairs]]), then each candidate pair is
-    * verified with EXACT distinct-shingle Jaccard ≥ threshold.
-    *
-    * This is the honest 100 TB bucketing for [[ngramJaccardPairs]]: a
-    * metadata bucket like language is unbounded under corpus skew
-    * (English is ~half of a web corpus, so "per-bucket pairwise" quietly
-    * becomes all-pairs), while a band bucket's expected size is set by
-    * the signature parameters alone. Cost is candidates × one bounded
-    * set intersection — the sets join back by doc id, so the text/hash
-    * arrays shuffle once and only for docs that are in some candidate
-    * pair. Recall is the band recall (a pair sharing no band is never
-    * scored); precision is exact because the threshold test runs on the
-    * true Jaccard, not the signature estimate.
+  /** [[withWords]] plus `__hs`, the distinct 64-bit k-word shingle
+    * hashes of each doc (the fused `graft_shingle_hashes64` kernel).
     */
+  private[graft] def withShingleSet(df: DataFrame, textCol: String, k: Int): DataFrame = {
+    graft.functions.VectorExpressions.register(df.sparkSession)
+    withWords(df, textCol, k)
+      .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $k)")))
+  }
+
+  /** Distinct k-word shingle-hash sets per doc — the staged-artifact
+    * projection [[containmentPairsFromSets]] serves from.
+    */
+  def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      k: Int = 3): DataFrame =
+    withShingleSet(df, textCol, k).select(col(idCol), col("__hs"))
+
   /** Directed near-CONTAINMENT pairs: (contained, container) where
     * |A∩B| / |A| ≥ threshold over distinct k-shingle hash sets — the
     * boilerplate/quotation detector Jaccard misses (a short doc fully
@@ -852,8 +811,8 @@ object Dedup {
     * Both directions of every undirected candidate are scored from one
     * joined frame; the shingle-hash sets materialize once and feed
     * both join sides.
-    */
-  /** `pairBudgetPerPass` bounds the IN-FLIGHT pair-occurrence volume of
+    *
+    * `pairBudgetPerPass` bounds the IN-FLIGHT pair-occurrence volume of
     * the propose (the Σdf² pre-distinct stream — a near-dup pair
     * surfaces once per shared rare shingle, so this intermediate is
     * linear-with-a-large-constant and was the one single-box
@@ -868,27 +827,11 @@ object Dedup {
     * cross-tranche duplicates die in the final distinct), so the
     * oracle is unchanged; graded scales take the single-pass path.
     */
-  /** Distinct k-word shingle-hash sets per doc — the staged-artifact
-    * projection [[containmentPairsFromSets]] serves from.
-    */
-  def shingleSets(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    withWords(df, textCol, k)
-      .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $k)")))
-      .select(col(idCol), col("__hs"))
-  }
-
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, maxDf: Int = 20, k: Int = 3,
-      pairBudgetPerPass: Long = 50000000L): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    containmentPairsFromSets(
-      withWords(df, textCol, k)
-        .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $k)")))
-        .select(col(idCol), col("__hs")),
+      pairBudgetPerPass: Long = 50000000L): DataFrame =
+    containmentPairsFromSets(shingleSets(df, idCol, textCol, k),
       idCol, threshold, maxDf, pairBudgetPerPass)
-  }
 
   /** [[containmentPairs]] from a pre-built (id, __hs distinct-shingle-
     * hash array) frame — typically an ingest-time parquet artifact (the
@@ -964,7 +907,7 @@ object Dedup {
       // driver-side operational log: the tranche decision is the one
       // runtime fact a scale incident needs (was the budget hit, how
       // hard), and it is otherwise invisible outside the Spark UI
-      println(s"[containmentPairs] pairOcc=$pairOcc budget=$pairBudgetPerPass " +
+      log.info(s"[containmentPairs] pairOcc=$pairOcc budget=$pairBudgetPerPass " +
         s"tranches=$tranches")
       val cands = (0 until tranches).map { t =>
         val slice = expand(
@@ -975,7 +918,7 @@ object Dedup {
         // otherwise accumulate until a natural GC — measured filling
         // the smoke box's scratch disk across tranches)
         System.gc()
-        println(s"[containmentPairs] tranche ${t + 1}/$tranches done")
+        log.info(s"[containmentPairs] tranche ${t + 1}/$tranches done")
         slice
       }.reduce(_ unionByName _).distinct().localCheckpoint()
       staged.unpersist(blocking = false)
@@ -998,22 +941,36 @@ object Dedup {
         (nCands + perPass - 1) / perPass)).toInt
       if (vPasses <= 1) score(cands)
       else {
-        println(s"[containmentPairs] nCands=$nCands verifyPasses=$vPasses")
+        log.info(s"[containmentPairs] nCands=$nCands verifyPasses=$vPasses")
         (0 until vPasses).map { i =>
           val part = score(cands.filter(
             pmod(hash(col("doc_a"), col("doc_b")), lit(vPasses)) === i))
             .localCheckpoint()
           System.gc()
-          println(s"[containmentPairs] verify pass ${i + 1}/$vPasses done")
+          log.info(s"[containmentPairs] verify pass ${i + 1}/$vPasses done")
           part
         }.reduce(_ unionByName _)
       }
     }
   }
 
+  /** LSH-band-bucketed exact Jaccard: candidates come from the MinHash
+    * band join ([[minhashCandidatePairs]]), then each candidate pair is
+    * verified with EXACT distinct-shingle Jaccard ≥ threshold.
+    *
+    * This is the honest 100 TB bucketing for [[ngramJaccardPairs]]: a
+    * metadata bucket like language is unbounded under corpus skew
+    * (English is ~half of a web corpus, so "per-bucket pairwise" quietly
+    * becomes all-pairs), while a band bucket's expected size is set by
+    * the signature parameters alone. Cost is candidates × one bounded
+    * set intersection — the sets join back by doc id, so the text/hash
+    * arrays shuffle once and only for docs that are in some candidate
+    * pair. Recall is the band recall (a pair sharing no band is never
+    * scored); precision is exact because the threshold test runs on the
+    * true Jaccard, not the signature estimate.
+    */
   def ngramJaccardPairsLsh(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, k: Int = 3): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     // k threads through to the band join: candidates are proposed on the
     // SAME k-shingles the exact verify scores, else band recall and the
     // Jaccard threshold would silently talk about different grams
@@ -1021,18 +978,8 @@ object Dedup {
     // one scan computes every doc's distinct-shingle hash set; both join
     // sides reuse it (same materialize-once rationale as the postings in
     // ngramJaccardPairs)
-    val sets = withWords(df, textCol, k)
-      .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $k)")))
-      .select(col(idCol), col("__hs"))
-      .localCheckpoint()
-    cands
-      .join(sets.select(col(idCol).as("doc_a"), col("__hs").as("__ha")), "doc_a")
-      .join(sets.select(col(idCol).as("doc_b"), col("__hs").as("__hb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("__ha"), col("__hb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("__ha")) + size(col("__hb")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val sets = shingleSets(df, idCol, textCol, k).localCheckpoint()
+    PostingIndex.verifyJaccard(cands, sets, sets, threshold)
   }
 
   /** EXACT set-similarity self-join by prefix filtering (AllPairs /
@@ -1062,7 +1009,7 @@ object Dedup {
     * an already-checkpointed frame) and the op REFUSES past
     * `maxPosting` rather than silently running an unbounded join. The
     * length filter `min(|a|,|b|) ≥ t·max(|a|,|b|)` (implied by J ≥ t)
-    * and the PPJoin positional filter (see the propose body) prune
+    * and the PPJoin positional filter (see [[prefixCandsOf]]) prune
     * candidates before the pair dedup and the exact verify.
     *
     * Verify: exact Jaccard on candidate pairs via each side's full
@@ -1154,16 +1101,25 @@ object Dedup {
       threshold: Double, maxPosting: Long = 100000L): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
-    val sp = prefixPosted(state, idCol, threshold)
-    val dp = prefixPosted(delta, idCol, threshold)
-    guardPosting(Seq(sp, dp), maxPosting)
-    val cross = prefixCandsOf(sp, dp, idCol, threshold,
-      col("doc_a") =!= col("doc_b"))
-    val within = prefixCandsOf(dp, dp, idCol, threshold,
-      col("doc_a") < col("doc_b"))
+    // both prefix-posting frames are materialized once: the self- and
+    // cross-joins of the march both consume them
+    val sp = prefixPostings(state, idCol, threshold).localCheckpoint()
+    val dp = prefixPostings(delta, idCol, threshold).localCheckpoint()
+    // ONE aggregate job over the union of the posting frames, keyed
+    // (batch, token) so each batch's posting lengths stay separate — the
+    // n-collect version spent one fixed-cost job per batch on a march
+    // whose cost is otherwise all scheduling
+    guardPosting(Seq(sp, dp).zipWithIndex
+        .map { case (f, j) => f.select(lit(j).as("__b"), col("__t")) }
+        .reduce(_ unionByName _),
+      Seq("__b", "__t"), maxPosting)
+    val cross = ordered(prefixCandsOf(sp, dp, idCol, threshold,
+      col("doc_a") =!= col("doc_b")))
+    val within = ordered(prefixCandsOf(dp, dp, idCol, threshold,
+      col("doc_a") < col("doc_b")))
     val sets = state.select(col(idCol), col("__st"))
       .unionByName(delta.select(col(idCol), col("__st")))
-    prefixVerify(cross.unionByName(within).distinct(), sets, idCol, threshold)
+    PostingIndex.verifyJaccard(cross.unionByName(within).distinct(), sets, sets, threshold)
   }
 
   /** Whole-corpus march in ONE call — the shape a replay/backfill job
@@ -1197,98 +1153,88 @@ object Dedup {
       .localCheckpoint(eager = false)
     // lazy checkpoint: the guard aggregate below is the first action and
     // materializes it — one job, not checkpoint + aggregate
-    val pp = tagged
-      .withColumn("__p", expr(
-        s"slice(__st, 1, size(__st) - cast(ceil($threshold * size(__st)) as int) + 1)"))
-      .select(col(idCol), col("__b"), col("__n"),
-        posexplode(col("__p")).as(Seq("__i0", "__t")))
-      .select(col(idCol), col("__b"), col("__n"), (col("__i0") + 1).as("__i"),
-        col("__t"))
+    val pp = prefixPostings(tagged, idCol, threshold, Seq("__b"))
       .localCheckpoint(eager = false)
-    val longest = {
-      val r = pp.groupBy(col("__b"), col("__t")).agg(count(lit(1)).as("__len"))
-        .agg(max(col("__len"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    require(longest <= maxPosting,
-      s"prefix posting list of length $longest exceeds maxPosting=$maxPosting " +
-        "(the within-token candidate join is quadratic in posting length; " +
-        "raise the bound deliberately or pre-clean degenerate tokens)")
-    val passes = passesOverlap(threshold) _
-    val aSide = pp.select(col(idCol).as("doc_a"), col("__b").as("__ba"),
-      col("__n").as("__na"), col("__i").as("__ia"), col("__t"))
-    val bSide = pp.select(col(idCol).as("doc_b"), col("__b").as("__bb"),
-      col("__n").as("__nb"), col("__i").as("__ib"), col("__t").as("__t2"))
+    guardPosting(pp, Seq("__b", "__t"), maxPosting)
+    // the (A, B) roles: A is the earlier batch, or the smaller id of
+    // the same batch
     val marchCond = (col("__ba") < col("__bb") && col("doc_a") =!= col("doc_b")) ||
       (col("__ba") === col("__bb") && col("doc_a") < col("doc_b"))
-    val cands = aSide.join(bSide.hint("shuffle_hash"),
-        col("__t") === col("__t2") && marchCond &&
-          least(col("__na"), col("__nb")).cast("double") >=
-            greatest(col("__na"), col("__nb")) * threshold &&
-          passes(least(col("__ia"), col("__ib")) +
-            least(col("__na") - col("__ia"), col("__nb") - col("__ib"))))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("__ia")).as("__i1"), min(col("__ib")).as("__j1"),
-        first(col("__na")).as("__na"), first(col("__nb")).as("__nb"))
-      .filter(passes(lit(1) +
-        least(col("__na") - col("__i1"), col("__nb") - col("__j1"))))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-    prefixVerify(cands, tagged.select(col(idCol), col("__st")), idCol,
-      threshold)
+    val cands = ordered(prefixCandsOf(pp, pp, idCol, threshold, marchCond)).distinct()
+    val sets = tagged.select(col(idCol), col("__st"))
+    PostingIndex.verifyJaccard(cands, sets, sets, threshold)
   }
 
-  /** Prefix postings of a value/rarest-ranked frame: (id, __n, __i
-    * 1-based position, __t token), materialized once — both the self-
-    * and cross-joins of the march consume it.
+  /** Prefix postings of a value/rarest-ranked frame: (id, `carry`…,
+    * __n, __i 1-based position, __t token) for the first
+    * `|d| - ceil(t·|d|) + 1` tokens of each doc's sorted `__st`.
     */
-  private def prefixPosted(ranked: DataFrame, idCol: String,
-      threshold: Double): DataFrame = ranked
-    .withColumn("__p", expr(
-      s"slice(__st, 1, size(__st) - cast(ceil($threshold * size(__st)) as int) + 1)"))
-    .select(col(idCol), col("__n"),
-      posexplode(col("__p")).as(Seq("__i0", "__t")))
-    .select(col(idCol), col("__n"), (col("__i0") + 1).as("__i"), col("__t"))
-    .localCheckpoint()
+  private def prefixPostings(ranked: DataFrame, idCol: String,
+      threshold: Double, carry: Seq[String] = Nil): DataFrame = {
+    val keep = col(idCol) +: (carry :+ "__n").map(col)
+    ranked
+      .withColumn("__p", expr(
+        s"slice(__st, 1, size(__st) - cast(ceil($threshold * size(__st)) as int) + 1)"))
+      .select(keep :+ posexplode(col("__p")).as(Seq("__i0", "__t")): _*)
+      .select(keep ++ Seq((col("__i0") + 1).as("__i"), col("__t")): _*)
+  }
 
-  private def guardPosting(pps: Seq[DataFrame], maxPosting: Long): Unit = {
-    // ONE aggregate job over the union of the (already-checkpointed)
-    // posting frames, keyed (batch, token) so each batch's posting
-    // lengths stay separate — the n-collect version spent one fixed-cost
-    // job per batch on a march whose cost is otherwise all scheduling
-    val longest = {
-      val r = pps.zipWithIndex
-        .map { case (f, j) => f.select(lit(j).as("__b"), col("__t")) }
-        .reduce(_ unionByName _)
-        .groupBy(col("__b"), col("__t")).agg(count(lit(1)).as("__len"))
-        .agg(max(col("__len"))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
+  /** Refuses a prefix posting list longer than `maxPosting` (`pp` grouped
+    * by `keys`): the within-token candidate join is quadratic in it.
+    */
+  private def guardPosting(pp: DataFrame, keys: Seq[String], maxPosting: Long): Unit = {
+    val r = pp.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__len"))
+      .agg(max(col("__len"))).head()
+    val longest = if (r.isNullAt(0)) 0L else r.getLong(0)
     require(longest <= maxPosting,
       s"prefix posting list of length $longest exceeds maxPosting=$maxPosting " +
         "(the within-token candidate join is quadratic in posting length; " +
         "raise the bound deliberately or pre-clean degenerate tokens)")
   }
 
-  private def passesOverlap(threshold: Double)(bound: Column): Column =
-    bound.cast("double") * (1.0 + threshold) >=
-      (col("__na") + col("__nb")).cast("double") * threshold - 1e-9
+  /** Candidate pairs as (least, greatest) ids. */
+  private def ordered(pairs: DataFrame): DataFrame =
+    pairs.select(least(col("doc_a"), col("doc_b")).as("doc_a"),
+      greatest(col("doc_a"), col("doc_b")).as("doc_b"))
 
-  /** PPJoin candidate stage between two prefix-posting frames (see
-    * [[prefixFilterPairsRanked]] for the two positional stages' exact-
-    * ness argument — both frames must share one total token order).
-    * Output pairs are id-ordered (least, greatest).
+  /** PPJoin candidate stage between two [[prefixPostings]] frames that
+    * share one total token order: (doc_a, doc_b) pairs where `cond`
+    * holds that can still reach the threshold. A batch-tagged frame
+    * (the march) carries its `__b` to the sides as `__ba` / `__bb`.
+    *
+    * J ≥ t ⇔ overlap ≥ t/(1+t)·(|a|+|b|); the required overlap in the
+    * form (1+t)·bound ≥ t·(na+nb), kept in exact small-integer double
+    * products with a 1e-9 slack so float rounding can only UNDER-prune.
+    * The length filter `min(|a|,|b|) ≥ t·max(|a|,|b|)` is implied by
+    * J ≥ t. PPJoin positional filter (Xiao et al., WWW'08), two exact
+    * stages: (1) per-match optimistic bound — even if EVERY earlier
+    * prefix slot matched, overlap ≤ min(i,j) + min(|a|−i, |b|−j); (2)
+    * first-match bound after the pair group — both docs sort by the
+    * same total order, so common tokens appear in the same relative
+    * order and the match minimizing i also minimizes j: it is the FIRST
+    * common token, nothing before it is shared, hence overlap ≤ 1 +
+    * min(|a|−i₁, |b|−j₁). Stage 1 dropping a pair's first match only
+    * happens when the pair is already provably below threshold
+    * (min(i,j) ≥ 1 makes stage 1 looser than stage 2 on that match), so
+    * the surviving-min positions never over-prune a true pair —
+    * exactness is preserved by the theorem and PROVEN by the naive
+    * all-pairs oracle staying hash-green. Measured on
+    * dedup_prefix_filter sf0.1 (ScratchProfile decomposition):
+    * verify-join input pairs cut 2.64× (272,109 → 103,077) at identical
+    * verified output (1,548 pairs).
     */
   private def prefixCandsOf(pa: DataFrame, pb: DataFrame, idCol: String,
       threshold: Double, cond: Column): DataFrame = {
-    val passes = passesOverlap(threshold) _
-    val a = pa.select(col(idCol).as("doc_a"), col("__n").as("__na"),
-      col("__i").as("__ia"), col("__t"))
-    val b = pb.select(col(idCol).as("doc_b"), col("__n").as("__nb"),
-      col("__i").as("__ib"), col("__t").as("__t2"))
-    a.join(b.hint("shuffle_hash"),
-        col("__t") === col("__t2") && cond &&
+    def passes(bound: Column): Column =
+      bound.cast("double") * (1.0 + threshold) >=
+        (col("__na") + col("__nb")).cast("double") * threshold - 1e-9
+    def side(p: DataFrame, doc: String, s: String): DataFrame = {
+      val tag = if (p.columns.contains("__b")) Seq(col("__b").as("__b" + s)) else Nil
+      p.select(Seq(col(idCol).as(doc)) ++ tag ++
+        Seq(col("__n").as("__n" + s), col("__i").as("__i" + s), col("__t")): _*)
+    }
+    PostingIndex.keyJoin(side(pa, "doc_a", "a"), side(pb, "doc_b", "b"), Seq("__t"),
+        cond &&
           least(col("__na"), col("__nb")).cast("double") >=
             greatest(col("__na"), col("__nb")) * threshold &&
           passes(least(col("__ia"), col("__ib")) +
@@ -1298,23 +1244,8 @@ object Dedup {
         first(col("__na")).as("__na"), first(col("__nb")).as("__nb"))
       .filter(passes(lit(1) +
         least(col("__na") - col("__i1"), col("__nb") - col("__j1"))))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
+      .select(col("doc_a"), col("doc_b"))
   }
-
-  /** Exact-Jaccard verify of candidate pairs against the full sorted
-    * token arrays.
-    */
-  private def prefixVerify(cands: DataFrame, sets: DataFrame, idCol: String,
-      threshold: Double): DataFrame =
-    cands
-      .join(sets.select(col(idCol).as("doc_a"), col("__st").as("__ta")), "doc_a")
-      .join(sets.select(col(idCol).as("doc_b"), col("__st").as("__tb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("__ta")) + size(col("__tb")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
   /** [[prefixFilterPairs]] from a pre-built [[rankedTokens]] frame
     * (typically read back from an ingest-time parquet artifact).
@@ -1327,66 +1258,14 @@ object Dedup {
     // explode and both verify sides derive from it (march rationale)
     val base = ranked.select(col(idCol), col("__n"), col("__st"))
       .localCheckpoint(eager = false)
-    val prefixed = base.withColumn("__p",
-      expr(s"slice(__st, 1, size(__st) - cast(ceil($threshold * size(__st)) as int) + 1)"))
     // 1-based token POSITION in the rarest-first total order rides along
-    // (posexplode): the PPJoin positional filter below prunes on it
-    val pp = prefixed
-      .select(col(idCol), col("__n"),
-        posexplode(col("__p")).as(Seq("__i0", "__t")))
-      .select(col(idCol), col("__n"), (col("__i0") + 1).as("__i"), col("__t"))
+    // (posexplode): the PPJoin positional filter prunes on it
+    val pp = prefixPostings(base, idCol, threshold)
       .localCheckpoint(eager = false) // the guard aggregate materializes
-    val longest = pp.groupBy(col("__t")).agg(count(lit(1)).as("__len"))
-      .agg(max(col("__len"))).head()
-    val maxLen = if (longest.isNullAt(0)) 0L else longest.getLong(0)
-    require(maxLen <= maxPosting,
-      s"prefix posting list of length $maxLen exceeds maxPosting=$maxPosting " +
-        "(the within-token candidate join is quadratic in posting length; " +
-        "raise the bound deliberately or pre-clean degenerate tokens)")
-    val a = pp.select(col(idCol).as("doc_a"), col("__n").as("__na"),
-      col("__i").as("__ia"), col("__t"))
-    val b = pp.select(col(idCol).as("doc_b"), col("__n").as("__nb"),
-      col("__i").as("__ib"), col("__t").as("__t2"))
-    // J ≥ t ⇔ overlap ≥ t/(1+t)·(|a|+|b|); the required overlap in the
-    // form (1+t)·bound ≥ t·(na+nb), kept in exact small-integer double
-    // products with a 1e-9 slack so float rounding can only UNDER-prune
-    def passes(bound: Column): Column =
-      bound.cast("double") * (1.0 + threshold) >=
-        (col("__na") + col("__nb")).cast("double") * threshold - 1e-9
-    // PPJoin positional filter (Xiao et al., WWW'08), two exact stages:
-    // (1) per-match optimistic bound — even if EVERY earlier prefix slot
-    // matched, overlap ≤ min(i,j) + min(|a|−i, |b|−j); (2) first-match
-    // bound after the pair group — both docs sort by the same total
-    // order, so common tokens appear in the same relative order and the
-    // match minimizing i also minimizes j: it is the FIRST common token,
-    // nothing before it is shared, hence overlap ≤ 1 + min(|a|−i₁,
-    // |b|−j₁). Stage 1 dropping a pair's first match only happens when
-    // the pair is already provably below threshold (min(i,j) ≥ 1 makes
-    // stage 1 looser than stage 2 on that match), so the surviving-min
-    // positions never over-prune a true pair — exactness is preserved by
-    // the theorem and PROVEN by the naive all-pairs oracle staying
-    // hash-green. Measured on dedup_prefix_filter sf0.1 (ScratchProfile
-    // decomposition): verify-join input pairs cut 2.64× (272,109 →
-    // 103,077) at identical verified output (1,548 pairs).
-    val cand = a.join(b.hint("shuffle_hash"),
-        col("__t") === col("__t2") && col("doc_a") < col("doc_b") &&
-          least(col("__na"), col("__nb")).cast("double") >=
-            greatest(col("__na"), col("__nb")) * threshold &&
-          passes(least(col("__ia"), col("__ib")) +
-            least(col("__na") - col("__ia"), col("__nb") - col("__ib"))))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(min(col("__ia")).as("__i1"), min(col("__ib")).as("__j1"),
-        first(col("__na")).as("__na"), first(col("__nb")).as("__nb"))
-      .filter(passes(lit(1) +
-        least(col("__na") - col("__i1"), col("__nb") - col("__j1"))))
-      .select(col("doc_a"), col("doc_b"))
-    cand
-      .join(base.select(col(idCol).as("doc_a"), col("__st").as("__ta")), "doc_a")
-      .join(base.select(col(idCol).as("doc_b"), col("__st").as("__tb")), "doc_b")
-      .withColumn("inter", size(array_intersect(col("__ta"), col("__tb"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("__ta")) + size(col("__tb")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    guardPosting(pp, Seq("__t"), maxPosting)
+    val sets = base.select(col(idCol), col("__st"))
+    PostingIndex.verifyJaccard(
+      prefixCandsOf(pp, pp, idCol, threshold, col("doc_a") < col("doc_b")),
+      sets, sets, threshold)
   }
 }

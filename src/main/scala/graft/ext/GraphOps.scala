@@ -3,9 +3,17 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph traversal as pure DataFrame rounds — the third graph
-  * algorithm family next to hash-min propagation and star contraction
-  * (Dedup.connectedComponents / connectedComponentsStar).
+/** Graph algorithms as pure DataFrame rounds, next to the connected
+  * components of [[Dedup]] (hash-min propagation and star
+  * contraction): BFS layers, triangle counts, k-core peeling, label
+  * propagation, PageRank (global and personalized), HITS, modularity
+  * and link prediction.
+  *
+  * The iterative ones broadcast a per-node frame (frontier, visited
+  * set, ranks, scores) while it has at most [[Dedup.SmallGraphRows]]
+  * rows — the one small-graph bound the dedup cluster rounds read too —
+  * and fall back to shuffled joins past it. Link prediction proposes
+  * its pairs through the posting self-join of [[PostingIndex]].
   */
 object GraphOps {
 
@@ -27,7 +35,7 @@ object GraphOps {
     * action (the same discipline as the CC loops).
     *
     * While the frontier (resp. visited set) is under
-    * `broadcastBudgetRows`, it BROADCASTS into the adjacency join
+    * [[Dedup.SmallGraphRows]] rows, it BROADCASTS into the adjacency join
     * (resp. anti join) — the edge table is then scanned and hash-probed,
     * never shuffled. A BFS frontier is tiny for the first hops by
     * construction, so the expensive early rounds of a 100 TB traversal
@@ -35,8 +43,7 @@ object GraphOps {
     * falls back to the shuffled equi join (same result, same key), the
     * exact broadcast-under-budget discipline of the CC loops.
     */
-  def bfsLayers(edges: DataFrame, sources: DataFrame, maxDepth: Int,
-      broadcastBudgetRows: Long = 4000000L): DataFrame = {
+  def bfsLayers(edges: DataFrame, sources: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0)
     // One checkpointed frame PER LAYER, never a re-materialized union:
     // each round checkpoints only the (small) new frontier, and the
@@ -55,8 +62,8 @@ object GraphOps {
     var exhausted = false
     while (d <= maxDepth && !exhausted) {
       val visited = layers.map(_.select(col("node"))).reduce(_.unionByName(_))
-      val f = if (frontierRows <= broadcastBudgetRows) broadcast(frontier) else frontier
-      val v = if (visitedRows <= broadcastBudgetRows) broadcast(visited) else visited
+      val f = if (frontierRows <= Dedup.SmallGraphRows) broadcast(frontier) else frontier
+      val v = if (visitedRows <= Dedup.SmallGraphRows) broadcast(visited) else visited
       val next = f.join(edges, col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
         .join(v, Seq("node"), "left_anti")
@@ -226,7 +233,7 @@ object GraphOps {
     * identically).
     *
     * Job shape (optimization r16): while the rank frame is under
-    * `broadcastBudgetRows`, NO per-round localCheckpoint — the rounds
+    * [[Dedup.SmallGraphRows]] rows, NO per-round localCheckpoint — the rounds
     * stay one lazy nested plan whose per-round BroadcastExchanges
     * materialize exactly once inside the caller's single action, and
     * the identical edges/outdeg subtrees dedup via ReusedExchange. The
@@ -237,8 +244,7 @@ object GraphOps {
     * would re-execute every prior round per action, which is the wrong
     * trade at scale.
     */
-  def pageRank(edgesRaw: DataFrame, iters: Int, damping: Double = 0.85,
-      broadcastBudgetRows: Long = 4000000L): DataFrame = {
+  def pageRank(edgesRaw: DataFrame, iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 0)
     // canonicalize like the sibling triangleCounts/kCore: duplicate
     // edges would multiply contributions. Self-loops are KEPT — a
@@ -251,7 +257,7 @@ object GraphOps {
       .localCheckpoint(eager = false) // the count materializes
     val n = nodes.count()
     val base = (1.0 - damping) / n
-    val small = n <= broadcastBudgetRows
+    val small = n <= Dedup.SmallGraphRows
     // broadcast path: outdeg stays lazy — its BroadcastExchange subtree
     // is identical every round, so one execution builds it once
     // (ReusedExchange); shuffled path materializes it once up front
@@ -289,7 +295,7 @@ object GraphOps {
     * domains) and related-entity retrieval. Same engine-exactness
     * contract as [[pageRank]]: contributions rounded to 12 dp, summed
     * in DECIMAL(38,12) (order-independent), rank frames broadcast
-    * under `broadcastBudgetRows` and shuffle-joined past it. Seeds
+    * under [[Dedup.SmallGraphRows]] rows and shuffle-joined past it. Seeds
     * outside the graph are dropped (the teleport mass must be
     * well-defined over reachable nodes); an empty effective seed set
     * is a loud error, never a silent uniform fallback.
@@ -302,8 +308,7 @@ object GraphOps {
     * node frame's checkpoint and ONE aggregate returning (n, nSeeds).
     */
   def personalizedPageRank(edgesRaw: DataFrame, seedsRaw: DataFrame,
-      iters: Int, damping: Double = 0.85,
-      broadcastBudgetRows: Long = 4000000L): DataFrame = {
+      iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 0)
     val edges = edgesRaw.select(col("src"), col("dst")).distinct()
     val dec = org.apache.spark.sql.types.DecimalType(38, 12)
@@ -320,7 +325,7 @@ object GraphOps {
     require(nSeeds > 0,
       "personalized PageRank needs at least one seed present in the graph")
     val base = (1.0 - damping) / nSeeds
-    val small = n <= broadcastBudgetRows
+    val small = n <= Dedup.SmallGraphRows
     val outdegRaw = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val outdeg = if (small) outdegRaw else outdegRaw.localCheckpoint()
     var ranks = flagged
@@ -362,15 +367,14 @@ object GraphOps {
     *
     * Same contract as [[pageRank]]: contributions rounded to 12 dp and
     * summed in DECIMAL(38,12) (order-independent), score frames
-    * broadcast under `broadcastBudgetRows` and shuffle-joined past it,
+    * broadcast under [[Dedup.SmallGraphRows]] rows and shuffle-joined past it,
     * one localCheckpoint per round to cut the lineage. Raw (pre-
     * normalization) sums stay double-exact while n·maxScore < ~9e3 at
     * 12 dp — after the first normalization every score is ≤ 1, so the
     * bound only concerns round 1's all-ones start (documented, not a
     * practical limit: normalize sums are decimal anyway).
     */
-  def hits(edgesRaw: DataFrame, iters: Int,
-      broadcastBudgetRows: Long = 4000000L): DataFrame = {
+  def hits(edgesRaw: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
     val dec = org.apache.spark.sql.types.DecimalType(38, 12)
     val edges = edgesRaw.select(col("src"), col("dst")).distinct().localCheckpoint()
@@ -378,7 +382,7 @@ object GraphOps {
       .unionByName(edges.select(col("dst").as("node"))).distinct()
       .localCheckpoint(eager = false) // the count materializes
     val n = nodes.count()
-    val small = n <= broadcastBudgetRows
+    val small = n <= Dedup.SmallGraphRows
     def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // Job shape (optimization r16). Broadcast path: NO materialization
     // at all — each half-round's aggregate is consumed ONCE (the L1
@@ -528,10 +532,10 @@ object GraphOps {
     import org.apache.spark.sql.types.DecimalType
     val kept = postings.select(col("key").as("__k"), col("node").as("__n"),
       col("fan").as("__fan"))
-    val a = kept.select(col("__k"), col("__n").as("node_a"), col("__fan"))
-    val b = kept.select(col("__k").as("__k2"), col("__n").as("node_b"))
-    val pr = a.join(b.hint("shuffle_hash"),
-        col("__k") === col("__k2") && col("node_a") < col("node_b"))
+    val pr = PostingIndex.keyJoin(
+        kept.select(col("__k"), col("__n").as("node_a"), col("__fan")),
+        kept.select(col("__k"), col("__n").as("node_b")), Seq("__k"),
+        col("node_a") < col("node_b"))
       .groupBy(col("node_a"), col("node_b"))
       .agg(count(lit(1)).as("common"),
         sum(round(lit(1.0) / col("__fan"), 9).cast(DecimalType(27, 9)))

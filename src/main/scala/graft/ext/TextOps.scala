@@ -245,10 +245,8 @@ object TextOps {
   def contaminationPairs(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 8, minOverlap: Int = 10): DataFrame = {
     require(n >= 1 && minOverlap >= 1)
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     def postings(df: DataFrame, out: String, h: String): DataFrame =
-      Dedup.withWords(df, textCol, n)
-        .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $n)")))
+      Dedup.withShingleSet(df, textCol, n)
         .select(col(idCol).as(out), explode(col("__hs")).as(h))
     val bench = postings(benchmark, "bench_id", "__hb")
     val corp = postings(corpus, "doc_id", "__hc")
@@ -281,11 +279,8 @@ object TextOps {
   def bloomContaminationPairs(corpus: DataFrame, benchmark: DataFrame,
       idCol: String, textCol: String, n: Int = 8, minOverlap: Int = 10,
       k: Int = 5): DataFrame = {
-    graft.functions.VectorExpressions.register(corpus.sparkSession)
     import org.apache.spark.sql.graft.PlanDf
-    def withHashes(df: DataFrame): DataFrame =
-      Dedup.withWords(df, textCol, n)
-        .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $n)")))
+    def withHashes(df: DataFrame): DataFrame = Dedup.withShingleSet(df, textCol, n)
     // build side: the eval set — a scale-fixed model input (BloomBits
     // caps it loudly); one small distinct-aggregate, never corpus-sized
     val benchHashes = withHashes(benchmark)
@@ -428,15 +423,9 @@ object TextOps {
     // was most of the serve cost. They still count: their weights are
     // already baked into `nrm` upstream, so dropping them HERE (join
     // inputs only) leaves every cosine bit-identical.
-    val joinable = postings.filter(col("df_docs") >= 2)
-    val aSide = joinable.select(col("term"), col(idCol).as("doc_a"),
-      col("w").as("wa"), col("nrm").as("__na"))
-    val bSide = joinable.select(col("term"), col(idCol).as("doc_b"),
-      col("w").as("wb"), col("nrm").as("__nb"))
-    // shuffle_hash for the same reason as minhashCandidatePairs: posting
-    // keys repeat per colliding document and SMJ buffers same-key runs
-    aSide.join(bSide.hint("shuffle_hash"), "term")
-      .filter(col("doc_a") < col("doc_b"))
+    PostingIndex.selfJoin(postings.filter(col("df_docs") >= 2), idCol, Seq("term"),
+        Seq(col("w").as("wa"), col("nrm").as("__na")),
+        Seq(col("w").as("wb"), col("nrm").as("__nb")))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(sum(round(col("wa") * col("wb"), 9)
         .cast(DecimalType(27, 9))).cast("double").as("dot"),
@@ -1654,16 +1643,8 @@ object TextOps {
     * hashing is the dominant cost of the live op and is shared verbatim
     * by the pair product, so one staged posting frame serves both).
     */
-  def winnowFingerprintsFromPostings(fps: DataFrame, idCol: String): DataFrame = {
-    val dfreq = fps.groupBy(col("__fp"))
-      .agg(countDistinct(col(idCol)).as("__nd"))
-    fps.join(dfreq, Seq("__fp"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_fps"),
-        sum((col("__nd") >= 2).cast("long")).as("n_shared"))
-      .withColumn("shared_ratio",
-        round(col("n_shared").cast("double") / col("n_fps").cast("double"), 9))
-  }
+  def winnowFingerprintsFromPostings(fps: DataFrame, idCol: String): DataFrame =
+    PostingIndex.sharedKeyRatio(fps, idCol, "__fp", "n_fps", "n_shared", "shared_ratio")
 
   /** Per-doc DISTINCT winnow fingerprints as (id, __fp) posting rows —
     * the shared stem of the per-doc signal ([[winnowFingerprints]]) and
@@ -1671,13 +1652,9 @@ object TextOps {
     */
   def winnowPostings(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 4): DataFrame = {
-    val grams = (0 until k).map(j => s"__w[i+$j]").mkString(", ")
     df.select(col(idCol), words(col(textCol)).as("__w"))
       .filter(size(col("__w")) >= k + w - 1)
-      .select(col(idCol), expr(
-        s"""transform(sequence(0, size(__w) - $k),
-            i -> cast(conv(substring(md5(concat_ws(' ', $grams)), 1, 15), 16, 10) AS BIGINT))""")
-        .as("__h"))
+      .select(col(idCol), gramHashes60(k).as("__h"))
       .select(col(idCol), explode(expr(
         s"""array_distinct(transform(sequence(0, size(__h) - $w),
             i -> array_min(slice(__h, i + 1, $w))))""")).as("__fp"))
@@ -1715,10 +1692,7 @@ object TextOps {
     val totals = fps.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
     val dfreq = fps.groupBy(col("__fp")).agg(count(lit(1)).as("__df"))
     val keep = fps.join(dfreq.filter(col("__df").between(2, maxDf)), "__fp")
-    val a = keep.select(col("__fp"), col(idCol).as("doc_a"))
-    val b = keep.select(col("__fp").as("__fp2"), col(idCol).as("doc_b"))
-    a.join(b.hint("shuffle_hash"),
-        col("__fp") === col("__fp2") && col("doc_a") < col("doc_b"))
+    PostingIndex.selfJoin(keep, idCol, Seq("__fp"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
@@ -1741,13 +1715,19 @@ object TextOps {
   def spanPostings(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
     require(n >= 1, s"span width must be positive, got $n")
-    val grams = (1 to n).map(j => s"__w[i+${j - 1}]").mkString(", ")
     df.select(col(idCol), words(col(textCol)).as("__w"))
       .filter(size(col("__w")) >= n)
-      .select(col(idCol), explode(expr(
-        s"""transform(sequence(0, size(__w) - $n),
-            i -> cast(conv(substring(md5(concat_ws(' ', $grams)), 1, 15), 16, 10) AS BIGINT))"""))
-        .as("__h"))
+      .select(col(idCol), explode(gramHashes60(n)).as("__h"))
+  }
+
+  /** The 60-bit hash of every sliding n-word gram of the `__w` words
+    * array, in order: the first 15 hex digits of md5 over the
+    * space-joined gram — the family the oracle replays verbatim.
+    */
+  private def gramHashes60(n: Int): Column = {
+    val grams = (0 until n).map(j => s"__w[i+$j]").mkString(", ")
+    expr(s"""transform(sequence(0, size(__w) - $n),
+      i -> cast(conv(substring(md5(concat_ws(' ', $grams)), 1, 15), 16, 10) AS BIGINT))""")
   }
 
   /** Per-doc duplicated-span stats from a [[spanPostings]] frame (live
@@ -1757,16 +1737,8 @@ object TextOps {
     * linear: hash-keyed doc-frequency aggregate + one join-back +
     * per-doc aggregate; no pair is ever listed.
     */
-  def dupSpanStatsFromPostings(postings: DataFrame, idCol: String): DataFrame = {
-    val dfreq = postings.groupBy(col("__h"))
-      .agg(countDistinct(col(idCol)).as("__ndocs"))
-    postings.join(dfreq, Seq("__h"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_spans"),
-        sum((col("__ndocs") >= 2).cast("long")).as("n_dup"))
-      .withColumn("dup_ratio",
-        round(col("n_dup").cast("double") / col("n_spans").cast("double"), 9))
-  }
+  def dupSpanStatsFromPostings(postings: DataFrame, idCol: String): DataFrame =
+    PostingIndex.sharedKeyRatio(postings, idCol, "__h", "n_spans", "n_dup", "dup_ratio")
 
   /** Live twin of the staged span-counting path: hash + count in one
     * query (the posting frame is consumed twice — doc-frequency

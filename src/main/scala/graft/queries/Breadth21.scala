@@ -453,12 +453,7 @@ object Breadth21 {
       val bandsAll = LshTiers.map { r =>
         Dedup.bandsOfSig(sig, "doc_id", r).withColumn("__r", lit(r.toLong))
       }.reduce(_ unionByName _)
-      val a = bandsAll.select(col("__r"), col("doc_id").as("doc_a"), col("band"))
-      val b = bandsAll.select(col("__r").as("__r2"), col("doc_id").as("doc_b"),
-        col("band").as("band_b"))
-      val byTier = a.join(b.hint("shuffle_hash"),
-          col("__r") === col("__r2") && col("band") === col("band_b") &&
-            col("doc_a") < col("doc_b"))
+      val byTier = graft.ext.PostingIndex.selfJoin(bandsAll, "doc_id", Seq("__r", "band"))
         .select(col("__r"), col("doc_a"), col("doc_b")).distinct()
         .join(truth, Seq("doc_a", "doc_b"), "left")
         .groupBy(col("__r"))

@@ -48,6 +48,16 @@ class DedupSpec extends SparkSpec {
     assert(got.forall(_._2 == 1L), got.filter(_._2 != 1L).take(5).mkString(","))
   }
 
+  test("star CC: the 200-node chain throws when the round budget runs out") {
+    // one round cannot contract a diameter-200 chain: the labels of an
+    // unconverged round are wrong, so they must never be returned
+    val chain = (1L until 200L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val ex = intercept[IllegalStateException] {
+      Dedup.connectedComponentsStar(chain, "doc_a", "doc_b", maxIter = 1).collect()
+    }
+    assert(ex.getMessage.contains("1 rounds"), ex.getMessage)
+  }
+
   test("star CC: equals hash-min propagation on seeded random graphs") {
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 3) {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.etl.CleanOps
-import graft.ext.{Dedup, TextOps}
+import graft.ext.{Dedup, PostingIndex, TextOps}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -100,6 +100,29 @@ class PropertySpec extends SparkSpec {
         assert(got == expected,
             s"driverPairs $driverPairs trial $trial: nVerts=$nVerts nEdges=${edges.size}")
       }
+    }
+  }
+
+  test("posting self-join equals a nested loop over all posting pairs") {
+    // two-column key (k1, k2) over a small key space, so keys repeat
+    // across docs AND within a doc; every posting carries its own payload
+    for (trial <- 1 to 3) {
+      val rnd = new scala.util.Random(100 + trial)
+      val postings = Seq.fill(120)((rnd.nextInt(25).toLong, rnd.nextInt(3),
+        rnd.nextInt(3).toString, rnd.nextInt(1000).toLong))
+      val got = PostingIndex.selfJoin(postings.toDF("doc", "k1", "k2", "w"), "doc",
+          Seq("k1", "k2"), Seq($"w".as("wa")), Seq($"w".as("wb")))
+        .select("doc_a", "doc_b", "k1", "k2", "wa", "wb")
+        .as[(Long, Long, Int, String, Long, Long)].collect().toSeq.sorted
+      val want = (for {
+        (da, k1, k2, wa) <- postings
+        (db, l1, l2, wb) <- postings
+        if k1 == l1 && k2 == l2 && da < db
+      } yield (da, db, k1, k2, wa, wb)).sorted
+      assert(want.nonEmpty &&
+        postings.groupBy(p => (p._1, p._2, p._3)).exists(_._2.size > 1),
+        s"trial $trial: the fixture must repeat a key within a doc")
+      assert(got == want, s"trial $trial: ${got.diff(want).take(3)} / ${want.diff(got).take(3)}")
     }
   }
 
