@@ -113,13 +113,15 @@ object Bench {
     // JIT the fused text kernels (shingle/minhash/simhash/text stats) on
     // synthetic rows — whichever dedup or text query runs first otherwise
     // pays their cold-compile cost.
-    graft.functions.VectorExpressions.register(spark)
     val txt = spark.range(256).select(
       concat_ws(" ", (0 to 24).map(i => concat(lit(s"w$i"), col("id") % 7)): _*).as("text"))
-    txt.select(expr("graft_minhash_sig(graft_shingle_hashes64(split(text, ' '), 3))").as("sig"))
+    import graft.functions.VectorExpressions.{minhashSig, shingleHashes32, shingleHashes64,
+      simhash32, textStats}
+    val words = split(col("text"), " ")
+    txt.select(minhashSig(shingleHashes64(words, 3)).as("sig"))
       .select(explode(col("sig"))).count()
-    txt.select(expr("graft_simhash32(graft_shingle_hashes32(split(text, ' '), 1))")).count()
-    txt.select(expr("graft_text_stats(text, lower(text), array('w1'))").as("s"))
+    txt.select(simhash32(shingleHashes32(words, 1))).count()
+    txt.select(textStats(col("text"), lower(col("text")), array(lit("w1"))).as("s"))
       .agg(sum(col("s.bpe_tokens"))).collect()
     // Layout/ingest warm-up: bucketed, partitioned, and exported copies
     // are ingest-time artifacts — queries pay to READ a layout, never to

@@ -2,62 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{BytePHash64, CosineSimilarity, Md5Hash32, MinHashSig, ShingleHashPairs, ShingleHashes, SignWord64, SimHash32, SubwordTokens}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.VectorExpressions
 
 /** Session extension wiring for the engine's custom expressions, for use
-  * via `spark.sql.extensions=graft.GraftExtensions` (production path) —
-  * equivalent to [[graft.functions.VectorExpressions.register]] which
-  * registers per-session at call sites.
+  * via `spark.sql.extensions=graft.GraftExtensions`: the md5-hash
+  * rewrite, the as-of join strategy, and every `graft_*` SQL name of
+  * [[graft.functions.VectorExpressions]]' kernel table — the same table
+  * [[graft.functions.VectorExpressions.register]] installs into one
+  * session. Operators need neither: they build kernels as typed columns.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
     ext.injectOptimizerRule(_ => graft.plans.Md5Hash32Rewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hash32"),
-      new ExpressionInfo(classOf[Md5Hash32].getName, "graft_hash32"),
-      (exprs: Seq[Expression]) => Md5Hash32(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes32"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes32"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0), intArg(exprs(1)), graft.functions.ShingleHashes.ModeMd5_32)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes64"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes64"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0), intArg(exprs(1)), graft.functions.ShingleHashes.ModeXx64)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_md5_60"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_md5_60"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0), intArg(exprs(1)), graft.functions.ShingleHashes.ModeMd5_60)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_md5_120"),
-      new ExpressionInfo(classOf[ShingleHashPairs].getName, "graft_shingle_md5_120"),
-      (exprs: Seq[Expression]) => ShingleHashPairs(exprs(0), intArg(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "graft_simhash32"),
-      (exprs: Seq[Expression]) => SimHash32(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_subword_tokens"),
-      new ExpressionInfo(classOf[SubwordTokens].getName, "graft_subword_tokens"),
-      (exprs: Seq[Expression]) => SubwordTokens(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_byte_phash"),
-      new ExpressionInfo(classOf[BytePHash64].getName, "graft_byte_phash"),
-      (exprs: Seq[Expression]) => BytePHash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sign_word"),
-      new ExpressionInfo(classOf[SignWord64].getName, "graft_sign_word"),
-      (exprs: Seq[Expression]) => SignWord64(exprs.head)))
+    VectorExpressions.Builders.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(VectorExpressions.getClass.getName, name), builder))
+    }
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.VectorExpressions
 
 /** Deduplication operators for large-scale text corpora (north-star
   * extension surface, SURVEY.md §7.5).
@@ -47,7 +48,7 @@ object Dedup {
 
   /** Portable 32-bit hash: first 8 hex digits of md5 as an unsigned long.
     * Built-in-only reference formulation; the hot paths use the
-    * codegen'd `graft_hash32` (same values, no hex round-trip — see
+    * codegen'd [[VectorExpressions.md5Hash32]] (same values, no hex round-trip — see
     * [[graft.functions.Md5Hash32]] and the equality test in ExtOpsSpec).
     */
   def hash32(c: Column): Column =
@@ -107,13 +108,12 @@ object Dedup {
     * one codegen'd pass.
     */
   def withShingleHashes(df: DataFrame, textCol: String, k: Int = 3): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     withWords(df, textCol, k)
-      .withColumn("__hashes", expr(s"graft_shingle_hashes32(__words, $k)"))
+      .withColumn("__hashes", VectorExpressions.shingleHashes32(col("__words"), k))
   }
 
   /** MinHash signature over `__hashes` — reference HOF formulation, kept
-    * for the equality test against the fused `graft_minhash_sig`.
+    * for the equality test against the fused [[VectorExpressions.minhashSig]].
     */
   private[graft] def signatureExprReference: String = {
     val mins = SeedsA.zip(SeedsB).map { case (a, b) =>
@@ -153,7 +153,7 @@ object Dedup {
   def minhashBands(df: DataFrame, idCol: String, textCol: String,
       rowsPerBand: Int = 2, k: Int = 3): DataFrame =
     withShingleHashes(df, textCol, k)
-      .withColumn("__sig", expr("graft_minhash_sig(__hashes)"))
+      .withColumn("__sig", VectorExpressions.minhashSig(col("__hashes")))
       .select(col(idCol), explode(expr(bandArrayExpr(rowsPerBand))).as("band"))
 
   /** Near-dup fingerprint INDEX: one row per historical doc carrying its
@@ -168,7 +168,7 @@ object Dedup {
   def buildBandIndex(df: DataFrame, idCol: String, textCol: String,
       rowsPerBand: Int = 2, k: Int = 3): DataFrame =
     withShingleHashes(df, textCol, k)
-      .withColumn("__sig", expr("graft_minhash_sig(__hashes)"))
+      .withColumn("__sig", VectorExpressions.minhashSig(col("__hashes")))
       .select(col(idCol), expr(bandArrayExpr(rowsPerBand)).as("bands"),
         array_distinct(col("__hashes")).as("hset"))
 
@@ -633,10 +633,9 @@ object Dedup {
     * 32 filter() rounds — is pinned equal in ExtOpsSpec).
     */
   def simhash32(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     withWords(df, textCol, 1)
-      .withColumn("__whashes", expr("graft_shingle_hashes32(__words, 1)"))
-      .withColumn("simhash", expr("graft_simhash32(__whashes)"))
+      .withColumn("__whashes", VectorExpressions.shingleHashes32(col("__words"), 1))
+      .withColumn("simhash", VectorExpressions.simhash32(col("__whashes")))
       .select(col(idCol), col("simhash"))
   }
 
@@ -759,12 +758,11 @@ object Dedup {
   }
 
   /** [[withWords]] plus `__hs`, the distinct 64-bit k-word shingle
-    * hashes of each doc (the fused `graft_shingle_hashes64` kernel).
+    * hashes of each doc (the fused [[VectorExpressions.shingleHashes64]] kernel).
     */
   private[graft] def withShingleSet(df: DataFrame, textCol: String, k: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     withWords(df, textCol, k)
-      .withColumn("__hs", array_distinct(expr(s"graft_shingle_hashes64(__words, $k)")))
+      .withColumn("__hs", array_distinct(VectorExpressions.shingleHashes64(col("__words"), k)))
   }
 
   /** Distinct k-word shingle-hash sets per doc — the staged-artifact

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions
 
 /** Multimodal column plumbing (SURVEY.md §7.5): media payloads are
   * opaque `binary` columns with a typed metadata struct alongside. The
@@ -233,9 +234,8 @@ object Multimodal {
     * every SF, asserted in ExtOpsSpec).
     */
   def bytePHash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     df.filter(length(col(textCol)) >= 1)
-      .withColumn("__ph", expr(s"graft_byte_phash($textCol)"))
+      .withColumn("__ph", VectorExpressions.bytePHash(col(textCol)))
       .select(col(idCol),
         element_at(col("__ph"), 1).as("phash_hi"),
         element_at(col("__ph"), 2).as("phash_lo"))
@@ -323,10 +323,8 @@ object Multimodal {
     // (O(frame²) char scans/window, a lambda object per byte) and its
     // consumers evaluated it per reference — see
     // [[graft.functions.FrameEnergies]]; ExtOpsSpec pins kernel == HOF
-    graft.functions.VectorExpressions.register(df.sparkSession)
     df.filter(length(col(textCol)) > 0)
-      .select(col(idCol), posexplode(expr(
-        s"graft_frame_energies($textCol, $frame)"))
+      .select(col(idCol), posexplode(VectorExpressions.frameEnergies(col(textCol), frame))
         .as(Seq("frame_no", "__fe")))
       .select(col(idCol), col("frame_no").cast("long").as("frame_no"),
         col("__fe.n_samples").as("n_samples"), col("__fe.energy").as("energy"),

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.functions.VectorExpressions
+import graft.functions.VectorExpressions.roundedCosine
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -36,12 +37,11 @@ object Similarity {
     */
   def bruteForceTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    VectorExpressions.register(spark)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -64,11 +64,10 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, kPool: Int,
       rrfK: Int = 60): DataFrame = {
     require(k >= 1 && kPool >= k)
-    VectorExpressions.register(spark)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("__cos", round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("__cos", roundedCosine(col("__qv"), col("__cv")))
       .withColumn("__l2", round(sqrt(expr(
         """aggregate(zip_with(__qv, __cv,
              (x, y) -> (cast(x as double) - cast(y as double))
@@ -120,13 +119,12 @@ object Similarity {
     val lamNum = math.round(lambda * 10).toInt
     require(lamNum >= 1 && lamNum <= 9 && math.abs(lamNum / 10.0 - lambda) < 1e-12,
       s"lambda must be a tenth in (0,1), got $lambda")
-    VectorExpressions.register(spark)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("__cv"))
     val wRel = Window.partitionBy(col("query_id"))
       .orderBy(col("rel").desc, col("cand_id"))
     val cand = c.join(broadcast(q), col("query_id") =!= col("cand_id"))
-      .withColumn("rel", round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("rel", roundedCosine(col("__qv"), col("__cv")))
       .withColumn("__rn", row_number().over(wRel))
       .filter(col("__rn") <= nCand)
       .select(col("query_id"), col("cand_id"), col("rel"), col("__cv"))
@@ -149,7 +147,7 @@ object Similarity {
         .orderBy(col("mmr").desc, col("cand_id"))
       val pick = remaining
         .join(sel, "query_id")
-        .withColumn("__s", round(expr("graft_cosine(__cv, __sv)"), 9))
+        .withColumn("__s", roundedCosine(col("__cv"), col("__sv")))
         .groupBy(col("query_id"), col("cand_id"))
         .agg(first(col("rel")).as("rel"), first(col("__cv")).as("__cv"),
           max(col("__s")).as("__ms"))
@@ -325,7 +323,6 @@ object Similarity {
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, k: Int, nprobe: Int = 1,
       spill: Int = 1, spillEps: Double = -1.0): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     // corpus rows live in their `spill` nearest lists (multi-assignment:
     // boundary vectors are reachable from both sides at the cost of
@@ -349,7 +346,7 @@ object Similarity {
       else joined.groupBy(col("query_id"), col("neighbor_id"))
         .agg(first(col("__qv")).as("__qv"), first(col("__cv2")).as("__cv2"))
     cands
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -367,7 +364,6 @@ object Similarity {
   def lshTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, bits: Int = 4, tables: Int = 4,
       dims: Int = 64): DataFrame = {
-    VectorExpressions.register(spark)
     def withBuckets(df: DataFrame, id: String, vec: String): DataFrame =
       df.select(col(idCol).as(id), col(vecCol).as(vec),
           explode(array((0 until tables).map(t =>
@@ -382,7 +378,7 @@ object Similarity {
       .agg(first(col("__qv")).as("__qv"), first(col("__cv")).as("__cv"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     cands
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -469,7 +465,6 @@ object Similarity {
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, spill: Int = 1,
       spillEps: Double = -1.0): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val enc = quantizeInt8(corpus, idCol, vecCol)
       .withColumn("__rv", transform(col("codes"), c => c.cast("double") * col("scale")))
@@ -495,7 +490,6 @@ object Similarity {
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, k: Int, nprobe: Int = 1,
       spill: Int = 1): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val c = index.select(col(idCol).as("neighbor_id"), col("list").as("neighbor_list"),
       transform(col("codes"), x => x.cast("double") * col("scale")).as("__cv2"))
@@ -510,7 +504,7 @@ object Similarity {
       else joined.groupBy(col("query_id"), col("neighbor_id"))
         .agg(first(col("__qv")).as("__qv"), first(col("__cv2")).as("__cv2"))
     cands
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -539,7 +533,6 @@ object Similarity {
       queries: DataFrame, centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, k: Int, superMod: Int,
       superResidue: Int, nsuper: Int, nprobe: Int): DataFrame = {
-    VectorExpressions.register(spark)
     val supers = collectCentroids(
       centroids.filter(col(centIdCol) % superMod === superResidue),
       centIdCol, centVecCol)
@@ -559,7 +552,7 @@ object Similarity {
     val wq = Window.partitionBy(col("query_id"))
       .orderBy(col("__negsim"), col("__cid"))
     val probes = q.join(broadcast(cent2super), "__super")
-      .withColumn("__negsim", -round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("__negsim", -roundedCosine(col("__qv"), col("__cv")))
       .withColumn("__rn", row_number().over(wq))
       .filter(col("__rn") <= nprobe)
       .select(col("query_id"), col("__qv"), col("__cid").as("query_list"))
@@ -573,7 +566,7 @@ object Similarity {
           col("query_id") =!= col("neighbor_id"))
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(first(col("__qv")).as("__qv"), first(col("__cv2")).as("__cv2"))
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -592,7 +585,6 @@ object Similarity {
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, superMod: Int,
       superResidue: Int, nsuper: Int): DataFrame = {
-    VectorExpressions.register(spark)
     val supers = collectCentroids(
       centroids.filter(col(centIdCol) % superMod === superResidue),
       centIdCol, centVecCol)
@@ -629,7 +621,6 @@ object Similarity {
       centIdCol: String, centVecCol: String, k: Int,
       tiers: Seq[Int]): DataFrame = {
     require(tiers.nonEmpty && tiers.forall(_ >= 1), s"bad tiers: $tiers")
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val truth = bruteForceTopK(spark, corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"), lit(1L).as("__t"))
@@ -650,7 +641,7 @@ object Similarity {
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(min(col("__prank")).as("__minrank"),
         first(col("__qv")).as("__qv"), first(col("__cv2")).as("__cv2"))
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
       .select(col("query_id"), col("neighbor_id"), col("__minrank"), col("sim"))
       .localCheckpoint()
     val w = Window.partitionBy(col("nprobe"), col("query_id"))
@@ -691,14 +682,13 @@ object Similarity {
     */
   def rerankExact(shortlist: DataFrame, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int): DataFrame = {
-    VectorExpressions.register(corpus.sparkSession)
     val sl = shortlist.select(col("query_id"), col("neighbor_id"))
     val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
     val qv = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
     cv.join(broadcast(sl), "neighbor_id")
       .join(broadcast(qv), "query_id")
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rank"), col("sim"))
@@ -899,7 +889,6 @@ object Similarity {
       centroids: DataFrame, train: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, m: Int, k: Int,
       nprobe: Int = 1, spill: Int = 1): DataFrame = {
-    VectorExpressions.register(spark)
     val model = ivfPqResidualModel(train, centroids, idCol, vecCol,
       centIdCol, centVecCol, m)
     // the materialized inverted lists — the index-build artifact itself;
@@ -964,7 +953,6 @@ object Similarity {
       centroids: DataFrame, model: PqModel, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, spill: Int = 1,
       spillEps: Double = -1.0): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val centDf = centroidLookup(centroids, centIdCol, centVecCol)
     corpus.select(col(idCol), col(vecCol).as("__v"))
@@ -1022,7 +1010,6 @@ object Similarity {
       centroids: DataFrame, model: PqModel, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, k: Int, nprobe: Int = 1,
       spill: Int = 1): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val centDf = centroidLookup(centroids, centIdCol, centVecCol)
     val c = index.select(col(idCol).as("neighbor_id"),
@@ -1037,7 +1024,7 @@ object Similarity {
     val scored = c.join(broadcast(q),
         col("query_list") === col("neighbor_list") &&
           col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
     val cands =
       if (spill <= 1) scored
       else scored.groupBy(col("query_id"), col("neighbor_id"))
@@ -1062,7 +1049,6 @@ object Similarity {
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String, minSim: Double,
       nprobe: Int = 1): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val q = withProbeLists(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("__qv")), "__qv", "query_id_list", cents, nprobe)
@@ -1071,7 +1057,7 @@ object Similarity {
     c.join(broadcast(q),
         col("query_id_list") === col("neighbor_id_list") &&
           col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
       .filter(col("sim") >= minSim)
       .select(col("query_id"), col("neighbor_id"), col("sim"))
   }
@@ -1109,7 +1095,6 @@ object Similarity {
       centroids: DataFrame, idCol: String, vecCol: String, labelCol: String,
       centIdCol: String, centVecCol: String, k: Int, nprobe: Int,
       sameLabel: Boolean): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     val q = withProbeLists(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("__qv"), col(labelCol).as("__ql")),
@@ -1124,7 +1109,7 @@ object Similarity {
         col("query_list") === col("neighbor_list") &&
           labelPred &&
           col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv2)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv2")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("__ql").as("label"), col("neighbor_id"),
@@ -1142,7 +1127,6 @@ object Similarity {
     */
   def kmeansAssign(spark: SparkSession, vectors: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, centIdCol: String, centVecCol: String): DataFrame = {
-    VectorExpressions.register(spark)
     val cents = collectCentroids(centroids, centIdCol, centVecCol)
     // the (max sim, then min cid) argmax is exactly [[topCentroids]]'
     // (negsim asc, cid asc) rank at k = 1 — one fused kernel pass per
@@ -1174,12 +1158,11 @@ object Similarity {
     */
   def coarseAssignJoin(spark: SparkSession, vectors: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, centIdCol: String, centVecCol: String): DataFrame = {
-    VectorExpressions.register(spark)
     val c = broadcast(centroids.select(col(centIdCol).cast("long").as("__cid"),
       col(centVecCol).as("__cv")))
     vectors.select(col(idCol), col(vecCol))
       .join(c)
-      .withColumn("__sim", round(expr(s"graft_cosine($vecCol, __cv)"), 9))
+      .withColumn("__sim", roundedCosine(col(vecCol), col("__cv")))
       .groupBy(col(idCol))
       .agg(first(col(vecCol)).as(vecCol),
         max(struct(col("__sim").as("sim"), (-col("__cid")).as("negcid"))).as("__best"))
@@ -1207,7 +1190,6 @@ object Similarity {
   def coarseAssignJoinTwoLevel(spark: SparkSession, vectors: DataFrame,
       centroids: DataFrame, idCol: String, vecCol: String,
       centIdCol: String, centVecCol: String): DataFrame = {
-    VectorExpressions.register(spark)
     val nCent = centroids.count()
     val s = math.max(1L, math.round(math.sqrt(nCent.toDouble)))
     val supers = centroids
@@ -1233,7 +1215,7 @@ object Similarity {
     // heavily on both sides (SMJ would buffer every same-key run)
     vec2super
       .join(cent2super.hint("shuffle_hash"), "__super")
-      .withColumn("__sim", round(expr(s"graft_cosine($vecCol, __c2v)"), 9))
+      .withColumn("__sim", roundedCosine(col(vecCol), col("__c2v")))
       .groupBy(col(idCol))
       .agg(first(col(vecCol)).as(vecCol),
         max(struct(col("__sim").as("sim"), (-col("__c2id")).as("negcid"))).as("__best"))
@@ -1453,7 +1435,6 @@ object Similarity {
   def ivfRebalanceFromAssignments(spark: SparkSession, assignments: DataFrame,
       vectors: DataFrame, idCol: String, vecCol: String, nSplit: Int): DataFrame = {
     require(nSplit >= 1)
-    VectorExpressions.register(spark)
     val sizes = assignments.groupBy(col("cluster")).agg(count(lit(1)).as("n_before"))
     val hot = sizes.orderBy(col("n_before").desc, col("cluster")).limit(nSplit)
     val vecs = vectors.select(col(idCol), col(vecCol))
@@ -1466,8 +1447,8 @@ object Similarity {
       .select(col("cluster"), col("__v1"), col("__v2"))
     members
       .join(broadcast(seedVecs), "cluster")
-      .withColumn("__c1", round(expr(s"graft_cosine($vecCol, __v1)"), 9))
-      .withColumn("__c2", round(expr(s"graft_cosine($vecCol, __v2)"), 9))
+      .withColumn("__c1", roundedCosine(col(vecCol), col("__v1")))
+      .withColumn("__c2", roundedCosine(col(vecCol), col("__v2")))
       .withColumn("sub", when(col("__c1") >= col("__c2"), 0L).otherwise(1L))
       .groupBy(col("cluster"), col("n_before"), col("sub"))
       .agg(count(lit(1)).as("n_members"))
@@ -1482,10 +1463,7 @@ object Similarity {
     * per element — 64 boxed closure calls per row on an 8-byte encode;
     * Round9bSpec pins kernel ≡ HOF-fold equality).
     */
-  def signWord(vecColName: String): Column = {
-    import org.apache.spark.sql.graft.PlanDf
-    PlanDf.column(graft.functions.SignWord64(PlanDf.expression(col(vecColName))))
-  }
+  def signWord(vecColName: String): Column = VectorExpressions.signWord(col(vecColName))
 
   /** Binary-rescoring ANN: sign-quantize corpus and queries to 64-bit
     * words, take the `kCand` Hamming-nearest candidates per query
@@ -1507,7 +1485,6 @@ object Similarity {
   def binaryHammingTopK(spark: SparkSession, corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, kCand: Int, k: Int): DataFrame = {
     require(kCand >= k, s"candidate pool $kCand must cover final k=$k")
-    VectorExpressions.register(spark)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
       .withColumn("__qw", signWord("__qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
@@ -1524,7 +1501,7 @@ object Similarity {
     cand
       .join(c.select(col("neighbor_id"), col("__cv")), "neighbor_id")
       .join(broadcast(q.select(col("query_id"), col("__qv"))), "query_id")
-      .withColumn("sim", round(expr("graft_cosine(__qv, __cv)"), 9))
+      .withColumn("sim", roundedCosine(col("__qv"), col("__cv")))
       .withColumn("rank", row_number().over(wS).cast("long"))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("hamming"), col("sim"))

@@ -2,11 +2,12 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §7.5):
   * language ID, quality scoring, token counting, document fingerprinting.
   * Scan-side and shuffle-free: built-in expressions plus the fused
-  * `graft_*` kernels of [[graft.functions.VectorExpressions]] (the
+  * typed kernel columns of [[graft.functions.VectorExpressions]] (the
   * quality and token counts are one [[graft.functions.TextStats]] pass
   * per document); the remaining higher-order filters run once per doc,
   * not per token pair.
@@ -110,10 +111,8 @@ object TextOps {
     * Spark-lowered copy: the struct of counts behind the quality and
     * token features. `stops` is the stop-word list (array<string>).
     */
-  private def textStats(df: DataFrame, textCol: String, stops: Column): Column = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
-    call_function("graft_text_stats", col(textCol), lower(col(textCol)), stops)
-  }
+  private def textStats(textCol: String, stops: Column): Column =
+    VectorExpressions.textStats(col(textCol), lower(col(textCol)), stops)
 
   /** Heuristic quality score from length / punctuation / stopword
     * ratios. Deterministic arithmetic (single divisions, fixed op
@@ -122,7 +121,7 @@ object TextOps {
     * list for the per-language one.
     */
   private def qualityFrom(df: DataFrame, textCol: String, stops: Column): DataFrame =
-    Dedup.withColumnOnce(df, "__ts", textStats(df, textCol, stops))
+    Dedup.withColumnOnce(df, "__ts", textStats(textCol, stops))
       .withColumn("n_chars_raw", col("__ts.n_chars"))
       .withColumn("n_words", col("__ts.n_words"))
       .withColumn("n_alpha", col("__ts.n_alpha"))
@@ -187,7 +186,7 @@ object TextOps {
     * the lowered text) from one [[graft.functions.TextStats]] pass.
     */
   def withTokenCounts(df: DataFrame, textCol: String): DataFrame =
-    Dedup.withColumnOnce(df, "__ts", textStats(df, textCol, array().cast("array<string>")))
+    Dedup.withColumnOnce(df, "__ts", textStats(textCol, array().cast("array<string>")))
       .withColumn("ws_tokens", col("__ts.ws_tokens"))
       .withColumn("bpe_tokens", col("__ts.bpe_tokens"))
       .drop("__ts")
@@ -196,11 +195,10 @@ object TextOps {
     * h ← (31·h + hash32(word)) mod 1e9+7, left fold from 0.
     */
   def withFingerprint(df: DataFrame, textCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     df.withColumn("__w", words(col(textCol)))
       .withColumn("fingerprint",
-        expr("""aggregate(transform(__w, w -> graft_hash32(w)),
-                 0L, (acc, h) -> (acc * 31 + h) % 1000000007L)"""))
+        aggregate(transform(col("__w"), w => VectorExpressions.md5Hash32(w)),
+          lit(0L), (acc, h) => (acc * 31 + h) % 1000000007L))
       .drop("__w")
   }
 
@@ -377,13 +375,12 @@ object TextOps {
     // after calib normalization — smaller than the prefix-filter win
     // because the tf/df aggregates already shrank the frame before
     // the strings' heaviest consumer, the pair join)
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val shingleable = docs.withColumn("__w", words(col(textCol)))
       .filter(size(col("__w")) >= ngram)
       .localCheckpoint()
     val terms = shingleable
       .select(col(idCol),
-        explode(expr(s"graft_shingle_hashes32(__w, $ngram)")).as("term"))
+        explode(VectorExpressions.shingleHashes32(col("__w"), ngram)).as("term"))
     val tf = terms.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df_docs"))
     // n_docs counts the docs that actually enter the shingle space
@@ -791,11 +788,10 @@ object TextOps {
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
       targetFlag: Column, buckets: Int = 1024): DataFrame = {
     require(buckets >= 2)
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val terms = df
       .select(col(idCol), targetFlag.as("__t"),
         explode(words(col(textCol))).as("__term"))
-      .withColumn("__b", expr(s"graft_hash32(__term) % $buckets"))
+      .withColumn("__b", VectorExpressions.md5Hash32(col("__term")) % buckets)
     val counts = terms.groupBy(col("__b")).agg(
       count(lit(1)).as("__cr"),
       sum(when(col("__t"), 1L).otherwise(0L)).as("__ct"))
@@ -841,9 +837,8 @@ object TextOps {
   def repeatedSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 5): DataFrame = {
     require(n >= 2)
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val grams = Dedup.withWords(df, textCol, n)
-      .withColumn("__hs", expr(s"graft_shingle_hashes64(__words, $n)"))
+      .withColumn("__hs", VectorExpressions.shingleHashes64(col("__words"), n))
       .select(col(idCol), posexplode(col("__hs")))
     val rep = grams.groupBy(col("col")).agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= 2)
@@ -918,7 +913,6 @@ object TextOps {
   def spanRemoval(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8, posPack: Long = SpanPosPack): DataFrame = {
     require(n >= 2 && posPack >= 2)
-    graft.functions.VectorExpressions.register(df.sparkSession)
     // packed occurrence key; the when-guard cannot be pruned away (it
     // sits inside the aggregate/filter expressions themselves), so an
     // over-long doc fails loudly instead of colliding keys silently
@@ -935,7 +929,7 @@ object TextOps {
     val sp = base
       .filter(size(col("__w")) >= n)
       .select(col(idCol),
-        posexplode(expr(s"graft_shingle_md5_120(__w, $n)")))
+        posexplode(VectorExpressions.shingleMd5_120(col("__w"), n)))
       .select(col(idCol), col("pos").as("__pos"),
         col("col.h1").as("__h1"), col("col.h2").as("__h2"))
       .localCheckpoint()
@@ -1151,10 +1145,9 @@ object TextOps {
     * oracle checks the tokenization itself, not just its length.
     */
   def subwordTokens(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     df.select(col(idCol), words(col(textCol)).as("__w"))
       .withColumn("__toks",
-        expr("graft_subword_tokens(filter(__w, x -> x <> ''))"))
+        VectorExpressions.subwordTokens(filter(col("__w"), x => x =!= "")))
       .select(col(idCol),
         size(col("__toks")).cast("long").as("n_subwords"),
         md5(array_join(col("__toks"), "|")).as("tokens_md5"))

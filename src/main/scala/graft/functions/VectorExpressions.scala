@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.PlanDf
 import org.apache.spark.sql.types._
 
 /** Fused cosine similarity over two numeric array columns.
@@ -1191,10 +1192,43 @@ object TextStats {
 }
 
 object VectorExpressions {
-  /** The graft_* expression family by SQL name: builders over the
-    * call's argument expressions.
+  /* Typed kernel columns: each builds the same case class its
+   * `graft_*` name below resolves to, so an operator calls a kernel
+   * without touching the session's function registry. */
+  private def kernel(e: Expression): Column = PlanDf.column(e)
+  private def ex(c: Column): Expression = PlanDf.expression(c)
+
+  def cosine(a: Column, b: Column): Column = kernel(CosineSimilarity(ex(a), ex(b)))
+
+  /** The cross-engine similarity score: cosine rounded to 9 dp. */
+  def roundedCosine(a: Column, b: Column): Column =
+    org.apache.spark.sql.functions.round(cosine(a, b), 9)
+
+  def md5Hash32(s: Column): Column = kernel(Md5Hash32(ex(s)))
+  def shingleHashes32(words: Column, k: Int): Column =
+    kernel(ShingleHashes(ex(words), k, ShingleHashes.ModeMd5_32))
+  def shingleHashes64(words: Column, k: Int): Column =
+    kernel(ShingleHashes(ex(words), k, ShingleHashes.ModeXx64))
+  def shingleMd5_60(words: Column, k: Int): Column =
+    kernel(ShingleHashes(ex(words), k, ShingleHashes.ModeMd5_60))
+  def shingleMd5_120(words: Column, k: Int): Column = kernel(ShingleHashPairs(ex(words), k))
+  def minhashSig(hashes: Column): Column = kernel(MinHashSig(ex(hashes)))
+  def simhash32(hashes: Column): Column = kernel(SimHash32(ex(hashes)))
+  def subwordTokens(words: Column): Column = kernel(SubwordTokens(ex(words)))
+  /** Reads `legacySizeOfNull` from the active session's conf when the
+    * column is built (the SQL name reads it when it is resolved).
     */
-  private val Builders: Seq[(String, Seq[Expression] => Expression)] = {
+  def textStats(text: Column, lowered: Column, stops: Column): Column =
+    kernel(new TextStats(ex(text), ex(lowered), ex(stops)))
+  def bytePHash(s: Column): Column = kernel(BytePHash64(ex(s)))
+  def signWord(vec: Column): Column = kernel(SignWord64(ex(vec)))
+  def frameEnergies(s: Column, frame: Int): Column = kernel(FrameEnergies(ex(s), frame))
+
+  /** The graft_* expression family by SQL name: builders over the
+    * call's argument expressions. [[register]] and
+    * [[graft.GraftExtensions]] both install this one table.
+    */
+  private[graft] val Builders: Seq[(String, Seq[Expression] => Expression)] = {
     def intArg(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
     Seq(
       "graft_cosine" -> (exprs => CosineSimilarity(exprs(0), exprs(1))),
@@ -1219,6 +1253,7 @@ object VectorExpressions {
       // (j14_bloom_semi) uses the same battle-tested kernels explicitly.
       // Signatures: graft_bloom_agg(xxhash64-key, estimatedItems, numBits)
       // -> binary; graft_might_contain(bloom, xxhash64-key) -> boolean.
+      // SQL-only: might_contain takes its bloom from a scalar subquery.
       "graft_bloom_agg" -> (exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
         .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
         .toAggregateExpression()),
@@ -1226,11 +1261,11 @@ object VectorExpressions {
         .BloomFilterMightContain(exprs(0), exprs(1))))
   }
 
-  /** Registers the graft_* expression family for SQL/expr use in this
-    * session. Operators call it for every DataFrame they build, so a
-    * name this session's registry already holds is left as it is: no
-    * registry rewrite (and no "replaced a previously registered
-    * function" warning) per call.
+  /** Registers the graft_* expression family in this session, for SQL
+    * text that names a kernel (specs, `j14_bloom_semi`'s scalar
+    * subquery). Operators build kernels through the typed columns above
+    * and never call it. A name this session's registry already holds
+    * is left as it is: a second call rewrites nothing.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry

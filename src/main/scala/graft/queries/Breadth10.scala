@@ -3,6 +3,7 @@ package graft.queries
 import graft.etl.{LayoutOps, Tables}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.roundedCosine
 
 /** Round-10 wave: storage-maintenance operators for the versioned
   * parquet sinks (vacuum/retention — the compact-and-expire op a
@@ -640,7 +641,6 @@ object Breadth10 {
   val pipelineContrastivePairs = Q(
     "pipeline_contrastive_pairs",
     (s, dir) => {
-      graft.functions.VectorExpressions.register(s)
       val emb = Tables(s, dir, "embeddings")
       val a = emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < 4000)
         .select(col("vec_id").as("anchor_id"), col("embedding").as("__qv"),
@@ -652,7 +652,7 @@ object Breadth10 {
       // evaluating it twice for separate pos/neg branches) would write
       // |anchors|× the corpus at 100 TB
       val scored = c.join(broadcast(a), col("anchor_id") =!= col("pair_id"))
-        .withColumn("sim", round(expr("graft_cosine(__qv, __cv)"), 9))
+        .withColumn("sim", roundedCosine(col("__qv"), col("__cv")))
         .withColumn("__same", (col("__ql") === col("__cl")).cast("int"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("anchor_id"), col("__same"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.etl.Tables
+import graft.functions.VectorExpressions
 import org.apache.spark.sql.functions._
 
 /** Round-13 wave: the ER agreement (precision) tier and its
@@ -422,7 +423,6 @@ object Breadth21 {
     "eval_lsh_curve",
     (s, dir) => {
       import graft.ext.Dedup
-      graft.functions.VectorExpressions.register(s)
       val docs = Fragments.augmentedDocs(s, dir, perturb = true)
         // base id < 1000 bounds the budget within one id epoch; the
         // absolute doc_id < 200000 bound keeps it fixed even when a
@@ -439,7 +439,7 @@ object Breadth21 {
         .localCheckpoint()
       val tTot = truth.agg(count(lit(1)).as("n_truth"))
       val sig = hashed
-        .withColumn("__sig", expr("graft_minhash_sig(__hashes)"))
+        .withColumn("__sig", VectorExpressions.minhashSig(col("__hashes")))
         .select(col("doc_id"), col("__sig"))
         .localCheckpoint()
       // ONE tier-tagged band self-join for all four tiers (r16): the

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.etl.Tables
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.roundedCosine
 
 /** Round-8 breadth: row-level sessionization (the batch side of the
   * `session_window` streaming twin), BM25 ranked retrieval over an
@@ -275,7 +276,6 @@ object Breadth7 {
     "graph_label_prop",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.VectorExpressions.register(s)
       val emb = Tables(s, dir, "embeddings")
       // CORPUS-PROPORTIONAL centroid sample (one per 37 vectors, no
       // fixed cap — the dedup propose discipline): list sizes stay
@@ -296,7 +296,7 @@ object Breadth7 {
       val w = Window.partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
       val pairs = a.hint("shuffle_hash").join(b, "cluster")
         .filter(col("src") =!= col("dst"))
-        .withColumn("sim", round(expr("graft_cosine(__sv, __dv)"), 9))
+        .withColumn("sim", roundedCosine(col("__sv"), col("__dv")))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("src"), col("dst"))

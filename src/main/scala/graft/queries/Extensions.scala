@@ -4,6 +4,7 @@ import graft.etl.Tables
 import graft.ext.{Dedup, Similarity, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.VectorExpressions.roundedCosine
 
 /** North-star extension surface (SURVEY.md §7.5): dedup, similarity
   * search, text analysis, multimodal plumbing — on the `documents` /
@@ -902,7 +903,6 @@ object Extensions {
     */
   private def embeddingPairs(s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.functions.VectorExpressions.register(s)
     val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val aug = emb.unionByName(emb.select(
       (col("vec_id") + 100000L).as("vec_id"),
@@ -915,7 +915,7 @@ object Extensions {
     val b = asg.select(col("vec_id").as("doc_b"), col("embedding").as("__eb"),
       col("cluster").as("__cb"))
     val pairs = a.join(b, col("__ca") === col("__cb") && col("doc_a") < col("doc_b"))
-      .withColumn("sim", round(expr("graft_cosine(__ea, __eb)"), 9))
+      .withColumn("sim", roundedCosine(col("__ea"), col("__eb")))
       .filter(col("sim") >= 0.999)
     (aug, pairs)
   }

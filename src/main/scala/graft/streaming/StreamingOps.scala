@@ -413,7 +413,6 @@ object StreamingOps {
       : org.apache.spark.sql.Dataset[DupPair] = {
     val spark = stream.sparkSession
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     graft.ext.Dedup.minhashBands(stream, idCol, textCol)
       .select(col("band"), col(idCol).as("doc_id")).as[BandIn]
       .groupByKey(_.band)

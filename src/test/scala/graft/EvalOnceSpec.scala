@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 /** Once-per-document pins for the curation operators: a per-row kernel
   * appears once per distinct call in the optimized plan (not copied
   * into pushed-down filters), exact dedup's aggregate runs once however
-  * often its result is read, and the graft_* functions are registered
-  * once per session.
+  * often its result is read, the graft_* functions are registered
+  * once per session, and operators register none of them.
   */
 class EvalOnceSpec extends SparkSpec {
   import spark.implicits._
@@ -82,5 +82,39 @@ class EvalOnceSpec extends SparkSpec {
       .as[(Long, Double)].head()
     val ref = Seq("abc").toDF("s").select(Dedup.hash32(col("s"))).as[Long].head()
     assert(got === ((ref, 1.0)))
+  }
+
+  test("operators build kernels as typed columns: the caller's function registry is left alone") {
+    import graft.ext.{Multimodal, Similarity}
+    import org.apache.spark.sql.{Row, SparkSession}
+    val texts = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog and runs to the river"),
+      (2L, "the quick brown fox jumps over the lazy dog and runs to the lake"),
+      (3L, "completely different words appear in this sentence here, plainly!"))
+    val vecs = Seq(
+      (1L, Array(1.0f, 0.1f, 0.0f)), (2L, Array(0.95f, 0.05f, 0.0f)),
+      (3L, Array(0.0f, 0.1f, 1.0f)), (4L, Array(0.05f, 0.0f, 0.9f)))
+    val cents = Seq((10L, Array(1.0f, 0.0f, 0.0f)), (20L, Array(0.0f, 0.0f, 1.0f)))
+    def results(s: SparkSession): Seq[Set[Row]] = {
+      val docs = s.createDataFrame(texts).toDF("doc_id", "text")
+      val vs = s.createDataFrame(vecs).toDF("vec_id", "embedding")
+      val cs = s.createDataFrame(cents).toDF("cid", "cv")
+      Seq(
+        Dedup.minhashCandidatePairs(docs, "doc_id", "text"),
+        TextOps.withQuality(docs, "text"),
+        TextOps.withTokenCounts(docs, "text"),
+        TextOps.withFingerprint(docs, "text"),
+        Similarity.ivfTopK(s, vs, vs.filter(col("vec_id") === 1L), cs,
+          "vec_id", "embedding", "cid", "cv", k = 3),
+        Multimodal.bytePHash(docs, "doc_id", "text"))
+        .map(_.collect().toSet)
+    }
+    val fresh = spark.newSession()
+    val got = results(fresh)
+    val reg = fresh.sessionState.functionRegistry
+    val left = VectorExpressions.Builders.map(_._1)
+      .filter(n => reg.functionExists(FunctionIdentifier(n)))
+    assert(left.isEmpty, s"operators registered $left")
+    assert(got === results(spark))
   }
 }

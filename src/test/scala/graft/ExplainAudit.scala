@@ -1,10 +1,13 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 /** Plan audit: prints formatted physical plans for representative queries
   * so scan pruning / pushdown / broadcast / codegen can be inspected.
+  * Each query's own QueryExecution runs once first, so the dump is the
+  * executed plan (`isFinalPlan=true`) with AQE's run-time decisions in
+  * it: reused shuffles, broadcast switches, coalesced reads.
   * Run: SPARK_GRAFT_SF_DIR=<scale-factor dir> sbt "Test/runMain graft.ExplainAudit [queryName ...]"
   *
   * The printed plans carry no run-specific ids (expression ids `#123`,
@@ -45,6 +48,7 @@ object ExplainAudit {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       val qe = SparkEntry.queries(n)(spark, dir).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some("ExplainAudit"))(qe.toRdd.foreach(_ => ()))
       println(stable(qe.explainString(FormattedMode)))
     }
     spark.stop()

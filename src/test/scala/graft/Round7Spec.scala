@@ -197,14 +197,25 @@ class Round7Spec extends SparkSpec {
   }
 
   test("dedup_index_probe plan shingles only the shard; index side reads parquet") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     graft.queries.Registry.queries("dedup_index_probe")(spark, sf).count()
-    val plan = graft.queries.Registry.queries("dedup_index_probe")(spark, sf)
-      .queryExecution.executedPlan.toString
+    val executed = graft.queries.Registry.queries("dedup_index_probe")(spark, sf)
+      .queryExecution.executedPlan
+    val plan = executed.toString
+    // walked as a tree: kernels print under their class name, and a
+    // scan's Location text is cut at 100 characters
+    val walk = new AdaptiveSparkPlanHelper {}
     // exactly one fingerprint pipeline (the shard); the historical side
     // must contribute bands/hsets from the stored artifact, not re-shingle
-    val nSig = "graft_minhash_sig".r.findAllIn(plan).length
+    val nSig = walk.collectWithSubqueries(executed) { case p => p }
+      .flatMap(_.expressions.flatMap(_.collect { case m: graft.functions.MinHashSig => m }))
+      .length
     assert(nSig <= 1, s"$nSig minhash pipelines in probe plan:\n${plan.take(1500)}")
-    assert(plan.contains("dedup_band_index"), plan.take(1500))
+    val roots = walk.collectWithSubqueries(executed) {
+      case scan: FileSourceScanExec => scan.relation.location.rootPaths.map(_.toString)
+    }.flatten
+    assert(roots.exists(_.contains("dedup_band_index")), roots.mkString("\n"))
     assert(!plan.contains("CartesianProduct"), plan.take(1500))
   }
 

@@ -84,4 +84,15 @@ class ShapeSinksSpec extends SparkSpec {
     val bad = graft.functions.CosineSimilarity(Literal(1), arr)
     assert(!bad.checkInputDataTypes().isSuccess)
   }
+
+  test("GraftExtensions injects every kernel name that register installs") {
+    val fresh = spark.newSession()
+    val reg = fresh.sessionState.functionRegistry
+    val before = reg.listFunction().toSet
+    graft.functions.VectorExpressions.register(fresh)
+    val registered = (reg.listFunction().toSet -- before).map(_.funcName)
+    assert(registered.nonEmpty)
+    val injected = org.apache.spark.sql.graft.InjectedFunctions.names(new graft.GraftExtensions)
+    assert(injected === registered)
+  }
 }
